@@ -1,22 +1,31 @@
-"""Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark sweep — min-of-N timings of the HEADLINE queries at
+$SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Prints ONE compact JSON line (guaranteed < 2000 chars so the driver's
 tail capture always parses it):
     {"metric": "...", "value": N, "unit": "sec", "sf": ...,
-     "n_queries": ..., "queries": {<5 slowest>}, "vs_prev_geomean": ...,
-     "vs_prev_worst5": {...}, "detail": "BENCH_DETAIL_rNN.json"}
-and writes the FULL per-query payload (all timings + vs_prev + errors) to
-the committed BENCH_DETAIL_r{N}.json named in "detail".
+     "n_queries": ..., "n_errors": ..., "queries": {<5 slowest>},
+     "vs_prev_geomean": ..., "vs_prev_worst5": {...},
+     "errors": {<first 3, if any>}, "detail": "BENCH_DETAIL_rNN.json"}
+and writes the FULL per-query payload (min-of-N and cold sample-1
+timings, vs_prev, errors) to the committed BENCH_DETAIL_r{N}.json named
+in "detail".
 
 Each query is forced end-to-end with a noop sink (full computation, no
 driver materialization) so timings measure the distributed plan, not
-collect serialization.
+collect serialization. vs_prev is the raw per-query ratio against the
+latest prior round's detail at the same sf; it reports, it does not
+judge. The paired regression gate is wodbench/run.py.
 """
 
 from __future__ import annotations
 
+import glob
+import importlib
 import json
+import math
 import os
+import re
 import sys
 import time
 
@@ -56,10 +65,8 @@ HEADLINE = [
     "q_rolling_hash",
     "q_percentile",
     "q_semi_join",
-    # q_outer_join_dist retired r12 (folded into q_tpch_q13)
     "q_count_distinct",
     "q_window_frames",
-    # round-4 additions — regression-tracked from birth (VERDICT r4 §next.4)
     "q_tpch_q7",
     "q_tpch_q10",
     "q_tpch_q14",
@@ -67,7 +74,6 @@ HEADLINE = [
     "q_pii_redact",
     "q_decontaminate",
     "q_curation_pipeline",
-    # round-5 additions
     "q_tpch_q4",
     "q_min_cost_supplier",
     "q_funnel_conversion",
@@ -81,12 +87,10 @@ HEADLINE = [
     "q_resample_ffill",
     "q_rolling_range",
     "q_session_concurrency",
-    # round-5 late additions, benched from round 6 (VERDICT r5 §next.3)
     "q_weighted_sample",
     "q_zscore_normalize",
     "q_event_transitions",
     "q_snapshot_diff",
-    # round-6 additions — regression-tracked from birth
     "q_tpch_q8",
     "q_tpch_q12",
     "q_tpch_q13",
@@ -112,17 +116,12 @@ HEADLINE = [
     "q_pagerank",
     "q_global_topn",
     "q_data_quality",
-    # round-7 additions — previously-unbenched families with real plans
-    # (VERDICT r6 §next.3): iterative graph, salted skew join, the
-    # reference's text sessionizer, shingle-join dedup, LWW upsert dedup,
-    # and correlated scalar subquery. Regression-tracked from birth.
     "q_dup_clusters",
     "q_skew_join",
     "q_sessionize_text",
     "q_ngram_jaccard",
     "q_kv_upsert_dedup",
     "q_scalar_subquery",
-    # round-7 new queries — regression-tracked from birth
     "q_pruned_scan",
     "q_bloom_semi_join",
     "q_chi_square",
@@ -137,8 +136,6 @@ HEADLINE = [
     "q_skyline",
     "q_nullsafe_join",
     "q_collation_group",
-    # round-10 additions — shuffle-bearing plans that predated the
-    # membership policy and had silently never been benched
     "q_cube",
     "q_grouping_sets",
     "q_rollup",
@@ -149,11 +146,6 @@ HEADLINE = [
     "q_corr_stats",
     "q_weighted_median",
     "q_gini",
-    # round-9 additions — the 8 remaining real-plan queries that had no
-    # bench coverage (VERDICT r7 #2 / r8 #5): LSH-bucketed + brute-force
-    # ANN, rolling-hash fingerprinting, the multimodal mapInPandas
-    # plumbing, the curation domain-cap/mixture samplers, and the two
-    # streaming-window batch shapes. Regression-tracked from birth.
     "q_ann_lsh_bucket",
     "q_cosine_topk",
     "q_doc_fingerprint",
@@ -162,11 +154,6 @@ HEADLINE = [
     "q_corpus_mixture",
     "q_tumbling_window",
     "q_sliding_window",
-    # round-10 policy audit — twelve registered queries whose own
-    # docstrings name a shuffle (set ops, bounded-key token/bin
-    # aggregates, per-user Exchange, rank sort, fingerprint window,
-    # global HLL agg, anti-join) were still unbenched, violating the
-    # membership rule above. Benched from here on.
     "q_set_ops",
     "q_set_ops_all",
     "q_token_topk",
@@ -179,79 +166,8 @@ HEADLINE = [
     "q_approx_distinct",
     "q_anti_scalar_sub",
     "q_canonical_rep",
-    # r11: streaming-contract queries, benched from birth (both
-    # shuffle-bearing: CDC merge pipeline / interval equi-join + band)
     "q_cdc_apply",
     "q_interval_join",
-]
-
-# Box-drift sentinels (VERDICT r12 #2): stable, plan-untouched-since-
-# early-rounds queries whose summed wall time acts as a per-run measure
-# of the box itself (JIT state, contention, thermal). Official bench
-# totals drifted 37.2 -> 50.4 s across r11-r12 while same-code spreads
-# spanned +/-30%; dividing each query's seconds by the sentinel sum
-# cancels the uniform component, so `normalized` moves only when a
-# query's cost changes RELATIVE to the box. The adjudication rule
-# (SCALE.md): a regression claim requires the normalized ratio to move,
-# not the raw seconds. Never add a query here whose plan is still
-# evolving.
-#
-# WIDENED r16 (VERDICT r15 #5): the original five summed only ~1.3-2.1 s
-# — a small, high-variance denominator that was itself compromised two
-# rounds running (r14 sentinels ran 1.6x slow; r15 heterogeneous
-# contention). The four additions are the lowest-normalized-CV queries
-# across the r11-r15 committed details (cv 0.050-0.088, measured against
-# the old sentinel sums) with plans untouched since their early-round
-# commits, roughly doubling the denominator (~3.2 s at sf0.1).
-# Cross-round comparability is preserved mechanically: vs_prev
-# normalizes BOTH runs by the intersection of sentinels present in both
-# timing sets, so ratios against pre-r16 details keep using a common
-# subset.
-# REBUILT r17 (VERDICT r16 #6): with two more uncontended calibration
-# runs on record, every r16 member's vs-body share-CV measured 0.128 to
-# 0.281 over the seven committed r15–r17 runs — far above the 0.05–0.09
-# selection band — and the set swung as a CORRELATED block (sum 3.06 to
-# 4.55 s on identical code), inflating cross-round normalized geomeans
-# ~1.3x while raw totals sat flat. The nine below are the lowest
-# vs-body-CV HEADLINE queries over those same seven runs (0.064–0.098
-# each, COLD_ADJUDICATED members excluded — their min-of-N semantics
-# differ), summing 6.4–8.0 s (~12.6% of total, CV 0.062 vs the old
-# set's 0.158; tools/sentinel_cv.py reproduces the table). Cross-round
-# comparability is unaffected mechanically: prior detail files carry
-# ALL queries' timings, and the vs_prev channel normalizes both sides
-# by the intersection present in both runs. Old set for the record:
-# q_tpch_q6, q_tpch_q1, q_dedup_exact, q_semi_join, q_weekly_rollup,
-# q_event_gap_stats, q_scalar_subquery, q_tpch_q3, q_tpch_q5.
-# REPAIRED r18 (optimization round): three r17 members' PLANS CHANGED
-# this round — q_trigram_entropy and q_pii_redact gained the targeted
-# scan fan-out (2.9 -> 0.29 s and 0.33 -> 0.11 s at sf0.1) and
-# q_percentile moved to the bucketed distributed prefix sum — which
-# violates the set's one invariant ("never a query whose plan is still
-# evolving") and broke both derived channels at once: the sentinel sum
-# fell from ~7.1 to ~4.5 s on a healthy box, so vs_prev_normalized read
-# a phantom uniform 1.7x regression against r17, and the pre-flight
-# box gate compared a post-optimization sum against pre-optimization
-# calibration references (permanently "ok", even on a degraded box).
-# Replacements are the three lowest share-of-total-CV HEADLINE queries
-# over the eleven committed r15-r18 payloads whose plans this round did
-# NOT touch (q_tpch_q4 0.091, q_rolling_hash 0.089, q_tpch_q18 0.105;
-# the analysis script and full table are in OPTIMIZATION_r18.md).
-# Cross-round comparability is unaffected mechanically: prior detail
-# files carry ALL queries' timings and vs_prev normalizes both sides by
-# the intersection — but pre-flight sums recorded under a DIFFERENT
-# list are no longer like-for-like, so _calibration_reference now
-# requires an artifact's recorded sentinel list to match (else falls
-# back to recomputing the in-run sum over the current list).
-SENTINELS = [
-    "q_tpch_q7",
-    "q_tpch_q4",
-    "q_tpch_q10",
-    "q_sessionize_text",
-    "q_rolling_hash",
-    "q_grouping_sets",
-    "q_tdigest_quantile",
-    "q_tpch_q18",
-    "q_count_distinct",
 ]
 
 # Queries whose WORK happens eagerly during frame build (table writes /
@@ -261,17 +177,11 @@ SENTINELS = [
 # sample, so cold/min both cover the full pipeline (build + action).
 EAGER = {"q_cdc_apply"}
 
-# EAGER queries with a setup/pipeline split (VERDICT r16 #3): the value
-# is a (prepare, timed) import path pair — prepare runs OUTSIDE the
-# timed region each sample (scratch-table rebuild: parquet-write setup,
-# not the pipeline the HEADLINE entry measures), then the timed callable
-# gets prepare's return value. q_cdc_apply's rebuild-inside-the-timer
-# made it the bench's noisiest line two rounds running (2.8 -> 4.0 s raw
-# while MERGE_SCALE showed flat 1.24 growth at 30x data); what the entry
-# now times is the MERGE pipeline itself — batch synthesis, last-by-seq
-# collapse, two atomic merge commits, result read. vs_prev for the split
-# round is documented in SCALE.md (the drop is methodology, not a plan
-# change).
+# EAGER queries with a setup/pipeline split: a (prepare, timed) import
+# path pair. prepare (the scratch-table rebuild) runs OUTSIDE the timer
+# each sample and the timed callable gets its return value, so
+# q_cdc_apply times the MERGE pipeline itself. Details recorded before
+# r17 timed the rebuild too.
 EAGER_SPLIT = {
     "q_cdc_apply": (
         "weightlifting_wod_etl_spark.queries.cdc_interval:cdc_prepare_base",
@@ -281,51 +191,14 @@ EAGER_SPLIT = {
 
 
 def _load_split(spec: str):
-    import importlib
-
     mod, fn = spec.split(":")
     return getattr(importlib.import_module(mod), fn)
-
-# Queries whose min-of-N timing understates real cost: their plans carry
-# a lazy localCheckpoint, so samples 2+ re-read cached checkpoint blocks
-# instead of re-executing the upstream lineage (plus the EAGER set,
-# whose per-sample rebuild makes min-of-N noisy for a different reason).
-# vs_prev FOR THESE QUERIES IS ADJUDICATED ON vs_prev_cold — this
-# round's cold sample-1 against the prior round's cold sample-1 — never
-# on the min-of-N ratio, which mixes checkpoint-cache behavior into what
-# reads like a plan change (VERDICT r11 #4). Keep in sync with the
-# localCheckpoint sites under queries/.
-COLD_ADJUDICATED = {
-    "q_tpch_q15",
-    "q_tpch_q17",
-    "q_tpch_q21",
-    "q_chi_square",
-    "q_mad_anomaly",
-    "q_cumulative_distinct",
-    "q_recursive_reachability",
-    "q_resample_ffill",
-    "q_data_quality",
-    # r13: wod_pipeline checkpoints the deduped posts frame
-    "q_wod_pipeline",
-} | EAGER
-
-# The pre-flight warms every sentinel before the sweep, so a sentinel's
-# recorded `cold` is NOT a true sample-1 (VERDICT r18 #7). Cold-vs-cold
-# adjudication stays honest only while no sentinel is cold-adjudicated:
-assert not set(SENTINELS) & COLD_ADJUDICATED, (
-    "a sentinel is in COLD_ADJUDICATED — its cold channel is pre-warmed "
-    "by the pre-flight; move the query out of one of the two sets or "
-    "run the pre-flight after recording its sample-1"
-)
 
 
 def _current_round() -> int:
     """Round number = 1 + latest driver bench artifact. The driver writes
     BENCH_r{N}.json AFTER round N, so while round N runs the max on disk
     is N-1."""
-    import glob
-    import re
-
     rounds = [
         int(m.group(1))
         for p in glob.glob(os.path.join(REPO_DIR, "BENCH_r*.json"))
@@ -334,86 +207,11 @@ def _current_round() -> int:
     return max(rounds, default=0) + 1
 
 
-def _best_prior_timings(sf_val: float | str) -> dict[str, float]:
-    """Per-query best timings across prior rounds, restricted to artifacts
-    recorded at the SAME scale factor — a ratio across different sf values
-    is meaningless and would fire (or mask) the regression alarm spuriously.
-
-    Two sources, merged by min (VERDICT r6 §next.1):
-      * BENCH_DETAIL_r*.json — the full per-query payload this script
-        commits every run (rounds strictly before the current one, so a
-        fast sample earlier in the SAME round can't mask a regression vs
-        the last finished round);
-      * BENCH_r*.json — the driver wrapper ({"parsed": {...}}), whose
-        "parsed" went null in r6 when the one-line stdout outgrew the
-        2000-char tail capture — kept as a fallback for rounds 1-5.
-    Silently empty when no prior artifact parses."""
-    import glob
-    import re
-
-    current = _current_round()
-    best: dict[str, float] = {}
-
-    def fold(payload: dict) -> None:
-        if payload.get("sf") != sf_val:
-            return
-        for name, sec in (payload.get("queries") or {}).items():
-            if isinstance(sec, (int, float)) and sec > 0:
-                best[name] = min(best.get(name, float("inf")), float(sec))
-
-    for path in sorted(glob.glob(os.path.join(REPO_DIR, "BENCH_DETAIL_r*.json"))):
-        m = re.search(r"BENCH_DETAIL_r(\d+)\.json$", path)
-        if not m or int(m.group(1)) >= current:
-            continue
-        try:
-            with open(path) as f:
-                fold(json.load(f))
-        except (OSError, json.JSONDecodeError):
-            continue
-    for path in sorted(glob.glob(os.path.join(REPO_DIR, "BENCH_r*.json"))):
-        # same guards as the detail loop: non-canonical names (e.g. a
-        # stray *_bak copy) and same-round artifacts must not fold in —
-        # a fast contended sample saved earlier in THIS round would
-        # otherwise suppress the round-closing REGRESSION warning.
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m or int(m.group(1)) >= current:
-            continue
-        try:
-            with open(path) as f:
-                fold(json.load(f).get("parsed") or {})
-        except (OSError, json.JSONDecodeError):
-            continue
-    return best
-
-
-def _sentinel_normalize(
-    timings: dict[str, float], sentinels: list[str] | None = None
-) -> tuple[float, dict[str, float]]:
-    """(sentinel_sum, per-query seconds / sentinel_sum).
-
-    ``sentinels`` defaults to the full SENTINELS set; the vs_prev channel
-    passes the INTERSECTION of sentinels present in BOTH runs (round-diff
-    review r13): normalizing each side by whatever subset it happened to
-    have would inflate every ratio by a missing sentinel's share — a
-    uniform phantom regression, the exact misclassification this channel
-    exists to prevent."""
-    sset = SENTINELS if sentinels is None else sentinels
-    ssum = sum(timings[s] for s in sset if timings.get(s, 0) > 0)
-    if ssum <= 0:
-        return 0.0, {}
-    return ssum, {
-        name: round(sec / ssum, 4) for name, sec in timings.items() if sec > 0
-    }
-
-
-def _latest_prior_detail(sf_val: float | str) -> dict:
-    """The LATEST prior round's full detail payload at this sf (empty dict
-    if none). Latest — not best-of — because normalized drift adjudication
-    compares consecutive official runs (the box-drift question is 'did
-    this round's run move relative to last round's run')."""
-    import glob
-    import re
-
+def _latest_prior_timings(sf_val: float | str) -> dict[str, float]:
+    """Per-query timings of the LATEST prior round's BENCH_DETAIL at this
+    sf (empty if none). Only rounds before the current one count, so a
+    run earlier in the same round is never its own baseline; a ratio
+    across scale factors would be meaningless."""
     current = _current_round()
     candidates = []
     for path in glob.glob(os.path.join(REPO_DIR, "BENCH_DETAIL_r*.json")):
@@ -426,185 +224,13 @@ def _latest_prior_detail(sf_val: float | str) -> dict:
                 payload = json.load(f)
         except (OSError, json.JSONDecodeError):
             continue
-        if payload.get("sf") != sf_val or not payload.get("queries"):
-            continue
-        return payload
+        if payload.get("sf") == sf_val and payload.get("queries"):
+            return {
+                k: float(v)
+                for k, v in payload["queries"].items()
+                if isinstance(v, (int, float)) and v > 0
+            }
     return {}
-
-
-def _latest_prior_cold(sf_val: float | str) -> dict[str, float]:
-    """Per-query `cold` timings from the LATEST prior round's detail file
-    recording them at this sf (cold exists from r11 on). Latest — not
-    best-of — because cold-vs-cold adjudication compares consecutive
-    rounds' sample-1 runs; a min over history would reintroduce exactly
-    the warm-cache ratchet the cold channel exists to avoid."""
-    import glob
-    import re
-
-    current = _current_round()
-    candidates = []
-    for path in glob.glob(os.path.join(REPO_DIR, "BENCH_DETAIL_r*.json")):
-        m = re.search(r"BENCH_DETAIL_r(\d+)\.json$", path)
-        if m and int(m.group(1)) < current:
-            candidates.append((int(m.group(1)), path))
-    for _, path in sorted(candidates, reverse=True):
-        try:
-            with open(path) as f:
-                payload = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if payload.get("sf") != sf_val or not payload.get("cold"):
-            continue
-        return {
-            k: float(v)
-            for k, v in payload["cold"].items()
-            if isinstance(v, (int, float)) and v > 0
-        }
-    return {}
-
-
-# Pre-flight sentinel runs execute right after JVM warmup, before the
-# full sweep's thousands of stages have warmed C2/codegen — measured
-# r18: an uncontended pre-flight min-of-2 sum reads 1.14x the SAME
-# run's in-run sentinel sum. When no prior pre-flight record exists to
-# compare like-for-like, the in-run fallback reference gets this slack
-# so the gate doesn't cry wolf on a fine box.
-PREFLIGHT_JIT_SLACK = 1.15
-
-
-def _calibration_reference(sf_val: float | str) -> tuple[float, str]:
-    """Smallest committed pre-flight-comparable sentinel sum at this sf
-    → (seconds, source).
-
-    Sources: BENCH_CAL_r*.json (uncontended calibration runs,
-    preferred by construction) plus BENCH_DETAIL_r*.json — RESTRICTED to
-    the last two rounds plus the current one. Older artifacts reflect the
-    box and plan state of their era (r11's sentinel sum is 5.34 s vs the
-    r17 calibration's 6.60 s on the same code class); a global min would
-    set a band every honest current-era run fails.
-
-    Like-for-like first: artifacts from r18 on record their own
-    pre-flight measurement (box_state.attempts), and a prior OK
-    pre-flight sum is the exact same cold-JIT methodology as the one
-    being gated. In-run sentinel sums (queries map, all sentinels
-    required — a partial subset would understate the sum) are the
-    fallback, scaled by PREFLIGHT_JIT_SLACK.
-    Returns (0.0, "") when nothing qualifies."""
-    import glob
-    import re
-
-    current = _current_round()
-    best_pf, src_pf = float("inf"), ""
-    best_run, src_run = float("inf"), ""
-    for path in sorted(
-        glob.glob(os.path.join(REPO_DIR, "BENCH_CAL_r*.json"))
-        + glob.glob(os.path.join(REPO_DIR, "BENCH_DETAIL_r*.json"))
-    ):
-        m = re.search(r"_r(\d+)[a-z]?\.json$", path)
-        if not m or int(m.group(1)) < current - 2:
-            continue
-        try:
-            with open(path) as f:
-                payload = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if payload.get("sf") != sf_val:
-            continue
-        bs = payload.get("box_state") or {}
-        # like-for-like only (r18 sentinel repair): a pre-flight sum is
-        # a sum OVER the artifact's sentinel list — after a set change
-        # it measures different queries, so require an exact list match;
-        # mismatched artifacts still contribute through the in-run
-        # fallback below, which recomputes over the CURRENT list from
-        # the artifact's full per-query timings.
-        if (
-            bs.get("state") == "ok"
-            and bs.get("attempts")
-            and payload.get("sentinels") == SENTINELS
-        ):
-            pf = bs["attempts"][-1].get("sum")
-            if isinstance(pf, (int, float)) and 0 < pf < best_pf:
-                best_pf, src_pf = float(pf), os.path.basename(path)
-        qs = payload.get("queries") or {}
-        if any(not isinstance(qs.get(s), (int, float)) or qs[s] <= 0
-               for s in SENTINELS):
-            continue
-        ssum = sum(float(qs[s]) for s in SENTINELS)
-        if ssum < best_run:
-            best_run, src_run = ssum, os.path.basename(path)
-    if src_pf:
-        return best_pf, f"{src_pf} (preflight)"
-    if src_run:
-        return best_run * PREFLIGHT_JIT_SLACK, f"{src_run} (in-run +slack)"
-    return 0.0, ""
-
-
-def _preflight_box_state(spark, sf_dir: str, sf_val: float | str) -> dict:
-    """Mechanical degraded-box detection (VERDICT r17 #3): run the nine
-    sentinels ALONE before the full sweep, compare their min-of-2 sum
-    against the committed calibration reference, and retry (sleep +
-    re-measure) while outside the band. The r14-r17 rounds each needed a
-    manual "recovered bench window" adjudication in SCALE.md because the
-    round-close official run landed on a contended box; this turns that
-    narrative into one recorded field.
-
-    The gate never refuses outright — the driver needs a BENCH artifact
-    every round — it retries up to SPARK_GRAFT_BOX_RETRIES times and then
-    proceeds with box_state="degraded" so the contaminated run is
-    self-describing instead of adjudicated after the fact.
-
-    Band: preflight_sum <= SPARK_GRAFT_BOX_LIMIT (default 1.3) x the
-    smallest committed sentinel sum at this sf. Calibration evidence
-    (r17): uncontended runs sum 6.60-7.05 s, the adjudicated-flat driver
-    official 8.38 s (1.27x), the two degraded-regime runs ~9 s (>1.35x)
-    — 1.3 splits noise from the documented degradation signature.
-    """
-    from weightlifting_wod_etl_spark.queries_registry import QUERIES
-
-    reference, source = _calibration_reference(sf_val)
-    state: dict = {
-        "reference_sum": round(reference, 3),
-        "reference_source": source,
-        "limit_ratio": float(os.environ.get("SPARK_GRAFT_BOX_LIMIT", "1.3")),
-        "attempts": [],
-    }
-    if not source:
-        state["state"] = "no_reference"
-        return state
-    retries = int(os.environ.get("SPARK_GRAFT_BOX_RETRIES", "2"))
-    for attempt in range(1 + retries):
-        total = 0.0
-        for name in SENTINELS:
-            df = QUERIES[name](spark, sf_dir)
-            samples = []
-            for _ in range(2):  # min-of-2: drop per-query codegen cold
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                samples.append(time.perf_counter() - t0)
-            total += min(samples)
-        ratio = total / reference
-        state["attempts"].append(
-            {"sum": round(total, 3), "ratio": round(ratio, 3)}
-        )
-        if ratio <= state["limit_ratio"]:
-            state["state"] = "ok"
-            return state
-        print(
-            f"[bench] PREFLIGHT attempt {attempt + 1}: sentinel sum "
-            f"{total:.2f}s is {ratio:.2f}x calibration {reference:.2f}s "
-            f"({source}) — box looks contended",
-            file=sys.stderr,
-        )
-        if attempt < retries:
-            time.sleep(int(os.environ.get("SPARK_GRAFT_BOX_SLEEP", "20")))
-    state["state"] = "degraded"
-    print(
-        "[bench] PREFLIGHT: proceeding on a DEGRADED box — raw seconds "
-        "in this artifact are contaminated; adjudicate on the "
-        "sentinel-normalized channel only",
-        file=sys.stderr,
-    )
-    return state
 
 
 def main() -> None:
@@ -618,16 +244,12 @@ def main() -> None:
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
-        sf_val_early: float | str = float(sf)
+        sf_val: float | str = float(sf)
     except ValueError:
-        sf_val_early = sf
-    if os.environ.get("SPARK_GRAFT_PREFLIGHT", "1") != "0":
-        box_state = _preflight_box_state(spark, sf_dir, sf_val_early)
-    else:
-        box_state = {"state": "disabled"}
+        sf_val = sf
 
     # min-of-N: first run pays codegen/footer warmup; min over the rest is
-    # the engine's steady-state throughput and is robust to box noise.
+    # the engine's steady-state throughput.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
@@ -645,20 +267,14 @@ def main() -> None:
         # One broken query must not kill the whole artifact: capture the
         # error, keep benchmarking the rest, and always emit the JSON line.
         try:
-            # The frame is built ONCE and re-executed N times — the same
-            # methodology as every prior round's artifact, so vs_prev and
-            # the baseline ratio stay comparable. (Rebuilding per sample
-            # re-pays Catalyst analysis cold each run: measured +45% on
-            # the total with identical execution work.) Iterative queries
-            # use lazy checkpoints so their round cost lands in sample 1;
-            # min-of-N then reports steady-state re-execution, consistent
-            # with every other query's plan-reuse behavior.
+            # The frame is built ONCE and re-executed N times, as in every
+            # prior round's artifact (rebuilding per sample re-pays
+            # Catalyst analysis: measured +45% on the total).
             samples = []
             if name in EAGER_SPLIT:
                 # setup/pipeline split: rebuild the scratch base per
                 # sample OUTSIDE the timer, time only the pipeline
-                prepare = _load_split(EAGER_SPLIT[name][0])
-                timed = _load_split(EAGER_SPLIT[name][1])
+                prepare, timed = map(_load_split, EAGER_SPLIT[name])
                 for _ in range(runs):
                     prepared = prepare(spark, sf_dir)
                     t0 = time.perf_counter()
@@ -680,103 +296,27 @@ def main() -> None:
                     df.write.format("noop").mode("overwrite").save()
                     samples.append(time.perf_counter() - t0)
             timings[name] = round(min(samples), 3)
-            # ADVICE r10: for lazy-localCheckpoint-bearing plans
-            # (q_tpch_q15/q17, q_mad_anomaly, q_resample_ffill,
-            # q_chi_square, ...) samples 2+ re-read cached checkpoint
-            # blocks instead of re-executing the upstream lineage, so
-            # min-of-N understates their real cold cost and would ratchet
-            # the best-prior baseline with a spurious speedup. Record the
-            # cold sample-1 for EVERY query alongside min-of-N so vs_prev
-            # drift on those queries can be adjudicated against cold-vs-
-            # cold, without changing the headline methodology or the
-            # comparability of `queries` across rounds.
+            # sample 1 pays codegen and any lazy localCheckpoint
+            # materialization, which later samples re-read from cache —
+            # the honest number for checkpoint-bearing plans
             cold[name] = round(samples[0], 3)
         except Exception as exc:  # noqa: BLE001 — harness boundary
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"[bench] {name} FAILED: {errors[name]}", file=sys.stderr)
 
-    sf_val = sf_val_early
-
-    # Regression diff vs the best prior round AT THIS sf: ratio per query,
-    # loud (but non-fatal — stderr) on >2x so a perf cliff can't ship unnoticed.
-    prior = _best_prior_timings(sf_val)
-    # sec/prior can round to 0.0 for sub-millisecond timings; a zero
-    # ratio would blow up the geomean's log below and kill main() after
-    # the detail write but before the summary line the driver parses.
+    # Raw ratio per query against the latest prior round at this sf. A
+    # sub-millisecond ratio can round to 0.0, which would kill the
+    # geomean's log after the detail write but before the summary line.
+    prior = _latest_prior_timings(sf_val)
     vs_prev = {
         name: round(sec / prior[name], 3)
         for name, sec in timings.items()
-        if name in prior and prior[name] > 0 and round(sec / prior[name], 3) > 0
+        if name in prior and round(sec / prior[name], 3) > 0
     }
-    for name, ratio in sorted(vs_prev.items(), key=lambda kv: -kv[1]):
-        if ratio > 2.0 and name not in COLD_ADJUDICATED:
-            print(
-                f"[bench] REGRESSION {name}: {timings[name]}s is "
-                f"{ratio}x best prior {prior[name]}s",
-                file=sys.stderr,
-            )
-
-    # Sentinel-normalized channel (VERDICT r12 #2): divide every query's
-    # seconds by the sentinel-set sum in the SAME run, then ratio this
-    # round's normalized value against the latest prior official run's
-    # (recomputed from its committed detail file with the same formula,
-    # so the channel is retroactively comparable to every round >= r6).
-    # This cancels uniform box drift: a real plan regression moves the
-    # normalized ratio; a slow box moves raw seconds but not this.
-    sentinel_sum, normalized = _sentinel_normalize(timings)
-    prior_detail = _latest_prior_detail(sf_val)
-    prior_timings = {
-        k: float(v)
-        for k, v in (prior_detail.get("queries") or {}).items()
-        if isinstance(v, (int, float)) and v > 0
-    }
-    # SAME sentinel subset on both sides (round-diff review r13): a
-    # sentinel erroring in one run would otherwise shift every ratio by
-    # its share of the sum
-    common = [
-        s for s in SENTINELS
-        if timings.get(s, 0) > 0 and prior_timings.get(s, 0) > 0
-    ]
-    if prior_timings and len(common) < len(SENTINELS):
-        print(
-            f"[bench] sentinel subset mismatch: normalizing both runs by "
-            f"{common} only",
-            file=sys.stderr,
-        )
-    _, cur_norm_common = _sentinel_normalize(timings, common)
-    _, prior_normalized = _sentinel_normalize(prior_timings, common)
-    vs_prev_normalized = {
-        name: round(nval / prior_normalized[name], 3)
-        for name, nval in cur_norm_common.items()
-        if prior_normalized.get(name, 0) > 0
-        and round(nval / prior_normalized[name], 3) > 0
-    }
-
-    # Cold-vs-cold channel for the checkpoint/EAGER set: this round's
-    # sample-1 against the latest prior round's sample-1. THIS ratio —
-    # not the min-of-N vs_prev — is the adjudication basis for
-    # COLD_ADJUDICATED queries (VERDICT r11 #4).
-    prior_cold = _latest_prior_cold(sf_val)
-    vs_prev_cold = {
-        name: round(cold[name] / prior_cold[name], 3)
-        for name in sorted(COLD_ADJUDICATED)
-        if name in cold
-        and prior_cold.get(name, 0) > 0
-        and round(cold[name] / prior_cold[name], 3) > 0
-    }
-    for name, ratio in sorted(vs_prev_cold.items(), key=lambda kv: -kv[1]):
-        if ratio > 2.0:
-            print(
-                f"[bench] COLD REGRESSION {name}: cold {cold[name]}s is "
-                f"{ratio}x prior cold {prior_cold[name]}s",
-                file=sys.stderr,
-            )
 
     # Full per-query payload goes to a committed repo file — the driver's
-    # stdout capture keeps only the last 2000 chars, which the one-line JSON
-    # outgrew in round 6 (parsed went null and the vs_prev chain would have
-    # silently skipped a round). The printed line is a compact summary that
-    # always fits the capture; _best_prior_timings reads the detail files.
+    # stdout capture keeps only the last 2000 chars, so the printed line
+    # is a compact summary that always fits it.
     detail = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
@@ -785,51 +325,6 @@ def main() -> None:
         "cold": cold,
         "sf": sf_val,
         "vs_prev": vs_prev,
-        "vs_prev_cold": vs_prev_cold,
-        "cold_adjudicated": sorted(COLD_ADJUDICATED),
-        # Cold-channel honesty (VERDICT r18 #7): the degraded-box
-        # pre-flight runs every sentinel twice BEFORE the sweep, so a
-        # sentinel's `cold` entry is not a true cold sample-1. Recorded
-        # here so no tooling mistakes it for one; harmless to the
-        # adjudication channel because vs_prev_cold iterates only
-        # COLD_ADJUDICATED, which is DISJOINT from the sentinel set —
-        # enforced right below so a future membership change that breaks
-        # the disjointness fails the run loudly instead of silently
-        # adjudicating a pre-warmed number.
-        "cold_prewarmed_by_preflight": sorted(set(SENTINELS) & set(cold)),
-        "sentinels": SENTINELS,
-        "sentinel_sum": round(sentinel_sum, 3),
-        "box_state": box_state,
-        # ADVICE r17 #3: per-query timing-methodology tags so future
-        # tooling can avoid folding pre-split (rebuild-inclusive) values
-        # into the same baseline as post-split (pipeline-only) ones
-        "timing_methodology": {
-            name: "eager_split_r17" for name in sorted(EAGER_SPLIT)
-        },
-        "normalized": normalized,
-        "vs_prev_normalized": vs_prev_normalized,
-        "methodology": (
-            "queries = min of N noop-sink re-executions of a frame built "
-            "once (steady state); cold = sample 1 of the same loop (pays "
-            "codegen + any lazy localCheckpoint materialization — the "
-            "honest number for checkpoint-bearing plans, whose later "
-            "samples re-read cached checkpoint blocks). RULE: for the "
-            "cold_adjudicated set, round-over-round drift is judged on "
-            "vs_prev_cold (this round's cold vs the latest prior round's "
-            "cold), never on the min-of-N vs_prev ratio. RULE (r13): "
-            "normalized = seconds / sum(sentinel seconds) in the same "
-            "run; a regression claim requires vs_prev_normalized to "
-            "move, not raw seconds — uniform box drift cancels out. "
-            "RULE (r16, VERDICT r15 #5): the driver's single official "
-            "run is ADVISORY for cross-round adjudication — contention "
-            "during the round-close pipeline compromised the official "
-            "basis in r14 (sentinels 1.6x slow) and r15 (heterogeneous "
-            "contention). The adjudication basis for round-over-round "
-            "claims is two uncontended calibration runs taken early in "
-            "the round on the prior round's HEAD and on current HEAD, "
-            "recorded in SCALE.md; the sentinel-normalized channel "
-            "arbitrates when the two disagree"
-        ),
     }
     if errors:
         detail["errors"] = errors
@@ -837,29 +332,8 @@ def main() -> None:
     with open(os.path.join(REPO_DIR, detail_name), "w") as f:
         json.dump(detail, f, indent=1)
 
-    worst5 = dict(sorted(vs_prev.items(), key=lambda kv: -kv[1])[:5])
-    norm_worst5 = dict(
-        sorted(vs_prev_normalized.items(), key=lambda kv: -kv[1])[:5]
-    )
-    norm_geomean = (
-        round(
-            __import__("math").exp(
-                sum(__import__("math").log(r) for r in vs_prev_normalized.values())
-                / len(vs_prev_normalized)
-            ),
-            3,
-        )
-        if vs_prev_normalized
-        else None
-    )
     geomean = (
-        round(
-            __import__("math").exp(
-                sum(__import__("math").log(r) for r in vs_prev.values())
-                / len(vs_prev)
-            ),
-            3,
-        )
+        round(math.exp(sum(map(math.log, vs_prev.values())) / len(vs_prev)), 3)
         if vs_prev
         else None
     )
@@ -872,17 +346,13 @@ def main() -> None:
         "n_errors": len(errors),
         "queries": dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5]),
         "vs_prev_geomean": geomean,
-        "vs_prev_worst5": worst5,
-        "vs_prev_cold": vs_prev_cold,
-        "norm_geomean": norm_geomean,
-        "norm_worst5": norm_worst5,
-        "box_state": box_state.get("state"),
+        "vs_prev_worst5": dict(
+            sorted(vs_prev.items(), key=lambda kv: -kv[1])[:5]
+        ),
         "detail": detail_name,
     }
     if errors:  # cap: 3 entries x 120 chars keeps the line inside 2000
-        out["errors"] = {
-            k: v[:120] for k, v in list(errors.items())[:3]
-        }
+        out["errors"] = {k: v[:120] for k, v in list(errors.items())[:3]}
     line = json.dumps(out)
     assert len(line) < 1900, f"summary line too long ({len(line)} chars)"
     print(line)

@@ -1,6 +1,6 @@
 """Process pins for the external driver contract.
 
-Two invariants that have bitten before:
+Three invariants that have bitten before:
 
 1. The driver's session is not ours and may carry a hostile timezone;
    the registry wrapper must re-pin UTC on every invocation or every
@@ -11,6 +11,9 @@ Two invariants that have bitten before:
    re-ranked (VERDICT r5 §missing.1). This test derives "never checked"
    from the CORRECTNESS_r*.json artifacts themselves, so it enforces the
    rotation protocol automatically in every future round.
+3. bench.py's one-line stdout contract: the external driver parses only the
+   last 2000 chars of its output, so the summary line must fit and must
+   survive a failing query.
 """
 
 from __future__ import annotations
@@ -146,58 +149,75 @@ def test_driver_staleness_is_bounded():
     )
 
 
-def test_preflight_calibration_reference_uses_recent_rounds(tmp_path, monkeypatch):
-    """bench._calibration_reference must pick the smallest sentinel sum
-    from the last two rounds plus the current one ONLY — r11's committed
-    detail carries a 5.34 s sentinel sum from an older box/plan era, and
-    folding it in would set a band every honest current-era run fails
-    (the pre-flight gate would then cry wolf every round and its
-    'degraded' verdict would stop meaning anything). Also pins: partial
-    sentinel coverage disqualifies an artifact, and cal-suffix filenames
-    (BENCH_CAL_r17a.json) parse."""
+def test_bench_main_prints_contract_line_and_writes_detail(
+    spark, sf_dir, tmp_path, monkeypatch, capsys
+):
+    """bench.py's contract, end to end in-process at sf0.01: one JSON
+    line under 2000 chars carrying the summary keys, a broken query
+    captured as an error instead of killing the run, and the full
+    per-query payload (min-of-N and cold timings) written to
+    BENCH_DETAIL_r01.json — round 1 because no BENCH_r*.json exists in
+    the redirected repo dir."""
+    import bench
+    from weightlifting_wod_etl_spark import session
+    from weightlifting_wod_etl_spark.queries_registry import QUERIES
+
+    def boom(spark, sf_dir):
+        raise RuntimeError("planted failure")
+
+    monkeypatch.setitem(QUERIES, "q_bench_boom", boom)
+    good = ["q_tpch_q6", "q_semi_join"]
+    monkeypatch.setattr(bench, "HEADLINE", [*good, "q_bench_boom"])
+    monkeypatch.setattr(bench, "REPO_DIR", str(tmp_path))
+    # reuse the test session as is: get_spark on a live session would
+    # overwrite its runtime conf (shuffle partitions) for later tests
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    monkeypatch.setenv(
+        "SPARK_GRAFT_SF_DIR", os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    )
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "2")
+
+    try:
+        bench.main()
+    finally:
+        spark.sparkContext.setLogLevel("WARN")  # main() quiets it to ERROR
+
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert len(line) < 2000
+    out = json.loads(line)
+    assert set(out) == {
+        "metric", "value", "unit", "sf", "n_queries", "n_errors",
+        "queries", "vs_prev_geomean", "vs_prev_worst5", "errors", "detail",
+    }
+    assert (out["sf"], out["n_queries"], out["n_errors"]) == (0.01, 2, 1)
+    assert "planted failure" in out["errors"]["q_bench_boom"]
+    assert out["vs_prev_geomean"] is None  # no prior round on disk
+    assert out["detail"] == "BENCH_DETAIL_r01.json"
+    detail = json.loads((tmp_path / "BENCH_DETAIL_r01.json").read_text())
+    assert set(detail["queries"]) == set(detail["cold"]) == set(good)
+    assert all(detail["cold"][q] >= detail["queries"][q] > 0 for q in good)
+    assert "q_bench_boom" in detail["errors"]
+
+
+def test_bench_vs_prev_reads_latest_prior_round_at_same_sf(
+    tmp_path, monkeypatch
+):
+    """vs_prev compares against the LATEST prior round recorded at the
+    same sf — not the best timing folded over every round, which turned
+    one fast sample into a standing baseline. Same-round and other-sf
+    details are ignored."""
     import bench
 
-    def art(name, sums, partial=False):
-        qs = {s: sums for s in bench.SENTINELS}
-        if partial:
-            qs.pop(bench.SENTINELS[0])
-        (tmp_path / name).write_text(
-            json.dumps({"sf": 0.1, "queries": qs})
+    def detail(rnd, sf, sec):
+        (tmp_path / f"BENCH_DETAIL_r{rnd:02d}.json").write_text(
+            json.dumps({"sf": sf, "queries": {"q_a": sec}})
         )
 
     monkeypatch.setattr(bench, "REPO_DIR", str(tmp_path))
-    # current round = max BENCH_r on disk + 1 = 18 with BENCH_r17 present
-    (tmp_path / "BENCH_r17.json").write_text("{}")
-    art("BENCH_DETAIL_r11.json", 0.10)   # stale era: must be ignored
-    art("BENCH_DETAIL_r16.json", 0.80)
-    art("BENCH_CAL_r17a.json", 0.70)     # in-window min -> the reference
-    art("BENCH_CAL_r17b.json", 0.75)
-    art("BENCH_DETAIL_r17.json", 0.60, partial=True)  # partial: skipped
-    ref, src = bench._calibration_reference(0.1)
-    assert src == "BENCH_CAL_r17a.json (in-run +slack)"
-    assert abs(
-        ref - 0.70 * len(bench.SENTINELS) * bench.PREFLIGHT_JIT_SLACK
-    ) < 1e-9
-    # wrong sf is invisible
-    assert bench._calibration_reference(0.01) == (0.0, "")
-    # a prior OK pre-flight record is the like-for-like methodology and
-    # beats every in-run sum, with NO slack applied; degraded-state
-    # pre-flight sums must never become the reference
-    payload = json.loads((tmp_path / "BENCH_CAL_r17b.json").read_text())
-    payload["box_state"] = {
-        "state": "ok", "attempts": [{"sum": 9.9}, {"sum": 7.3}]
-    }
-    payload["sentinels"] = list(bench.SENTINELS)
-    (tmp_path / "BENCH_CAL_r17b.json").write_text(json.dumps(payload))
-    payload["box_state"] = {"state": "degraded", "attempts": [{"sum": 0.5}]}
-    (tmp_path / "BENCH_DETAIL_r16.json").write_text(json.dumps(payload))
-    ref, src = bench._calibration_reference(0.1)
-    assert (ref, src) == (7.3, "BENCH_CAL_r17b.json (preflight)")
-    # r18 sentinel repair: a pre-flight sum recorded under a DIFFERENT
-    # sentinel list is not like-for-like — it must be ignored (the
-    # artifact still contributes through its in-run per-query sums)
-    payload = json.loads((tmp_path / "BENCH_CAL_r17b.json").read_text())
-    payload["sentinels"] = ["q_other"] + list(bench.SENTINELS)[1:]
-    (tmp_path / "BENCH_CAL_r17b.json").write_text(json.dumps(payload))
-    ref, src = bench._calibration_reference(0.1)
-    assert src == "BENCH_CAL_r17a.json (in-run +slack)"
+    (tmp_path / "BENCH_r07.json").write_text("{}")  # current round = 8
+    detail(5, 0.1, 0.5)  # faster, but older
+    detail(6, 0.1, 2.0)
+    detail(7, 0.01, 9.0)  # latest, but another sf
+    detail(8, 0.1, 0.1)  # this round's own earlier run
+    assert bench._latest_prior_timings(0.1) == {"q_a": 2.0}
+    assert bench._latest_prior_timings(1.0) == {}

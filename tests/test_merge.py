@@ -610,3 +610,82 @@ def test_merge_total_noop_skips_commit_but_delete_miss_still_commits(
     assert stats["deleted"] == 0 and stats["matched"] == 0
     assert current_version(path) == v_before + 1
     assert _rows(spark, path) == {1: (10, "old"), 2: (20, "new")}
+
+
+def _brute_merge(target, source, when_matched, when_not_matched, deletes):
+    """Row-by-row MERGE under SQL key equality, where a NULL key matches
+    nothing: the recount both the returned stats and the committed rows
+    must equal. Rows are (k, ...) tuples keyed on k."""
+    def hit(k, keys):
+        return k is not None and k in keys
+
+    src_keys = {r[0] for r in source}
+    del_keys = set(deletes)
+    tgt_keys = {r[0] for r in target}
+    matched = [r for r in target if hit(r[0], src_keys)]
+    src_matched = [r for r in source if hit(r[0], tgt_keys)]
+    src_unmatched = [r for r in source if not hit(r[0], tgt_keys)]
+    inserted = src_unmatched if when_not_matched == "insert" else []
+    keep = [
+        r
+        for r in target
+        if not (when_matched != "ignore" and hit(r[0], src_keys))
+        and not hit(r[0], del_keys)
+    ]
+    updated = src_matched if when_matched == "update" else []
+    stats = {
+        "matched": len(matched),
+        "inserted": len(inserted),
+        "deleted": (len(matched) if when_matched == "delete" else 0)
+        + sum(hit(r[0], del_keys) for r in target),
+        "dup_target_rows_collapsed": (
+            len(matched) - len(src_matched) if when_matched == "update" else 0
+        ),
+    }
+    return stats, sorted(keep + updated + inserted, key=repr)
+
+
+@pytest.mark.parametrize(
+    "source, when_matched, when_not_matched, deletes",
+    [
+        ([(None, 99, "s"), (2, 21, "s")], "update", "insert", None),
+        ([(None, 0, "x"), (1, 0, "x")], "delete", "ignore", None),
+        ([(None,), (2,)], "delete_keys", "ignore", None),
+        ([(3, 30, "s")], "update", "insert", [None]),
+    ],
+    ids=["upsert", "matched_delete", "delete_keys", "op_aware_delete"],
+)
+def test_merge_stats_with_null_key_target_rows_match_brute_force(
+    spark, tmp_path, source, when_matched, when_not_matched, deletes
+):
+    """ADVICE r19: the key-stats union groupBy put NULL source keys in
+    the same group as NULL target keys, so a NULL-key row merged into a
+    table already holding NULL-key rows reported them as matched — while
+    the null-unsafe clause joins inserted it as a new row and left the
+    target rows in place. matched/inserted/deleted, delete_keys() and
+    dup_target_rows_collapsed were all inflated."""
+    target = [(None, 1, "n1"), (None, 2, "n2"), (1, 10, "a"), (2, 20, "b")]
+    path = str(tmp_path / "t")
+    _table(spark, path, target)
+    if when_matched == "delete_keys":
+        keys = spark.createDataFrame(source, "k long")
+        stats = {"deleted": delete_keys(spark, path, keys, on=["k"])}
+        when_matched = "delete"
+    else:
+        src = spark.createDataFrame(source, "k long, v long, tag string")
+        dels = (
+            None
+            if deletes is None
+            else spark.createDataFrame([(k,) for k in deletes], "k long")
+        )
+        stats = merge_into(
+            spark, path, src, on=["k"], when_matched=when_matched,
+            when_not_matched=when_not_matched, deletes=dels,
+        )
+    want_stats, want_rows = _brute_merge(
+        target, source, when_matched, when_not_matched, deletes or []
+    )
+    shared = stats.keys() & want_stats.keys()
+    assert {k: stats[k] for k in shared} == {k: want_stats[k] for k in shared}
+    got = sorted(map(tuple, read_table(spark, path).collect()), key=repr)
+    assert got == want_rows

@@ -870,9 +870,10 @@ def test_no_hof_plan_duplicates_expensive_subtrees_engine_wide(registered_plans)
     inside such a projection silently multiplies real per-row work: the
     r15 q_curation_pipeline episode carried 20 pmod instances and ran 2x
     slow until round_ratio_exact_posden/i64 let-bound the internals.
-    Plan-level occurrence counts are the cheap detector (SCALE.md r15
-    engine rule); this sweep bounds them for every registered query
-    whose physical plan contains a lambdafunction."""
+    Plan-level occurrence counts are the cheap detector (the rule is
+    written up in functions/money.round_ratio_exact_posden's docstring);
+    this sweep bounds them for every registered query whose physical
+    plan contains a lambdafunction."""
     offenders = {}
     for name, plan in registered_plans.items():
         if "lambdafunction" not in plan:

@@ -1137,6 +1137,37 @@ def test_cdc_apply_null_key_drop_is_counted_on_stderr(spark, tmp_path, capfd):
     assert "batch 8" not in capfd.readouterr().err
 
 
+def test_cdc_apply_null_key_drop_is_logged_when_merge_raises(
+    spark, tmp_path, capfd, monkeypatch
+):
+    """ADVICE r19: the NULL-key drop count was printed only after a
+    successful merge, so a batch whose commit failed lost the feed-
+    corruption record along with the commit. The count must still be
+    logged while the merge's error propagates."""
+    import os
+
+    import pytest
+
+    from weightlifting_wod_etl_spark.operators import merge
+    from weightlifting_wod_etl_spark.streaming.cdc_apply import make_cdc_apply
+
+    target = os.path.join(str(tmp_path), "cdc_nullkey_raise")
+    spark.createDataFrame([(1, "base")], "k long, v string").write.parquet(target)
+    batch = spark.createDataFrame(
+        [(None, "U", 1, "a"), (2, "U", 1, "ins")],
+        "k long, op string, seq long, v string",
+    )
+
+    def failing_commit(*args, **kwargs):
+        raise OSError("planted commit failure")
+
+    monkeypatch.setattr(merge, "finish_commit", failing_commit)
+    apply_batch = make_cdc_apply(target, on=["k"], seq_col="seq", op_col="op")
+    with pytest.raises(OSError, match="planted commit failure"):
+        apply_batch(batch, 3)
+    assert "batch 3 dropped 1 NULL-key change row(s)" in capfd.readouterr().err
+
+
 def test_dedup_stream_batch_fallback_tolerates_map_column(spark):
     """Review r12 (reproduced): the batch fallback ordered by every
     non-key column bare — a MapType column made the window ORDER BY

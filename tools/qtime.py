@@ -6,7 +6,7 @@ Usage:
     python tools/qtime.py --runs 5 q_foo
     python tools/qtime.py --conf spark.wod_etl.scan_fanout=false q_foo
 
-Same methodology as bench.py's steady-state channel: frame built once,
+Same methodology as bench.py's min-of-N timings: frame built once,
 N noop-sink re-executions, report min (and all samples). Reads
 $SPARK_GRAFT_SF_DIR (default sf0.1) and $SPARK_GRAFT_CPUS like bench.py.
 Not part of the bench contract — a dev tool only.

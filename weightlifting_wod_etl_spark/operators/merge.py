@@ -44,7 +44,10 @@ latency).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .versioned import (
@@ -56,6 +59,12 @@ from .versioned import (
     table_exists,
     verify_read_base,
 )
+
+
+def keys_not_null(on: list[str]) -> Column:
+    """True iff every key column is non-NULL: the only keys the
+    null-unsafe clause joins can match."""
+    return reduce(operator.and_, (F.col(k).isNotNull() for k in on))
 
 
 def merge_into(
@@ -107,7 +116,12 @@ def merge_into(
         and when_not_matched == "ignore"
         and deletes is None
     ):
-        return {"matched": 0, "inserted": 0, "deleted": 0}  # nothing can change
+        # nothing can change. This is the ONLY return before the key-stats
+        # job, so no action has scanned ``source``: a caller observing it
+        # (cdc_apply's NULL-key count) would block forever in obs.get.
+        # cdc_apply never takes this path (it merges with the defaults);
+        # any new early return belongs after the key-stats collect.
+        return {"matched": 0, "inserted": 0, "deleted": 0}
 
     data_dir = resolve(target_path)
     # Committed data, not bare directory existence: a failed first commit
@@ -197,8 +211,15 @@ def merge_into(
             F.sum("_side").alias("_scnt"),
             F.max("_isdel").alias("_isdel"),
             # NULL (not 0) when the key has no target rows, mirroring the
-            # old left join's _tcnt so "matched" stays _tcnt.isNotNull()
-            F.nullif(F.sum(F.lit(1) - F.col("_side")), F.lit(0)).alias("_tcnt"),
+            # old left join's _tcnt so "matched" stays _tcnt.isNotNull().
+            # Also NULL for a key with any NULL column: groupBy puts NULL
+            # source and target keys in one group, but the clause joins
+            # are null-unsafe, so such a source row never matches — it is
+            # inserted, and no target row is updated or deleted for it.
+            F.when(
+                keys_not_null(on),
+                F.nullif(F.sum(F.lit(1) - F.col("_side")), F.lit(0)),
+            ).alias("_tcnt"),
         )
         .localCheckpoint(eager=False)
     )

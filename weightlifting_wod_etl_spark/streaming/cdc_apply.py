@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import exact_dedup
-from ..operators.merge import merge_into
+from ..operators.merge import keys_not_null, merge_into
 
 
 def make_cdc_apply(
@@ -60,10 +60,7 @@ def make_cdc_apply(
         # malformed feed; drop it before merging — but OBSERVABLY (r13
         # advice): a corrupted feed silently shrinking is hard to detect
         # downstream, so count the dropped rows per batch and log.
-        key_ok = None
-        for k in on:
-            c = F.col(k).isNotNull()
-            key_ok = c if key_ok is None else (key_ok & c)
+        key_ok = keys_not_null(on)
         # ZERO extra driver jobs for the bookkeeping (r19 optimization
         # round, guide §1.2, completing r18's three-jobs-to-one step):
         # the dropped-row count rides an ``observe`` on the raw batch and
@@ -107,6 +104,7 @@ def make_cdc_apply(
             order_cols=[F.col(seq_col).desc(), *tiebreak],
         )
         latest.persist()
+        merged = False
         try:
             # one op-aware MERGE (r18 optimization round): deletes and
             # upserts used to apply as TWO sequential merge_into calls —
@@ -130,10 +128,22 @@ def make_cdc_apply(
             deletes = latest.filter(is_del).select(*on)
             upserts = latest.filter(~is_del).drop(op_col, seq_col)
             merge_into(spark, target_path, upserts, on, deletes=deletes)
-            # merge_into's key-stats job always scans the batch (source
-            # and deletes derive from ``cached``), so the observed
-            # metrics are available here without any extra action
-            n_null_key = obs.get["n_null_key"]
+            merged = True
+        finally:
+            latest.unpersist()
+            cached.unpersist()
+            # Reported whether or not the merge raised (a failed commit
+            # must not also lose the feed-corruption record). A merge
+            # that returns has run its key-stats job, which scans the
+            # batch, so the observation is filled and get cannot hang;
+            # one that raised may have failed before that job, so only
+            # poll the observation there. PySpark has no non-blocking
+            # read; the JVM Observation's getRowOrEmpty waits <= 100 ms.
+            if merged:
+                n_null_key = obs.get["n_null_key"]
+            else:
+                row = obs._jo.getRowOrEmpty()
+                n_null_key = row.get().get(0) if row.isDefined() else 0
             if n_null_key:
                 import sys
 
@@ -143,8 +153,5 @@ def make_cdc_apply(
                     "check the upstream feed for PK corruption",
                     file=sys.stderr,
                 )
-        finally:
-            latest.unpersist()
-            cached.unpersist()
 
     return apply_batch
