@@ -40,7 +40,7 @@ if REPO_DIR not in sys.path:
 # scan-local function-surface queries (q_string_fns, q_map_fns,
 # q_clean_normalize, ...) where a bench row times parquet scan + codegen
 # of stateless expressions and adds no scaling signal; their correctness
-# is still driver-checked every rotation. New queries with a shuffle in
+# is still checked by tests/test_oracle_parity.py. New queries with a shuffle in
 # the plan must be added here at registration time (benched from birth).
 HEADLINE = [
     "q_tpch_q1",

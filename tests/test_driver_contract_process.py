@@ -1,32 +1,19 @@
 """Process pins for the external driver contract.
 
-Three invariants that have bitten before:
+Two invariants that have bitten before:
 
 1. The driver's session is not ours and may carry a hostile timezone;
    the registry wrapper must re-pin UTC on every invocation or every
-   date/timestamp query silently shifts (CORRECTNESS r03 class).
-2. The driver checks only the FIRST 50 registered queries, so anything
-   never driver-checked must lead the registration order — round 5
-   shipped 7 queries past the window because late additions weren't
-   re-ranked (VERDICT r5 §missing.1). This test derives "never checked"
-   from the CORRECTNESS_r*.json artifacts themselves, so it enforces the
-   rotation protocol automatically in every future round.
-3. bench.py's one-line stdout contract: the external driver parses only the
+   date/timestamp query silently shifts (the round-3 driver failure).
+2. bench.py's one-line stdout contract: the external driver parses only the
    last 2000 chars of its output, so the summary line must fit and must
    survive a failing query.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
-
-from weightlifting_wod_etl_spark.queries_registry import (
-    DRIVER_WINDOW_SIZE as DRIVER_WINDOW,
-)
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_hostile_session_timezone_is_repinned(spark, sf_dir):
@@ -46,107 +33,6 @@ def test_hostile_session_timezone_is_repinned(spark, sf_dir):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     for n in names:
         assert hostile[n] == baseline[n], f"{n} shifted under hostile TZ"
-
-
-def test_never_driver_checked_queries_lead_the_window():
-    """Every registered query that has no row in any CORRECTNESS_r*.json
-    (and is not rows-only-by-design) must sit inside the driver's 50-slot
-    window, so it gets its first driver row next round instead of
-    waiting unverified."""
-    from weightlifting_wod_etl_spark.queries_registry import (
-        _WINDOW_TAIL,
-        QUERIES,
-    )
-
-    seen: set[str] = set()
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        # regex-guarded like the staleness test below: a stray
-        # CORRECTNESS_r10_bak.json or partial-round artifact must not
-        # inject names into `seen` and mask a stranded new query
-        if not re.search(r"CORRECTNESS_r(\d+)\.json$", path):
-            continue
-        with open(path) as f:
-            seen |= set(json.load(f))
-    never = [q for q in QUERIES if q not in seen and q not in _WINDOW_TAIL]
-    window = set(list(QUERIES)[:DRIVER_WINDOW])
-    stranded = [q for q in never if q not in window]
-    assert not stranded, (
-        f"{len(stranded)} never-driver-checked queries registered past the "
-        f"{DRIVER_WINDOW}-slot window: {stranded} — re-rank _WINDOW_PRIORITY "
-        "(tools/rotate_window.py) so new queries get driver evidence"
-    )
-
-
-def test_driver_staleness_is_bounded():
-    """No query's driver evidence may silently age out: every query whose
-    last hash-green round is <= (latest recorded round - 2) must sit inside
-    the next window, so after the coming round nothing is more than two
-    rounds stale (VERDICT r6 §next.2). With 135 queries and a 50-slot
-    window this bound is always satisfiable (ceil(135/50) < 3 full
-    rotations), so a violation means the rotation protocol was skipped,
-    not that it was infeasible."""
-    from weightlifting_wod_etl_spark.queries_registry import (
-        _WINDOW_TAIL,
-        QUERIES,
-    )
-
-    last_green: dict[str, int] = {}
-    rounds: list[int] = []
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        # regex-guarded like bench.py / tools/rotate_window.py: a stray
-        # CORRECTNESS_r10_bak.json must be skipped, not crash int()
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        rounds.append(rnd)
-        with open(path) as f:
-            for name, res in json.load(f).items():
-                if isinstance(res, dict) and res.get("hash_match"):
-                    last_green[name] = max(last_green.get(name, 0), rnd)
-    if not rounds:
-        return  # round 1: no driver evidence exists yet
-    cutoff = max(rounds) - 2
-    window = list(QUERIES)[:DRIVER_WINDOW]
-    window_set = set(window)
-    all_overdue = [
-        q
-        for q in QUERIES
-        if q not in _WINDOW_TAIL and last_green.get(q, 0) <= cutoff
-    ]
-    if len(all_overdue) > DRIVER_WINDOW:
-        # The bound is unsatisfiable in a single round (a prior round skipped
-        # its rotation — r8 did this, stranding the r5 AND r6 tranches at
-        # once). The best any one round can do is burn every slot on the
-        # stalest queries; assert exactly that, so the forcing function
-        # still rejects a skipped or partial rotation while the backlog
-        # drains over consecutive rounds (r9 fronts the r5 tranche, r10
-        # must front the r6 tranche).
-        non_overdue_in_window = [q for q in window if q not in all_overdue]
-        assert not non_overdue_in_window, (
-            f"{len(all_overdue)} overdue queries exceed the "
-            f"{DRIVER_WINDOW}-slot window, yet the window wastes slots on "
-            f"non-overdue queries: {non_overdue_in_window} — front the "
-            "stalest (tools/rotate_window.py)"
-        )
-        staleness = {q: last_green.get(q, 0) for q in all_overdue}
-        worst_outside = min(
-            (staleness[q] for q in all_overdue if q not in window_set),
-            default=None,
-        )
-        best_inside = max(staleness[q] for q in window if q in staleness)
-        assert worst_outside is None or best_inside <= worst_outside, (
-            "window holds fresher overdue queries (last green "
-            f"r{best_inside}) while staler ones (last green r{worst_outside}) "
-            "sit outside — front strictly by staleness (tools/rotate_window.py)"
-        )
-        return
-    overdue = [q for q in all_overdue if q not in window_set]
-    assert not overdue, (
-        f"{len(overdue)} queries last driver-green in round <= {cutoff} sit "
-        f"past the {DRIVER_WINDOW}-slot window: {overdue} — re-rank "
-        "_WINDOW_PRIORITY (tools/rotate_window.py) before shipping the round"
-    )
 
 
 def test_bench_main_prints_contract_line_and_writes_detail(
@@ -221,3 +107,14 @@ def test_bench_vs_prev_reads_latest_prior_round_at_same_sf(
     detail(8, 0.1, 0.1)  # this round's own earlier run
     assert bench._latest_prior_timings(0.1) == {"q_a": 2.0}
     assert bench._latest_prior_timings(1.0) == {}
+
+
+def test_bench_headline_names_registered_queries_once():
+    """bench.main only warns on stderr and skips a HEADLINE name that is
+    not registered, so a retired or renamed query would silently drop out
+    of the sweep; a duplicate would be timed twice."""
+    import bench
+    from weightlifting_wod_etl_spark.queries_registry import QUERIES
+
+    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
+    assert set(bench.HEADLINE) <= set(QUERIES)

@@ -649,11 +649,15 @@ def _brute_merge(target, source, when_matched, when_not_matched, deletes):
     "source, when_matched, when_not_matched, deletes",
     [
         ([(None, 99, "s"), (2, 21, "s")], "update", "insert", None),
+        ([(None, 98, "s"), (None, 99, "t"), (2, 21, "s")], "update", "insert", None),
         ([(None, 0, "x"), (1, 0, "x")], "delete", "ignore", None),
         ([(None,), (2,)], "delete_keys", "ignore", None),
         ([(3, 30, "s")], "update", "insert", [None]),
     ],
-    ids=["upsert", "matched_delete", "delete_keys", "op_aware_delete"],
+    ids=[
+        "upsert", "two_null_key_sources", "matched_delete", "delete_keys",
+        "op_aware_delete",
+    ],
 )
 def test_merge_stats_with_null_key_target_rows_match_brute_force(
     spark, tmp_path, source, when_matched, when_not_matched, deletes

@@ -127,24 +127,6 @@ def test_shingles_regex_metachar_separator(spark):
     assert got == ["a|b|c", "b|c|d"]
 
 
-def test_unknown_hash_family_raises(spark):
-    """Review r10: a typo'd family ('xxHash64') silently fell through to
-    the md5 slow path — benchmarks of 'the fast path' measured the wrong
-    code. Unknown families are now loud."""
-    import pytest
-
-    from weightlifting_wod_etl_spark.operators.minhash import (
-        lsh_candidate_pairs,
-        simhash_fingerprint,
-    )
-
-    df = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
-    with pytest.raises(ValueError, match="hash_family"):
-        lsh_candidate_pairs(df, hash_family="xxHash64").collect()
-    with pytest.raises(ValueError, match="hash_family"):
-        simhash_fingerprint(df, hash_family="xxhash").collect()
-
-
 def test_text_fns_null_text_yields_null_not_garbage(spark):
     """Review r10 (confirmed by repro): with ANSI off, size() of a null
     array is -1 — lang_id(NULL) was 'en', quality_score(NULL) was -1.504,

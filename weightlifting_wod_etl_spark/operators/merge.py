@@ -224,7 +224,11 @@ def merge_into(
         .localCheckpoint(eager=False)
     )
     row = key_stats.agg(
-        F.coalesce(F.max("_scnt"), F.lit(0)).alias("max_dup"),
+        # NULL-key source rows share one group but match nothing, so they
+        # cannot make a target row match twice: keep them out of the guard
+        F.coalesce(
+            F.max(F.when(keys_not_null(on), F.col("_scnt"))), F.lit(0)
+        ).alias("max_dup"),
         F.coalesce(
             F.sum(F.when(~F.col("_isdel"), F.col("_scnt"))), F.lit(0)
         ).alias("n_src"),

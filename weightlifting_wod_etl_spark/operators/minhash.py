@@ -11,18 +11,11 @@ Scale design (the whole point of LSH at 100 TB):
     a band — at threshold-tuned (K, B) that is a vanishing fraction of the
     N² pair space.
 
-Portability: the DEFAULT "hash family" is 8-hex-digit slices of
+Portability: the hash family is 8-hex-digit slices of
 ``md5(shingle) || md5('1:' || shingle)`` compared lexicographically —
 deterministic, engine-agnostic (any SQL engine computes the identical hex),
 which is what makes the DuckDB oracle possible, and 2 md5 calls per shingle
 instead of one per (seed, shingle).
-
-``hash_family="xxhash64"`` is the production fast path: Spark's native
-seeded xxhash64 (pure JVM long arithmetic, no hex string ever
-materialized) with numeric array_min — same operator shape, same plan,
-Spark-only hashes. Select it per session via
-``spark.conf.set("spark.wod_etl.hash_family", "xxhash64")``; the md5
-default keeps every oracle hash-green.
 """
 
 from __future__ import annotations
@@ -86,27 +79,8 @@ def _hash_slice(seed: int):
     return lambda h: F.substring(h, 1 + 8 * seed, 8)
 
 
-def _xx_seeded(seed: int):
-    """One-arg lambda factory for the xxhash64 family (same two-arg-lambda
-    trap as _hash_slice: the seed must be closed over, not a default arg)."""
-    return lambda x: F.xxhash64(F.lit(seed), x)
-
-
-def _check_family(hash_family: str) -> None:
-    """Fail loudly on an unknown family: a typo ('xxHash64', 'xxhash')
-    would otherwise silently fall through to the slow md5 path — and a
-    benchmark 'of the fast path' would measure the wrong code."""
-    if hash_family not in ("md5", "xxhash64"):
-        raise ValueError(
-            f"hash_family must be 'md5' or 'xxhash64', got {hash_family!r}"
-        )
-
-
 def band_keys_from_shingles(
-    shingle_col: Column,
-    num_hashes: int,
-    rows_per_band: int,
-    hash_family: str = "md5",
+    shingle_col: Column, num_hashes: int, rows_per_band: int
 ) -> Column:
     """All B band keys as ONE expression over the let-bound shingle array.
 
@@ -114,46 +88,19 @@ def band_keys_from_shingles(
     them into band keys looks clean but CollapseProject inlines the shingle
     construction into every one of the K references — the whole shingle
     pipeline runs K times. Binding the array once keeps it single-pass.
-
-    ``hash_family="xxhash64"`` swaps the md5 hex slices for seeded native
-    xxhash64 (one JVM long per (seed, shingle), numeric min) — the fast
-    path when oracle portability isn't needed.
     """
-    _check_family(hash_family)
-
-    def bands_of(sigs: list[Column]) -> Column:
-        # ONE shared band-chunking fold for both hash families (the same
-        # rule simhash_fingerprint states for its fold): a change to the
-        # separator, band count, or remainder handling lands in both
-        # families at once — edited in one place, the md5 and xxhash64
-        # band keys can never silently drift apart (review r11)
-        return F.array(
-            *[
-                F.concat_ws("|", *sigs[i : i + rows_per_band])
-                for i in range(0, num_hashes, rows_per_band)
-            ]
-        )
-
-    if hash_family == "xxhash64":
-
-        def inner_xx(sh: Column) -> Column:
-            return bands_of(
-                [
-                    F.array_min(F.transform(sh, _xx_seeded(seed)))
-                    for seed in range(num_hashes)
-                ]
-            )
-
-        return _let(shingle_col, inner_xx)
-
     assert num_hashes <= 8, "one _combined_md5 yields 8 hash slices"
 
     def inner(sh: Column) -> Column:
         def from_hashes(hh: Column) -> Column:
-            return bands_of(
-                [
-                    F.array_min(F.transform(hh, _hash_slice(seed)))
-                    for seed in range(num_hashes)
+            sigs = [
+                F.array_min(F.transform(hh, _hash_slice(seed)))
+                for seed in range(num_hashes)
+            ]
+            return F.array(
+                *[
+                    F.concat_ws("|", *sigs[i : i + rows_per_band])
+                    for i in range(0, num_hashes, rows_per_band)
                 ]
             )
 
@@ -260,16 +207,10 @@ def lsh_candidate_pairs(
     num_hashes: int = 8,
     rows_per_band: int = 2,
     shingle_n: int = 3,
-    hash_family: str = "md5",
     max_band_df: int | None = 1024,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) for pairs sharing ≥1 LSH band, with exact
     Jaccard computed on the shingle sets for verification.
-
-    ``hash_family``: "md5" (default, oracle-portable) or "xxhash64"
-    (native JVM fast path — same plan shape, different candidate hash
-    family, so pair sets may differ at the margin as any LSH re-seed
-    would).
 
     ``max_band_df`` caps band-bucket size, the same quadratic-blowup guard
     ``ngram_jaccard_pairs`` carries: m exact copies of one boilerplate doc
@@ -285,9 +226,7 @@ def lsh_candidate_pairs(
     banded = sh.select(
         id_col,
         F.posexplode(
-            band_keys_from_shingles(
-                F.col("shingles"), num_hashes, rows_per_band, hash_family
-            )
+            band_keys_from_shingles(F.col("shingles"), num_hashes, rows_per_band)
         ).alias("band_idx", "band_key"),
     )
     # Pairs are generated INSIDE each band bucket (groupBy + array pair
@@ -366,46 +305,25 @@ def simhash_fingerprint(
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = 16,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """SimHash: per-bit majority vote over token hashes → integer fingerprint.
 
-    Default family: bit j's vote is whether HEX DIGIT j of ``md5(token)``
-    is below '8' — an unbiased coin per (token, bit) from ONE md5 per token
-    (md5's 32 hex digits cover bits ≤ 32; a seeded-md5-per-bit family costs
-    `bits`× the hashing for no extra independence we need). Pure string
-    ops, so any engine reproduces it.
-
-    ``hash_family="xxhash64"``: bit j's vote is bit j of the token's
-    native xxhash64 — one JVM long hash per token, votes are shift/mask
-    arithmetic, no hex strings (the fast path; fingerprints differ from
-    the md5 family as any re-seed would).
+    Bit j's vote is whether HEX DIGIT j of ``md5(token)`` is below '8' — an
+    unbiased coin per (token, bit) from ONE md5 per token (md5's 32 hex
+    digits cover bits ≤ 32; a seeded-md5-per-bit family costs `bits`× the
+    hashing for no extra independence we need). Pure string ops, so any
+    engine reproduces it.
 
     Tokens are weighted by frequency (explode keeps duplicates). One
     shuffle: groupBy(doc).
     """
-    _check_family(hash_family)
+    assert bits <= 32, "hex-digit vote family provides 32 independent bits"
     toks = df.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    )
-    # only the per-(token, bit) vote expression differs per family — the
-    # votes/groupBy/fingerprint fold is shared so a fix to the fold can
-    # never leave one family computing different fingerprints
-    if hash_family == "xxhash64":
-        assert bits <= 63, "xxhash64 vote family provides 63 usable bits"
-        toks = toks.select(F.col(id_col), F.xxhash64("tok").alias("h"))
+    ).select(F.col(id_col), F.md5("tok").alias("h"))
 
-        def vote(j: int) -> Column:
-            return F.when(
-                F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-
-    else:
-        assert bits <= 32, "hex-digit vote family provides 32 independent bits"
-        toks = toks.select(F.col(id_col), F.md5("tok").alias("h"))
-
-        def vote(j: int) -> Column:
-            return F.when(F.substring(F.col("h"), j + 1, 1) < "8", 1).otherwise(-1)
+    def vote(j: int) -> Column:
+        return F.when(F.substring(F.col("h"), j + 1, 1) < "8", 1).otherwise(-1)
 
     agg = toks.groupBy(id_col).agg(
         *[F.sum(vote(j)).alias(f"v_{j}") for j in range(bits)]

@@ -2,13 +2,6 @@
 had rows-only/no driver coverage: CDC apply and the event-time interval
 join (VERDICT r7 #4/#5, staged per r8 #7).
 
-REGISTRATION IS DEFERRED TO ROUND 11: the driver window is fully booked
-through r10 draining the staleness backlog (see queries_registry.py) and
-a new query would displace a stale one (never-checked-first invariant).
-These functions are complete — Spark callable + ORACLE_* SQL + pytest
-parity (tests/test_cdc_interval_oracle.py) — so r11 registration is two
-``@register`` imports plus _WINDOW_PRIORITY/bench/COVERAGE lines.
-
 q_cdc_apply drives the PRODUCTION path end-to-end: it materializes a
 base table, synthesizes a deterministic change batch (updates, deletes,
 out-of-order duplicates, inserts of unseen keys), applies it through

@@ -132,17 +132,11 @@ def _valid_embeddings(emb: DataFrame) -> DataFrame:
 )
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(8)+LSH(4 bands×2) candidate pairs with exact-Jaccard verify.
-    Signatures are per-row expressions; only band keys shuffle.
-
-    ``spark.wod_etl.hash_family=xxhash64`` selects the native fast path
-    (bench-only — the DuckDB oracle encodes the portable md5 default)."""
+    Signatures are per-row expressions; only band keys shuffle."""
     # fan_out (guide §2.5): shingle minting + 8 minhash passes dominate;
     # single-row-group testdata pins them to one task. 2.0x at sf0.1.
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    family = spark.conf.get("spark.wod_etl.hash_family", "md5")
-    return lsh_candidate_pairs(
-        docs, num_hashes=8, rows_per_band=2, shingle_n=3, hash_family=family
-    )
+    return lsh_candidate_pairs(docs, num_hashes=8, rows_per_band=2, shingle_n=3)
 
 
 @register(
@@ -168,14 +162,11 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash fingerprint per doc + fingerprint-cluster sizes
-    (near-dups collide; the per-bit hash family is portable md5 votes —
-    ``spark.wod_etl.hash_family=xxhash64`` selects the native fast path,
-    bench-only since the oracle encodes the md5 family)."""
+    (near-dups collide; the per-bit hash family is portable md5 votes)."""
     # fan_out (guide §2.5): per-token md5 votes dominate the scan stage;
     # modest but real win (1.2x at sf0.1) once the scan can parallelize.
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    family = spark.conf.get("spark.wod_etl.hash_family", "md5")
-    fp = simhash_fingerprint(docs, bits=16, hash_family=family)
+    fp = simhash_fingerprint(docs, bits=16)
     w = Window.partitionBy("fingerprint")
     return fp.select(
         "doc_id", "fingerprint", F.count(F.lit(1)).over(w).alias("cluster_size")

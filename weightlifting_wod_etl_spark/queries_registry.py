@@ -48,17 +48,6 @@ def register(name: str, oracle: str | None = None):
         QUERIES[name] = wrapped
         if oracle is not None:
             ORACLES[name] = oracle
-        # Late registration guard: if a query module is imported DIRECTLY
-        # (e.g. a test importing queries.cdc_interval), that module is
-        # mid-import when this registry's import block runs, so its
-        # @register calls fire only AFTER _apply_window_priority() — and
-        # the query would land at the END of QUERIES instead of its
-        # _WINDOW_PRIORITY slot, silently reshaping the 50-query driver
-        # window. Re-apply the ordering for any registration that arrives
-        # after this module finished initializing (the globals() guard is
-        # False for the normal registration pass inside the import block).
-        if "_WINDOW_PRIORITY" in globals():
-            _apply_window_priority()
         return fn
 
     return deco
@@ -86,227 +75,3 @@ from .queries import (  # noqa: E402,F401
     wod_e2e,
 )
 
-# Verification-window priority: the external correctness driver checks the
-# FIRST 50 registrations (dict insertion order). Rounds 1-3 always presented
-# the same first 50, so 27 queries — including the reference's semantic core
-# (q_sessionize_text / q_group_concat / q_wod_pipeline) — never got an oracle
-# row. Re-rank each round (tools/rotate_window.py) so (a) never-yet-verified
-# queries, (b) the stalest last-green set, and (c) anything added/modified
-# this round come first. Queries not named here keep registration order after
-# the prioritized block, so nothing is ever dropped; names not registered yet
-# are skipped harmlessly (lets the list name queries landing later in the
-# round). _WINDOW_TAIL pins rows-only-by-design queries to the very end so no
-# driver slot is burned on a query that cannot hash-match.
-#
-# Round-19 window (tools/rotate_window.py --front q_cdc_apply,
-# EXECUTED): the 49-query r16 tranche — everything last driver-green in
-# r16, at the 2-round staleness cutoff — plus q_cdc_apply in the single
-# spare slot. CORRECTION to the R19 ROTATION NOTE below: it was written
-# mid-r18 BEFORE the optimization sessions landed; r18 in fact shipped
-# value-identical PLAN reshapes for q_set_ops, q_set_ops_all, q_tpch_q16,
-# q_cdc_apply, q_date_extract, q_embed_neardup, q_minhash_lsh(fan-out),
-# q_min_cost_supplier, q_wod_pipeline, q_weighted_median and more (see
-# OPTIMIZATION_r18.md). Of those lacking driver evidence, q_set_ops,
-# q_tpch_q16, q_date_extract, q_minhash_lsh, q_simhash, q_wod_pipeline
-# sit INSIDE this r16 tranche naturally; q_min_cost_supplier /
-# q_weighted_median / q_percentile / q_bigram_lm_score were driver-green
-# in r18 already. That leaves q_set_ops_all, q_cdc_apply, q_embed_neardup
-# needing first evidence for their r18 shapes against ONE spare slot
-# (49 overdue + 1). The slot goes to q_cdc_apply: the deepest reshape
-# (op-aware single MERGE + single bookkeeping job) AND the r19 round's
-# top optimization target (VERDICT r18 Next #1), so the driver hashes
-# the newest shape immediately. q_set_ops_all and q_embed_neardup ride
-# to r20 with their natural r17 tranche (both pinned locally by
-# oracle-parity tests at sf0.001/0.01/0.1 and the 150/150 driver sim).
-# ZERO spare slots remain after this rotation: any value-changing
-# rewrite in r19 must retire or merge a duplicate shape in the same
-# commit (r13 models).
-#
-# Round-18 window (tools/rotate_window.py --front q_variant_json,
-# EXECUTED): the 49-query r15 tranche — everything last driver-green in
-# r15, at the 2-round staleness cutoff — plus q_bigram_lm_score (the
-# stalest r16 query, by name) in the single spare slot. NOTE on the
-# planning arithmetic: the R18 plan below assigned the spare slot to
-# q_variant_json, but q_variant_json's own last hash-green row is r15
-# (r16/r17 windows didn't include it), so it is INSIDE the overdue
-# tranche and needs no forcing — the --front flag was a no-op and the
-# spare slot fell to natural staleness ranking. This window delivers
-# first driver evidence for: the twice-reshaped q_variant_json oracle
-# (r17 json_type fractional-truncation split + cast-trim class), and
-# the r16 casefold-reshaped q_token_count / q_lang_id / q_quality_score.
-# q_json_fns (same JSON reshape family, last green r16) rides to r19
-# with its natural tranche. ZERO spare slots remain after this
-# rotation: any value-changing rewrite in r18 must retire or merge a
-# duplicate shape in the same commit (r13 models).
-#
-# R19 ROTATION NOTE (r18 adjudications, SUPERSEDED by the EXECUTED
-# Round-19 note above — notably its "r18 shipped NO value-affecting
-# reshapes" claim predates the r18 optimization sessions and is WRONG;
-# see the correction above): the r16 tranche falls due at r19 — everything last
-# driver-green in r16 EXCEPT q_bigram_lm_score (which took r18's spare
-# slot and is fresh again), i.e. ~49 queries; run
-# `tools/rotate_window.py` and take the staleness test's printed set as
-# authoritative, exactly as r18 did. q_json_fns arrives INSIDE this
-# tranche naturally (last green r16) — no --front forcing needed; that
-# delivers the last outstanding driver evidence for the r16/r17 JSON
-# reshape family (VERDICT r17 #2's rider). Any spare slots fall to
-# natural staleness ranking (stalest r17 queries, by name). r18 shipped
-# NO value-affecting oracle or query reshapes (the round's diffs are
-# standing-gate tests, bench tooling, and docs), so no reshape rider
-# needs forcing and the r20 window then closes the cycle with the r17
-# tranche.
-#
-# R18 ROTATION NOTE (r17 adjudications, superseded by the EXECUTED note
-# above): the r15 tranche falls due at r18 — 49 queries (50 were last
-# green r15, minus q_curation_pipeline, which took r17's spare slot),
-# leaving ONE spare slot. Assign it to q_variant_json
-# (`--front q_variant_json`): its ORACLE was reshaped twice in r17
-# (json_type split for fractional truncation, then the cast-trim class)
-# — value-identical on all existing data (props is NULL at every sf;
-# driver sim + sf0.1 parity + dirty sweeps at two scales all green) but
-# the driver has only seen the r16 oracle shape. q_json_fns (same
-# reshape family, last green r16) rides to r19 with its natural
-# tranche; its local pins (test_json_channels + 16 hostile dirty rows
-# at two scales) are the strongest in the gate family. The
-# r16-coasting casefold reshapes (q_token_count, q_lang_id,
-# q_quality_score) arrive with the r15 tranche at r18 as planned.
-# Also riding natural rotation: the r17 LAST_WIN map-key pin (conf
-# only — no oracled path can mint a duplicate key; pinned in
-# test_arrayfn_corners).
-#
-# Round-17 window (tools/rotate_window.py --front q_curation_pipeline):
-# the 49-query r14 tranche — everything last driver-green in r14, at the
-# 2-round staleness cutoff (the exact set the r16 staleness-test failure
-# printed: q_ann_ivf ... q_zscore_normalize) — plus q_curation_pipeline
-# force-included in the single spare slot per the R17 ROTATION NOTE
-# below (its dedup-survivor window keys on the r16 casefold-reshaped
-# fingerprint; VERDICT r16 Next #1). ZERO spare slots remain: any
-# value-changing rewrite this round must retire or merge a duplicate
-# shape in the same commit (VERDICT r16 Next #2; r13 models). This
-# rotation also delivers first driver evidence for the r16
-# casefold-reshaped queries riding in the tranche: q_doc_fingerprint,
-# q_rolling_hash (portable_lower in the fingerprint/rolling-hash
-# paths).
-#
-# Round-16 window (tools/rotate_window.py): the 50-query r13 tranche —
-# everything last driver-green in r13, now at the 2-round staleness
-# cutoff (the exact set the r15 staleness-test failure message printed:
-# q_tumbling_window ... q_wod_pipeline) — exactly fills the window with
-# ZERO spare slots. This rotation also delivers first driver evidence
-# for the r15 value-identical rewrites riding in the tranche: q_ewma
-# (two-stage lag extraction), q_minhash_lsh / q_ngram_jaccard (jaccard
-# on the i64 exact-rational fast path). Historical note (ADVICE r15 #1):
-# the r15 window's spare 50th slot went to q_curation_pipeline under
-# the ADVICE r14 #2 rewritten-this-round rule — its quality values
-# CHANGED with the exact-rational composite — displacing
-# q_bigram_lm_score (value-identical candidates rotate naturally),
-# which now leads this r16 tranche. At 150 registered / 50-slot window
-# the revisit cycle is exactly 3 rounds, which satisfies the 2-round
-# staleness bound at steady state (everything OUTSIDE the window is at
-# most 2 rounds old).
-#
-# R17 ROTATION NOTE (r16 casefold adjudication): the r16 portable-lower
-# pin (functions/casefold.py) reshaped every lower()-bearing value path.
-# Proven value-identical on all existing data (zero divergent codepoints
-# at any sf; driver sim + sf0.01/sf0.1 parity + dirty sweep all green),
-# so per the r15 value-identical precedent the reshaped queries ride
-# natural rotation. Exact reshaped set, by tranche: in-window THIS round
-# (immediate driver evidence): q_date_extract, q_wod_pipeline,
-# q_weekly_rollup (month_number). Due r17 with their r14 tranche anyway:
-# q_doc_fingerprint, q_rolling_hash. Coasting to r18 with the r15/r12
-# tranche: q_token_count, q_lang_id, q_quality_score,
-# q_curation_pipeline (bpe/stopword/fingerprint paths). r17's expected
-# ONE spare slot (49-query r14 tranche) should force-include the most
-# safety-critical of that r18 group — `--front q_curation_pipeline`
-# (its dedup survivor WINDOW keys on the reshaped fingerprint) — so at
-# most three value-identical swaps ever coast two rounds, each pinned
-# locally by test_casefold.py + the İ/Σ dirty rows at three scales.
-# Also riding r18: q_variant_json's r16 try_parse_json/try_variant_get
-# hardening (value-identical — props is all NULL on every existing
-# table; hostile bags pinned in the dirty sweep at two scales). CADENCE RULE (r10 verdict #2): the window always
-# fronts never-checked then least-recently-green queries
-# (stalest-first); the staleness test
-# (test_driver_contract_process.py) enforces the bound. Net-new
-# registrations stay ~0; if a new operator needs driver evidence, retire
-# or merge an existing query in the same commit (r13 models: q_unpivot
-# folded into q_unpivot_measures, q_window_rank retired as a duplicate
-# WindowGroupLimit shape).
-# the external driver verifies only the FIRST this-many registered
-# queries each round; the rotation tooling and the window-invariant
-# tests all share this single constant
-DRIVER_WINDOW_SIZE = 50
-
-_WINDOW_PRIORITY = [
-    "q_cms_estimate",  # last green r16
-    "q_cosine_topk",  # last green r16
-    "q_cumulative_distinct",  # last green r16
-    "q_data_quality",  # last green r16
-    "q_date_extract",  # last green r16
-    "q_date_spine",  # last green r16
-    "q_embed_centroid",  # last green r16
-    "q_event_transitions",  # last green r16
-    "q_ewma",  # last green r16
-    "q_explode_lines",  # last green r16
-    "q_fuzzy_dedup",  # last green r16
-    "q_global_topn",  # last green r16
-    "q_group_concat",  # last green r16
-    "q_hll_bound",  # last green r16
-    "q_hll_union",  # last green r16
-    "q_json_fns",  # last green r16
-    "q_lateral_topk",  # last green r16
-    "q_mad_anomaly",  # last green r16
-    "q_map_fns",  # last green r16
-    "q_minhash_lsh",  # last green r16
-    "q_ngram_jaccard",  # last green r16
-    "q_pagerank",  # last green r16
-    "q_quantile_bound",  # last green r16
-    "q_resample_ffill",  # last green r16
-    "q_rolling_range",  # last green r16
-    "q_session_concurrency",  # last green r16
-    "q_sessionize_events",  # last green r16
-    "q_sessionize_text",  # last green r16
-    "q_set_ops",  # last green r16
-    "q_simhash",  # last green r16
-    "q_sliding_window",  # last green r16
-    "q_snapshot_diff",  # last green r16
-    "q_string_fns",  # last green r16
-    "q_tdigest_quantile",  # last green r16
-    "q_tpch_q11",  # last green r16
-    "q_tpch_q12",  # last green r16
-    "q_tpch_q13",  # last green r16
-    "q_tpch_q15",  # last green r16
-    "q_tpch_q16",  # last green r16
-    "q_tpch_q17",  # last green r16
-    "q_tpch_q20",  # last green r16
-    "q_tpch_q21",  # last green r16
-    "q_tpch_q8",  # last green r16
-    "q_tumbling_window",  # last green r16
-    "q_weekly_rollup",  # last green r16
-    "q_weighted_sample",  # last green r16
-    "q_window_dedup",  # last green r16
-    "q_window_frames",  # last green r16
-    "q_wod_pipeline",  # last green r16
-    "q_cdc_apply",  # last green r17
-]
-# Rows-only by design (engine-specific sketches — SURVEY §7.3): keep these in
-# the LAST registration slots so every driver window slot is oracle-bearing.
-_WINDOW_TAIL = [
-    "q_approx_distinct",
-]
-
-
-def _apply_window_priority() -> None:
-    order = (
-        [n for n in _WINDOW_PRIORITY if n in QUERIES]
-        + [n for n in QUERIES if n not in _WINDOW_PRIORITY and n not in _WINDOW_TAIL]
-        + [n for n in _WINDOW_TAIL if n in QUERIES]
-    )
-    reordered = {n: QUERIES[n] for n in order}
-    QUERIES.clear()
-    QUERIES.update(reordered)
-    reordered_oracles = {n: ORACLES[n] for n in order if n in ORACLES}
-    ORACLES.clear()
-    ORACLES.update(reordered_oracles)
-
-
-_apply_window_priority()

@@ -78,6 +78,68 @@ OUT_SCHEMA = (
 )
 
 
+def _gap_merge_sweep(gap_us: int):
+    """Build the per-key session sweep both stateful sessionizers share:
+    ``sweep(pdf_iter, open_session)`` -> start-sorted merged sessions as
+    ``[start_us, last_us, n, total_cents]`` lists, the last one still open.
+
+    Returned as a closure so cloudpickle ships it BY VALUE inside each
+    sessionizer's function — Python workers cannot import this package,
+    and a module-level helper would be pickled by reference."""
+
+    def sweep(pdf_iter, open_session):
+        import math
+
+        import pandas as pd
+
+        intervals = []
+        for pdf in pdf_iter:
+            for t, v in zip(pd.to_datetime(pdf["ts"]), pdf["value"]):
+                # NULL event time: NaT.value is INT64_MIN — it would open
+                # a phantom epoch-µs interval that OVERFLOWS on emit.
+                # session_window drops NULL-ts rows; mirror that.
+                if pd.isna(t):
+                    continue
+                us = int(t.value) // 1000
+                # NULL value: NaN poisons the session's sum; batch F.sum
+                # skips NULLs — contribute 0 (count still ticks). Values
+                # are INTEGER CENTS (HALF_UP like to_fixed) so the
+                # cross-batch accumulation is order-free (review r12).
+                cents = (
+                    0
+                    if pd.isna(v)
+                    else int(math.copysign(
+                        math.floor(abs(float(v)) * 100 + 0.5), float(v)
+                    ))
+                )
+                intervals.append((us, us, 1, cents))
+        # One unit interval per event plus the open-session interval from
+        # state, then a single gap-merge sweep over start-sorted intervals
+        # — which IS batch gap-sessionize semantics over (state ∪ batch).
+        # Consecutive very-late events within gap_us of each other merge
+        # into ONE late session (ADVICE r10) instead of one singleton
+        # each; a late chain that reaches the open session's gap horizon
+        # merges into it. Only sessions emitted in PRIOR batches can
+        # never retro-merge (single-session state — the documented
+        # streaming/batch divergence). Bounds never regress: the open
+        # session only ever absorbs intervals, so its end is monotone.
+        if open_session is not None and open_session[1] is not None:
+            intervals.append(tuple(open_session))
+        intervals.sort(key=lambda iv: (iv[0], iv[1]))
+        merged: list[list] = []
+        for s, e, cnt, tot in intervals:
+            if merged and s <= merged[-1][1] + gap_us:
+                m = merged[-1]
+                m[1] = max(m[1], e)
+                m[2] += cnt
+                m[3] += tot
+            else:
+                merged.append([s, e, cnt, tot])
+        return merged
+
+    return sweep
+
+
 def stateful_gap_sessionize(
     events: DataFrame, gap_seconds: int = 1800, watermark: str = DEFAULT_WATERMARK
 ) -> DataFrame:
@@ -89,60 +151,13 @@ def stateful_gap_sessionize(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    gap_us = gap_seconds * 1_000_000
+    sweep = _gap_merge_sweep(gap_seconds * 1_000_000)
 
     def fn(key, pdf_iter, state):
-        import math
-
         import pandas as pd
 
         (user_id,) = key
-        ts_list = []
-        val_list = []
-        for pdf in pdf_iter:
-            for t, v in zip(pd.to_datetime(pdf["ts"]), pdf["value"]):
-                # NULL event time: NaT.value is INT64_MIN — it would open
-                # a phantom epoch-µs interval that OVERFLOWS on emit.
-                # session_window drops NULL-ts rows; mirror that.
-                if pd.isna(t):
-                    continue
-                ts_list.append(int(t.value) // 1000)
-                # NULL value: NaN poisons the session's sum; batch F.sum
-                # skips NULLs — contribute 0 (count still ticks). Values
-                # are INTEGER CENTS (HALF_UP like to_fixed) so the
-                # cross-batch accumulation is order-free (review r12).
-                val_list.append(
-                    0
-                    if pd.isna(v)
-                    else int(math.copysign(
-                        math.floor(abs(float(v)) * 100 + 0.5), float(v)
-                    ))
-                )
-        # One unit interval per event plus the open-session interval from
-        # state, then a single gap-merge sweep over start-sorted intervals
-        # — which IS batch gap-sessionize semantics over (state ∪ batch).
-        # Consecutive very-late events within gap_us of each other merge
-        # into ONE late session (ADVICE r10) instead of one singleton
-        # each; a late chain that reaches the open session's gap horizon
-        # merges into it. Only sessions emitted in PRIOR batches can
-        # never retro-merge (single-session state — the documented
-        # streaming/batch divergence). Bounds never regress: the open
-        # session only ever absorbs intervals, so its end is monotone.
-        intervals = [(t, t, 1, v) for t, v in zip(ts_list, val_list)]
-        if state.exists:
-            s0, l0, n0, tot0 = state.get
-            if l0 is not None:
-                intervals.append((s0, l0, n0, tot0))
-        intervals.sort(key=lambda iv: (iv[0], iv[1]))
-        merged: list[list] = []
-        for s, e, cnt, tot in intervals:
-            if merged and s <= merged[-1][1] + gap_us:
-                m = merged[-1]
-                m[1] = max(m[1], e)
-                m[2] += cnt
-                m[3] += tot
-            else:
-                merged.append([s, e, cnt, tot])
+        merged = sweep(pdf_iter, state.get if state.exists else None)
         out = [(user_id, s, e, cnt, tot) for s, e, cnt, tot in merged[:-1]]
         if merged:
             state.update(tuple(merged[-1]))
@@ -193,7 +208,7 @@ def make_gap_session_processor(gap_seconds: int = 1800):
         StatefulProcessorHandle,
     )
 
-    gap_us = gap_seconds * 1_000_000
+    sweep = _gap_merge_sweep(gap_seconds * 1_000_000)
 
     class GapSessionProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -218,48 +233,12 @@ def make_gap_session_processor(gap_seconds: int = 1800):
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            import math
-
-            import pandas as pd
-
             (user_id,) = key
-            ts, vals = [], []
-            for pdf in rows:
-                for t, v in zip(pd.to_datetime(pdf["ts"]), pdf["value"]):
-                    # same NULL guards as stateful_gap_sessionize above:
-                    # NaT would overflow on emit, NaN poisons the sum;
-                    # values accumulate as integer cents (order-free)
-                    if pd.isna(t):
-                        continue
-                    ts.append(int(t.value) // 1000)
-                    vals.append(
-                        0
-                        if pd.isna(v)
-                        else int(math.copysign(
-                            math.floor(abs(float(v)) * 100 + 0.5), float(v)
-                        ))
-                    )
-            # Same interval gap-merge sweep as stateful_gap_sessionize:
-            # batch gap-sessionize semantics over (state ∪ batch), so
-            # consecutive very-late events merge with each other and with
-            # the open session when chains connect (ADVICE r10); bounds
-            # never regress (the open session only absorbs intervals), so
-            # the re-armed close timer is never earlier than the horizon
-            # already promised.
-            intervals = [(t, t, 1, v) for t, v in zip(ts, vals)]
             cur = self._state.get() if self._state.exists() else None
-            if cur is not None and cur[1] is not None:
-                intervals.append(tuple(cur))
-            intervals.sort(key=lambda iv: (iv[0], iv[1]))
-            merged = []
-            for s, e, cnt, tot in intervals:
-                if merged and s <= merged[-1][1] + gap_us:
-                    m = merged[-1]
-                    m[1] = max(m[1], e)
-                    m[2] += cnt
-                    m[3] += tot
-                else:
-                    merged.append([s, e, cnt, tot])
+            # the sweep's bounds never regress (the open session only
+            # absorbs intervals), so the re-armed close timer is never
+            # earlier than the horizon already promised
+            merged = sweep(rows, cur)
             for s, e, cnt, tot in merged[:-1]:
                 yield self._emit(user_id, (s, e, cnt, tot))
             if not merged:
