@@ -150,6 +150,65 @@ def test_merge_file_targeted_rewrites_only_intersecting_files(spark, tmp_path):
     assert got[250] == (500, "old")
 
 
+@pytest.mark.parametrize(
+    "module, name",
+    [
+        ("versioned", "carry_files"),
+        ("skipping", "refresh_stats_index"),
+        ("versioned", "finish_commit"),
+    ],
+    ids=["carry", "index_refresh", "flip"],
+)
+def test_file_targeted_merge_crash_at_each_commit_step(
+    spark, tmp_path, monkeypatch, module, name
+):
+    """A file-targeted merge that dies at its carry, index-refresh or
+    pointer-flip step leaves readers on exactly the previous snapshot, no
+    lock or staging dir behind, and a retry commits the same rows and
+    stats as a clean run."""
+    import importlib
+    import os
+
+    from weightlifting_wod_etl_spark.operators.versioned import current_version
+
+    def snapshot(path):
+        return sorted(map(tuple, read_table(spark, path).collect()))
+
+    def merge(path, rows):
+        src = spark.createDataFrame(rows, "k long, v long, tag string")
+        return merge_into(spark, path, src, on=["k"])
+
+    rows = [(k, 9999, "new") for k in range(10, 20)] + [(5000, 1, "ins")]
+    clean, path = str(tmp_path / "clean"), str(tmp_path / "crash")
+    for p in (clean, path):
+        _clustered_table(spark, p)
+        merge(p, [(250, -1, "warm")])  # live version is now _v000001
+    expected = merge(clean, rows)
+    assert expected["files_carried"] == 3  # the carry step really runs
+
+    before, v = snapshot(path), current_version(path)
+    assert v == 1
+
+    def crash(*a, **k):
+        raise RuntimeError(f"crash at {name}")
+
+    mod = importlib.import_module(f"weightlifting_wod_etl_spark.operators.{module}")
+    monkeypatch.setattr(mod, name, crash)
+    with pytest.raises(RuntimeError, match=f"crash at {name}"):
+        merge(path, rows)
+    monkeypatch.undo()
+
+    assert snapshot(path) == before
+    assert current_version(path) == v
+    assert not [
+        e for e in os.listdir(path)
+        if e.startswith(".lock_v") or e == f"_v{v + 1:06d}"
+    ]
+
+    assert merge(path, rows) == expected
+    assert snapshot(path) == snapshot(clean)
+
+
 def test_merge_file_targeted_matches_full_rewrite(spark, tmp_path):
     """Same merge with and without the index must produce identical rows
     — pruning is an optimization, never a semantics change."""
@@ -337,8 +396,9 @@ def test_merge_retry_after_failed_first_commit_not_wedged(spark, tmp_path):
 def test_merge_refuses_commit_when_base_moved_before_lock(spark, tmp_path):
     """Review r10: reads resolved BEFORE begin_commit; if another writer
     commits in that window, both old guards pass and the other commit is
-    silently discarded. verify_read_base must refuse instead."""
+    silently discarded. The commit's read-base check must refuse instead."""
     from weightlifting_wod_etl_spark.operators import merge as merge_mod
+    from weightlifting_wod_etl_spark.operators import versioned
     from weightlifting_wod_etl_spark.operators.versioned import (
         ConcurrentCommitError,
     )
@@ -346,7 +406,7 @@ def test_merge_refuses_commit_when_base_moved_before_lock(spark, tmp_path):
     path = str(tmp_path / "window")
     _table(spark, path, [(1, 10, "old")])
 
-    real_begin = merge_mod.begin_commit
+    real_begin = versioned.begin_commit
     fired = {"n": 0}
 
     def begin_after_other_writer(p):
@@ -359,13 +419,13 @@ def test_merge_refuses_commit_when_base_moved_before_lock(spark, tmp_path):
             merge_mod.merge_into(spark, p, other, on=["k"])
         return real_begin(p)
 
-    merge_mod.begin_commit = begin_after_other_writer
+    versioned.begin_commit = begin_after_other_writer
     try:
         src = spark.createDataFrame([(3, 30, "c")], "k long, v long, tag string")
         with pytest.raises(ConcurrentCommitError, match="between resolve"):
             merge_into(spark, path, src, on=["k"])
     finally:
-        merge_mod.begin_commit = real_begin
+        versioned.begin_commit = real_begin
 
     # the other writer's commit survives, the lock is released, retry works
     assert _rows(spark, path) == {1: (10, "old"), 2: (20, "other")}

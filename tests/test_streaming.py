@@ -1148,7 +1148,7 @@ def test_cdc_apply_null_key_drop_is_logged_when_merge_raises(
 
     import pytest
 
-    from weightlifting_wod_etl_spark.operators import merge
+    from weightlifting_wod_etl_spark.operators import versioned
     from weightlifting_wod_etl_spark.streaming.cdc_apply import make_cdc_apply
 
     target = os.path.join(str(tmp_path), "cdc_nullkey_raise")
@@ -1161,7 +1161,7 @@ def test_cdc_apply_null_key_drop_is_logged_when_merge_raises(
     def failing_commit(*args, **kwargs):
         raise OSError("planted commit failure")
 
-    monkeypatch.setattr(merge, "finish_commit", failing_commit)
+    monkeypatch.setattr(versioned, "finish_commit", failing_commit)
     apply_batch = make_cdc_apply(target, on=["k"], seq_col="seq", op_col="op")
     with pytest.raises(OSError, match="planted commit failure"):
         apply_batch(batch, 3)

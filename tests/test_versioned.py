@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from weightlifting_wod_etl_spark.io import read_table
-from weightlifting_wod_etl_spark.operators import compact as compact_mod
 from weightlifting_wod_etl_spark.operators.compact import compact_parquet
 from weightlifting_wod_etl_spark.operators.versioned import (
     begin_commit,
@@ -102,7 +101,9 @@ def test_compact_crash_midway_preserves_table_then_recovers(
     def dying_finish(*a, **k):
         raise boom
 
-    monkeypatch.setattr(compact_mod, "finish_commit", dying_finish)
+    import weightlifting_wod_etl_spark.operators.versioned as versioned_mod
+
+    monkeypatch.setattr(versioned_mod, "finish_commit", dying_finish)
     with pytest.raises(RuntimeError):
         compact_parquet(spark, path, target_file_bytes=10**12)
     assert _snapshot(spark, path) == before  # crash lost nothing
@@ -786,3 +787,5 @@ def test_migration_commit_gcs_root_success_marker_and_stale_index(
     assert os.path.exists(os.path.join(path, "_CURRENT"))
     assert not os.path.exists(os.path.join(path, "_SUCCESS"))
     assert not os.path.exists(os.path.join(path, "_stats_index.parquet"))
+    # the old files' Hadoop checksum sidecars go with them
+    assert not [e for e in os.listdir(path) if e.endswith(".crc")]

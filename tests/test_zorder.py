@@ -145,7 +145,7 @@ def test_zorder_recluster_crash_leaves_old_or_new(spark, tmp_path, monkeypatch):
 
     from weightlifting_wod_etl_spark.operators import skipping as skipping_mod
 
-    monkeypatch.setattr(skipping_mod, "save_stats_index", exploding_save)
+    monkeypatch.setattr(skipping_mod, "refresh_stats_index", exploding_save)
     with pytest.raises(RuntimeError, match="mid-cluster"):
         zorder_write(relayout, path, ["a", "b"], bits=8, num_files=8)
     monkeypatch.undo()

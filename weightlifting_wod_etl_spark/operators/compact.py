@@ -12,11 +12,9 @@ the filesystem, not a row count — row width varies), then one
 ``repartition(n)`` round-robin shuffle balances the rewrite. An optional
 ``sort_by`` turns compaction into a clustering pass at the same cost
 (pair with operators/zorder.py's key for multi-dimensional layouts).
-The rewrite commits through operators/versioned.py's manifest-pointer
-protocol — a crash at ANY point leaves the table readable (old version
-until the atomic pointer flip, new version after), and a crashed prior
-attempt's staging dir is reclaimed automatically — the engine-side
-analog of a Delta/Iceberg ``OPTIMIZE``/``rewrite`` commit.
+The rewrite is one ``versioned.commit_version`` (crash safety is defined
+there) — the engine-side analog of a Delta/Iceberg ``OPTIMIZE``/``rewrite``
+commit.
 """
 
 from __future__ import annotations
@@ -26,13 +24,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .versioned import (
-    abort_commit,
-    begin_commit,
-    finish_commit,
-    resolve,
-    verify_read_base,
-)
+from .versioned import commit_version, resolve
 
 
 def dir_stats(path: str) -> tuple[int, int]:
@@ -86,11 +78,12 @@ def compact_parquet(
     layout) and already-versioned tables; read results back with
     ``io.read_table`` / ``versioned.resolve``.
 
-    ``stats_cols`` persists a footer-stats skipping index into the new
-    version dir BEFORE the pointer flip — data and the index describing
-    it are published in the same atomic commit, so ``io.read_pruned``
-    never sees an index that disagrees with the files (defaults to
-    ``sort_by``: the clustered columns are exactly the prunable ones)."""
+    ``stats_cols`` persists a footer-stats skipping index with the new
+    version (defaults to ``sort_by``: the clustered columns are exactly
+    the prunable ones). With neither, a previously persisted index is
+    rebuilt over the new files — a maintenance compact must not drop it
+    (later merges would degrade to full rewrites, read_pruned to footer
+    scans)."""
     data_dir = resolve(path)
     before, total = dir_stats(data_dir)
     if before == 0:
@@ -159,32 +152,11 @@ def compact_parquet(
         out = df.repartition(want, *pkeys)
     else:
         out = df.repartition(want)
-    staging, version = begin_commit(path)
-    try:
-        verify_read_base(path, data_dir)  # df reads data_dir (resolved above)
-        writer = out.write.mode("overwrite")
-        if pkeys:
-            # preserve the Hive layout: partition pruning must survive a
-            # maintenance compact (review r11)
-            writer = writer.partitionBy(*pkeys)
-        writer.parquet(staging)
-        index_cols = stats_cols if stats_cols is not None else (sort_by or [])
-        if index_cols:
-            from .skipping import save_stats_index
-
-            save_stats_index(staging, index_cols)
-        else:
-            # A maintenance compact with no explicit columns must not DROP
-            # a previously persisted index (that silently degrades every
-            # later merge to full rewrites and read_pruned to footer
-            # scans). Rebuild it over the new files with the old index's
-            # columns; no-op when the table never had one.
-            from .skipping import refresh_stats_index
-
-            refresh_stats_index(data_dir, staging)
-        finish_commit(path, version)
-    except BaseException:
-        abort_commit(path, version)  # failed rewrite must not hold the lock
-        raise
-    after, _ = dir_stats(resolve(path))
+    # partition_by preserves the Hive layout: partition pruning must
+    # survive a maintenance compact (review r11)
+    committed = commit_version(
+        path, out, base=data_dir, partition_by=pkeys,
+        index_cols=stats_cols if stats_cols is not None else sort_by,
+    )
+    after, _ = dir_stats(committed)
     return before, after

@@ -20,7 +20,7 @@ Plan shape: ONE left-outer (or anti) join of target against the source
 keyed on ``on`` — the source is typically small (a day's increment, a
 deletion list) so Catalyst broadcasts it; the target side streams through
 without a shuffle in that case. The new version dir is written while the
-live one stays readable; the pointer flip publishes it atomically.
+live one stays readable; ``versioned.commit_version`` publishes it.
 
 FILE-TARGETED REWRITE: when the table carries a persisted footer-stats
 index (operators/skipping.py) covering the first merge key, only files
@@ -50,15 +50,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .versioned import (
-    abort_commit,
-    begin_commit,
-    carry_files,
-    finish_commit,
-    resolve,
-    table_exists,
-    verify_read_base,
-)
+from .versioned import commit_version, resolve, table_exists
 
 
 def keys_not_null(on: list[str]) -> Column:
@@ -349,43 +341,23 @@ def merge_into(
         row.n_del_matched
     )
 
-    staging, version = begin_commit(target_path)
-    try:
-        # every frame above reads data_dir: refuse to commit if another
-        # writer moved the live version while those plans were built
-        verify_read_base(target_path, data_dir)
-        if carried_files:
-            # keep file granularity ≈ the files being replaced — without
-            # this the rewritten slice fans out to one file per shuffle
-            # partition and a 1-file-targeted merge litters tiny files
-            out = out.coalesce(max(1, n_candidates))
-        writer = out.write.mode("overwrite")
-        if pkeys:
-            # preserve the Hive layout (review r12 — the same silent
-            # flatten compact.py fixed r11): without partitionBy the
-            # committed version carries the partition column as data with
-            # no date=*/ dirs, partition pruning dies, and the next
-            # partitioned kv_upsert sees loose root files and pays a
-            # full-table migration rewrite. Sources that insert rows must
-            # carry the partition columns (same contract as Delta MERGE).
-            writer = writer.partitionBy(*pkeys)
-        writer.parquet(staging)
-        if carried_files:
-            carry_files(carried_files, data_dir, staging)
-        if exists:
-            # Unconditional, not carried-gated: a full-rewrite merge over a
-            # previously indexed table must publish a rebuilt index (from
-            # the new files' footers), or every later merge degrades to
-            # full rewrites and read_pruned to live footer scans — a
-            # silent one-way perf cliff. No-op when the old table had no
-            # index (nothing promised pruning).
-            from .skipping import refresh_stats_index
-
-            refresh_stats_index(data_dir, staging)
-        finish_commit(target_path, version)
-    except BaseException:
-        abort_commit(target_path, version)  # never hold the lock on failure
-        raise
+    if carried_files:
+        # keep file granularity ≈ the files being replaced — without
+        # this the rewritten slice fans out to one file per shuffle
+        # partition and a 1-file-targeted merge litters tiny files
+        out = out.coalesce(max(1, n_candidates))
+    # every frame above reads data_dir (the commit refuses if another
+    # writer moved it). partition_by preserves the Hive layout (review
+    # r12): without it the committed version carries the partition column
+    # as data with no date=*/ dirs, partition pruning dies, and the next
+    # partitioned kv_upsert pays a full-table migration rewrite. Sources
+    # that insert rows must carry the partition columns (same contract as
+    # Delta MERGE). The inherited index is rebuilt on a full rewrite too,
+    # or every later merge would degrade to a full rewrite.
+    staging = commit_version(
+        target_path, out, base=data_dir, partition_by=pkeys,
+        carry=carried_files,
+    )
     from .skipping import list_data_files
 
     return {

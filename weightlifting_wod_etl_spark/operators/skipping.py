@@ -134,7 +134,7 @@ def save_stats_index(data_dir: str, cols: list[str]) -> str:
 
 
 def refresh_stats_index(
-    old_dir: str, new_dir: str, cols: list[str] | None = None
+    old_dir: str | None, new_dir: str, cols: list[str] | None = None
 ) -> str | None:
     """Maintain the persisted index across a rewrite that carried most
     files from ``old_dir`` into ``new_dir`` by reference (same relative
@@ -142,15 +142,17 @@ def refresh_stats_index(
     ``new_dir`` pay a footer read. ``cols=None`` inherits the old index's
     columns (no-op if the old table had no index — nothing promised
     pruning). Falls back to a full rebuild when the requested columns
-    differ from the old index's. Returns the written index path, or
-    ``None`` when there is nothing to maintain.
+    differ from the old index's; with no ``old_dir`` (or no old index)
+    explicit ``cols`` build the same entries as :func:`save_stats_index`.
+    Returns the written index path, or ``None`` when there is nothing to
+    maintain.
 
     This is what keeps ``io.read_pruned`` correct across incremental
     commits: a stale index naming files the new version no longer has —
     or missing its new files — would prune unsoundly, so the index is
     rewritten inside the staging dir and published by the SAME atomic
     pointer flip as the data."""
-    old = load_stats_index(old_dir) or []
+    old = (load_stats_index(old_dir) if old_dir else None) or []
     if cols is None:
         cols = index_cols(old)
         if not cols:

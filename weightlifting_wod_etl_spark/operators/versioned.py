@@ -29,7 +29,17 @@ unchanged, so every reader in the engine handles both layouts. At 100 TB
 on object storage the pointer flip maps to a single conditional PUT —
 the same commit primitive Delta's ``_last_checkpoint``/Iceberg's
 ``version-hint`` use — and old versions double as time-travel snapshots
-until GC'd (``keep_versions``).
+until GC'd: each commit keeps the ``KEEP_VERSIONS`` (= 1) versions before
+it, so a reader that resolved just before the flip can finish its scan.
+
+WRITING A VERSION: :func:`commit_version` is the one way to write one. It
+runs the whole protocol in a fixed order — commit lock, staleness check
+against the caller's read base, staging write, optional carry of unchanged
+files by hard link, skipping-index step, pointer flip — and aborts (lock
+released, staging removed) on any failure. Every versioned writer
+(``sinks.kv_upsert_parquet``, ``merge.merge_into``,
+``compact.compact_parquet``, ``zorder.zorder_write``) calls it, so crash
+and index behaviour live in one place.
 
 CONCURRENCY: the protocol assumes ONE writer per table at a time — the
 same single-writer-per-table contract Delta enforces via its log-store
@@ -53,9 +63,14 @@ import os
 import re
 import shutil
 import time
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 CURRENT_POINTER = "_CURRENT"
 _VDIR = re.compile(r"^_v(\d{6})$")
+KEEP_VERSIONS = 1  # prior versions each commit leaves on disk
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -122,15 +137,15 @@ def table_exists(path: str) -> bool:
     return os.path.isdir(path) and _contains_parquet(path)
 
 
-def verify_read_base(path: str, data_dir: str) -> None:
+def _verify_read_base(path: str, data_dir: str) -> None:
     """Guard the resolve→begin_commit window: callers resolve the table and
     build their read plans BEFORE taking the commit lock. If another writer
     committed in between, those plans are stale — committing their output
     would silently discard the other writer's changes (both existing guards
-    only cover the begin→finish span). Call AFTER ``begin_commit`` with the
-    directory the read plans were built against; raises
-    :class:`ConcurrentCommitError` on staleness (caller's abort path then
-    releases the lock)."""
+    only cover the begin→finish span). :func:`commit_version` calls it
+    after ``begin_commit`` with the directory the read plans were built
+    against; raises :class:`ConcurrentCommitError` on staleness (the abort
+    path then releases the lock)."""
     live = resolve(path)
     if live != data_dir:
         raise ConcurrentCommitError(
@@ -148,7 +163,7 @@ def current_version(path: str) -> int:
 
 def list_versions(path: str) -> list[int]:
     """Version numbers still on disk (time-travel targets), ascending.
-    Bounded by ``keep_versions`` + 1 — old snapshots are GC'd at commit."""
+    Bounded by ``KEEP_VERSIONS`` + 1 — old snapshots are GC'd at commit."""
     try:
         entries = os.listdir(path)
     except OSError:
@@ -299,23 +314,22 @@ def begin_commit(path: str) -> tuple[str, int]:
     return staging, version
 
 
-def abort_commit(path: str, version: int, *, keep_staging: bool = False) -> None:
+def abort_commit(path: str, version: int) -> None:
     """Release ``version``'s commit lock after a FAILED staging write.
 
-    Callers wrap the staging write + ``finish_commit`` in try/except and
-    call this on failure; without it, a live process whose Spark write
-    into staging raised would hold the lock until process exit, turning
-    every other writer's ``begin_commit`` into
-    :class:`ConcurrentCommitError`. Only a lock owned by THIS process is
-    released (a racer's fresh lock is never clobbered); the orphaned
-    staging dir is removed unless ``keep_staging`` (debugging). Idempotent
+    :func:`commit_version` calls this on any failure after
+    ``begin_commit``; without it, a live process whose Spark write into
+    staging raised would hold the lock until process exit, turning every
+    other writer's ``begin_commit`` into :class:`ConcurrentCommitError`.
+    Only a lock owned by THIS process is released (a racer's fresh lock
+    is never clobbered); the orphaned staging dir is removed. Idempotent
     and safe to call when the lock is already gone.
 
     If the ``_CURRENT`` pointer already names ``version`` (or later), the
     flip happened before the failure — ``_v{version}`` is LIVE data, not
     orphaned staging — so this is a no-op: rmtree'ing it would leave the
-    pointer dangling at a deleted directory. Callers wrap
-    ``finish_commit`` in the same try/except, and a ``KeyboardInterrupt``
+    pointer dangling at a deleted directory. ``finish_commit`` runs
+    inside the same try/except, and a ``KeyboardInterrupt``
     or GC-loop ``OSError`` can land after the ``os.replace``. Even then
     this process's own lock is still released (the failure can land
     between ``finish_commit``'s ``os.replace`` and its lock unlink, and
@@ -324,8 +338,7 @@ def abort_commit(path: str, version: int, *, keep_staging: bool = False) -> None
     if current_version(path) >= version:
         _release_own_lock(path, version)
         return
-    if not keep_staging:
-        shutil.rmtree(os.path.join(path, f"_v{version:06d}"), ignore_errors=True)
+    shutil.rmtree(os.path.join(path, f"_v{version:06d}"), ignore_errors=True)
     _release_own_lock(path, version)
 
 
@@ -402,7 +415,7 @@ def carry_missing_partitions(src_dir: str, dst_dir: str) -> list[str]:
     return carried
 
 
-def finish_commit(path: str, version: int, keep_versions: int = 1) -> None:
+def finish_commit(path: str, version: int) -> None:
     """Atomically make ``version`` the live one, then GC.
 
     The flip is CONDITIONAL: if ``_CURRENT`` no longer names
@@ -413,15 +426,17 @@ def finish_commit(path: str, version: int, keep_versions: int = 1) -> None:
     single ``os.replace`` of the pointer file (atomic on POSIX); data
     dirs are immutable once committed.
 
-    GC removes version dirs older than ``current - keep_versions``
+    GC removes version dirs older than ``current - KEEP_VERSIONS``
     (keeping one prior version lets an in-flight reader that resolved
     before the flip finish its scan) and, on the FIRST commit over a
     previously-plain table, the pre-versioning data — loose files AND
     partition subdirectories (``date=.../part-*.parquet``), which are the
-    old "version 0"; leaving partition dirs behind would both leak disk
-    and make a plain ``spark.read.parquet(root)`` return only stale
-    pre-migration data. GC runs only after the pointer is durably
-    flipped, so a crash during GC is harmless."""
+    old "version 0", plus the root ``_SUCCESS`` marker, plain-layout
+    index and the Hadoop ``.*.crc`` checksum sidecars of those files;
+    leaving partition dirs behind would both leak disk and make a plain
+    ``spark.read.parquet(root)`` return only stale pre-migration data.
+    GC runs only after the pointer is durably flipped, so a crash during
+    GC is harmless."""
     live = current_version(path)
     if live != version - 1:
         raise ConcurrentCommitError(
@@ -443,7 +458,7 @@ def finish_commit(path: str, version: int, keep_versions: int = 1) -> None:
     for entry in os.listdir(path):
         full = os.path.join(path, entry)
         m = _VDIR.match(entry)
-        if m and int(m.group(1)) < version - keep_versions:
+        if m and int(m.group(1)) < version - KEEP_VERSIONS:
             shutil.rmtree(full, ignore_errors=True)
         elif version - 1 == 0 and not entry.startswith(("_", ".")):
             # migrated from a plain dir: loose files and Hive partition
@@ -460,16 +475,59 @@ def finish_commit(path: str, version: int, keep_versions: int = 1) -> None:
                     os.remove(full)
                 except OSError:
                     pass
-        elif version - 1 == 0 and entry in ("_SUCCESS", "_stats_index.parquet"):
-            # pre-migration METADATA files at the root: the write marker
-            # and a plain-layout skipping index (post-migration the index
-            # lives inside the version dir). These start with "_", so the
-            # branch above never reaches them — the old
-            # `entry == "_SUCCESS"` test there was dead code and the
-            # marker leaked forever (review r12). Never touched outside
-            # the one-time migration commit; _CURRENT/_v*/.lock* don't
-            # match these exact names.
+        elif version - 1 == 0 and (
+            entry in ("_SUCCESS", "_stats_index.parquet")
+            or (entry.startswith(".") and entry.endswith(".crc"))
+        ):
+            # pre-migration METADATA files at the root: the write marker,
+            # a plain-layout skipping index (post-migration the index
+            # lives inside the version dir) and the ``.part-*.crc`` /
+            # ``._SUCCESS.crc`` sidecars Hadoop's local filesystem wrote
+            # beside the old files. These start with "_" or ".", so the
+            # branch above never reaches them. Never touched outside the
+            # one-time migration commit; _CURRENT, _v*, .lock_v* and
+            # ._CURRENT.tmp match neither rule.
             try:
                 os.remove(full)
             except OSError:
                 pass
+
+
+def commit_version(
+    path: str,
+    df: DataFrame,
+    *,
+    base: str | None = None,
+    partition_by: list[str] | None = None,
+    carry: list[str] | str | None = None,
+    index_cols: list[str] | None = None,
+) -> str:
+    """Write ``df`` as the next version of ``path``; returns the committed
+    version dir. In order: :func:`begin_commit`; refuse if the live version
+    is no longer ``base``, the dir the caller's read plans were built
+    against; write ``df`` (``partitionBy(*partition_by)`` if given); carry
+    ``base`` files by hard link — a list of them (:func:`carry_files`) or
+    ``"partitions"`` (:func:`carry_missing_partitions`); the skipping
+    index — ``index_cols`` builds it, reusing carried files' entries, and
+    ``None``/empty inherits ``base``'s (none if it has none); then
+    :func:`finish_commit`. Any failure runs :func:`abort_commit`."""
+    from .skipping import refresh_stats_index
+
+    staging, version = begin_commit(path)
+    try:
+        if base is not None:
+            _verify_read_base(path, base)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+        if carry == "partitions":
+            carry_missing_partitions(base, staging)
+        elif carry:
+            carry_files(carry, base, staging)
+        refresh_stats_index(base, staging, index_cols or None)
+        finish_commit(path, version)
+    except BaseException:
+        abort_commit(path, version)
+        raise
+    return staging

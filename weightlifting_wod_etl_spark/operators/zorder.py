@@ -98,7 +98,6 @@ def zorder_write(
     cols: list[str],
     bits: int = 16,
     num_files: int = 8,
-    save_index: bool = True,
     data_dir: str | None = None,
 ) -> None:
     """Write ``df`` as parquet clustered by the Morton key of ``cols``
@@ -110,31 +109,24 @@ def zorder_write(
     key domain, not from sampling, so the layout is identical on every
     write (the repartitionByRange version drifted with session history).
 
-    The footer-stats skipping index over the clustered columns is
-    persisted beside the data by default — the layout exists to make
-    pruning effective, so ``io.read_pruned`` should find its index ready
-    rather than re-reading footers.
+    The footer-stats skipping index over the clustered columns is always
+    persisted with the data — the layout exists to make pruning
+    effective, so ``io.read_pruned`` should find its index ready rather
+    than re-reading footers.
 
-    The write commits through the manifest-pointer protocol
-    (operators/versioned.py), same as ``compact_parquet`` and
-    ``merge_into``: the clustered layout is staged in the next version
-    dir and published by one atomic pointer flip, so re-clustering a LIVE
-    table crash-safely leaves exactly the old or exactly the new layout —
-    never a partial mix. Read results back with ``io.read_table`` /
-    ``versioned.resolve``, not a raw ``spark.read.parquet(path)``.
+    The write is one ``versioned.commit_version``, same as
+    ``compact_parquet`` and ``merge_into``, so re-clustering a LIVE table
+    leaves exactly the old or exactly the new layout. Read results back
+    with ``io.read_table`` / ``versioned.resolve``, not a raw
+    ``spark.read.parquet(path)``.
 
     ``data_dir``: when re-clustering a LIVE table (``df`` built from
     ``read_table(path)``), pass the resolved version dir those read plans
-    were built against (``versioned.resolve(path)``) — the same
-    resolve→begin_commit staleness guard compact_parquet/merge_into
-    carry. Without it a writer that committed between the read and this
-    call is silently discarded (lost update)."""
-    from .versioned import (
-        abort_commit,
-        begin_commit,
-        finish_commit,
-        verify_read_base,
-    )
+    were built against (``versioned.resolve(path)``) — the commit's read
+    base, as compact_parquet/merge_into pass theirs. Without it a writer
+    that committed between the read and this call is silently discarded
+    (lost update)."""
+    from .versioned import commit_version
 
     if "__zkey" in df.columns:
         # withColumn would silently REPLACE the user's column and the
@@ -158,16 +150,4 @@ def zorder_write(
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
     )
-    staging, version = begin_commit(path)
-    try:
-        if data_dir is not None:
-            verify_read_base(path, data_dir)
-        out.write.mode("overwrite").parquet(staging)
-        if save_index:
-            from .skipping import save_stats_index
-
-            save_stats_index(staging, cols)
-        finish_commit(path, version)
-    except BaseException:
-        abort_commit(path, version)  # failed clustering must not hold the lock
-        raise
+    commit_version(path, out, base=data_dir, index_cols=cols)

@@ -203,14 +203,14 @@ def kv_upsert_parquet(
     reference's per-record DynamoDB putItem (OP18) with deterministic
     survivor choice.
 
-    With ``partition_by``, the upsert is INCREMENTAL *and* ATOMIC: only
-    the partitions whose values appear in the incoming batch are read
-    (partition-pruned scan) and rewritten into the next version's staging
-    dir; every untouched partition is carried into the new version by
-    hard link (metadata-only — no data bytes move), and ONE pointer flip
-    publishes the whole version. A crash at any point leaves the previous
-    version fully live — never a half-overwritten partition, which the
-    old in-place ``partitionOverwriteMode=dynamic`` write could produce.
+    Every write is one ``versioned.commit_version`` (crash safety and
+    index upkeep are defined there). With ``partition_by``, the upsert is
+    INCREMENTAL: only the partitions whose values appear in the incoming
+    batch are read (partition-pruned scan) and rewritten; every untouched
+    partition is carried into the new version by hard link
+    (metadata-only — no data bytes move). A crash never leaves a
+    half-overwritten partition, which the old in-place
+    ``partitionOverwriteMode=dynamic`` write could produce.
     A daily increment against a 100 TB table still costs O(increment):
     at deployment scale the links are manifest/CopyObject operations, the
     same shape as a partition-scoped Delta replaceWhere. Keys must not
@@ -222,15 +222,7 @@ def kv_upsert_parquet(
     never by table or batch row count."""
     from functools import reduce
 
-    from .operators.versioned import (
-        abort_commit,
-        begin_commit,
-        carry_missing_partitions,
-        finish_commit,
-        resolve,
-        table_exists,
-        verify_read_base,
-    )
+    from .operators.versioned import commit_version, resolve, table_exists
 
     spark = df.sparkSession
     data_dir = resolve(path)
@@ -273,20 +265,10 @@ def kv_upsert_parquet(
                 key_cols=key_cols,
                 order_cols=[F.col(c).desc() for c in order_cols],
             )
-            staging, version = begin_commit(path)
-            try:
-                verify_read_base(path, data_dir)  # plans above read data_dir
-                winners.write.mode("overwrite").partitionBy(*partition_by).parquet(
-                    staging
-                )
-                carry_missing_partitions(data_dir, staging)
-                from .operators.skipping import refresh_stats_index
-
-                refresh_stats_index(data_dir, staging, stats_cols)
-                finish_commit(path, version)
-            except BaseException:
-                abort_commit(path, version)
-                raise
+            commit_version(
+                path, winners, base=data_dir, partition_by=partition_by,
+                carry="partitions", index_cols=stats_cols,
+            )
             return
 
     # Empty-increment guard for the full-rewrite branches: a first-write
@@ -306,37 +288,13 @@ def kv_upsert_parquet(
     winners = exact_dedup(
         merged, key_cols=key_cols, order_cols=[F.col(c).desc() for c in order_cols]
     )
-    # full rewrite (first write, or unpartitioned table) through the
-    # manifest-pointer commit (operators/versioned.py): the new version dir
-    # is written while the live one stays untouched, then one atomic
-    # pointer flip publishes it — a crash at any point leaves a complete
-    # table, and the single write replaces the old staging double-write.
-    # At cluster scale this branch is a Delta MERGE INTO keyed on key_cols.
-    staging, version = begin_commit(path)
-    try:
-        verify_read_base(path, data_dir)
-        w = winners.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(staging)
-        if stats_cols:  # skipping index commits atomically with the data
-            from .operators.skipping import save_stats_index
-
-            save_stats_index(staging, stats_cols)
-        elif existed:
-            # a default upsert over an indexed table must not DROP the
-            # persisted index (read_pruned would silently degrade to live
-            # footer scans) — same invariant compact.py enforces; no-op
-            # when the table never had one (review r11)
-            from .operators.skipping import refresh_stats_index
-
-            refresh_stats_index(data_dir, staging)
-        finish_commit(path, version)
-    except BaseException:
-        # a failed staging write must release the commit lock, or every
-        # later writer in this process's lifetime gets ConcurrentCommitError
-        abort_commit(path, version)
-        raise
+    # full rewrite (first write, or unpartitioned table) as one new
+    # version (operators/versioned.py). At cluster scale this branch is a
+    # Delta MERGE INTO keyed on key_cols.
+    commit_version(
+        path, winners, base=data_dir, partition_by=partition_by,
+        index_cols=stats_cols,
+    )
 
 
 def weekly_rollup_path(df: DataFrame, base: str, date_col: str = "date") -> str:
