@@ -180,7 +180,7 @@ def test_compact_partitioned_converges_and_no_ops_thereafter(spark, tmp_path):
 
 
 def test_compact_partitioned_oversize_warns_instead_of_silent_noop(
-    spark, tmp_path, capfd
+    spark, tmp_path, caplog
 ):
     """r13 advice (regression pin): a partitioned table without sort_by
     can only converge to one-file-per-partition-dir — when files are far
@@ -196,11 +196,11 @@ def test_compact_partitioned_oversize_warns_instead_of_silent_noop(
     ).coalesce(1).write.partitionBy("date").parquet(path)
     # 2 partition dirs; a 1-byte target makes want >> n_part_dirs * 2
     compact_parquet(spark, path, target_file_bytes=1)
-    err = capfd.readouterr().err
-    assert "cannot" in err and "sort_by" in err
+    assert "cannot" in caplog.text and "sort_by" in caplog.text
     # the sort_by path IS the remedy — same request must not warn
+    caplog.clear()
     compact_parquet(spark, path, target_file_bytes=1, sort_by=["k"])
-    assert "cannot" not in capfd.readouterr().err
+    assert "cannot" not in caplog.text
 
 
 def test_compact_explicit_sort_request_always_runs(spark, tmp_path):

@@ -1,5 +1,6 @@
-"""MERGE INTO semantics over the versioned commit layer: update, delete
-(right-to-be-forgotten), insert-only, ambiguity rejection."""
+"""MERGE INTO semantics over the versioned commit layer: upsert,
+op-aware deletes, delete_keys (right-to-be-forgotten), ambiguity
+rejection."""
 
 from __future__ import annotations
 
@@ -43,19 +44,6 @@ def test_merge_matched_delete_is_right_to_be_forgotten(spark, tmp_path):
     n = delete_keys(spark, path, keys, on=["k"])
     assert n == 1
     assert set(_rows(spark, path)) == {1, 3}
-
-
-def test_merge_insert_only_ignores_matches(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _table(spark, path, [(1, 10, "old")])
-    src = spark.createDataFrame(
-        [(1, 99, "new"), (2, 20, "new")], "k long, v long, tag string"
-    )
-    stats = merge_into(
-        spark, path, src, on=["k"], when_matched="ignore"
-    )
-    assert stats.items() >= {"matched": 1, "inserted": 1, "deleted": 0}.items()
-    assert _rows(spark, path) == {1: (10, "old"), 2: (20, "new")}
 
 
 def test_merge_rejects_ambiguous_source(spark, tmp_path):
@@ -565,10 +553,7 @@ def test_op_aware_single_merge_equals_sequential_delete_then_upsert(
 
     seq = str(tmp_path / "seq")
     base.write.parquet(seq)
-    s_del = merge_into(
-        spark, seq, deletes, on=["k"],
-        when_matched="delete", when_not_matched="ignore",
-    )
+    n_del = delete_keys(spark, seq, deletes, on=["k"])
     s_ups = merge_into(spark, seq, upserts, on=["k"])
 
     got_single = sorted(
@@ -578,7 +563,7 @@ def test_op_aware_single_merge_equals_sequential_delete_then_upsert(
         (r.k, r.v) for r in spark.read.parquet(resolve(seq)).collect()
     )
     assert got_single == got_seq == [(1, "a2"), (3, "c"), (4, "d"), (5, "e")]
-    assert stats["deleted"] == s_del["deleted"] == 1
+    assert stats["deleted"] == n_del == 1
     assert stats["matched"] == s_ups["matched"] == 1
     assert stats["inserted"] == s_ups["inserted"] == 1
 
@@ -626,8 +611,8 @@ def test_merge_total_noop_skips_commit_but_delete_miss_still_commits(
 ):
     """r19 optimization round: the empty-batch guard moved from
     cdc_apply's raw-batch inference INTO merge_into — a merge with no
-    source rows and no delete keys is a TOTAL no-op in every clause mode
-    (out == target exactly) and must not mint a version, on an existing
+    source rows and no delete keys is a TOTAL no-op (out == target
+    exactly) and must not mint a version, on an existing
     table or a fresh path. A delete of an ABSENT key is NOT a no-op by
     this rule (n_del_keys > 0): it commits a version exactly as before
     the change, pinning that the skip fires only on collapsed-empty
@@ -672,7 +657,7 @@ def test_merge_total_noop_skips_commit_but_delete_miss_still_commits(
     assert _rows(spark, path) == {1: (10, "old"), 2: (20, "new")}
 
 
-def _brute_merge(target, source, when_matched, when_not_matched, deletes):
+def _brute_merge(target, source, deletes):
     """Row-by-row MERGE under SQL key equality, where a NULL key matches
     nothing: the recount both the returned stats and the committed rows
     must equal. Rows are (k, ...) tuples keyed on k."""
@@ -680,75 +665,58 @@ def _brute_merge(target, source, when_matched, when_not_matched, deletes):
         return k is not None and k in keys
 
     src_keys = {r[0] for r in source}
-    del_keys = set(deletes)
     tgt_keys = {r[0] for r in target}
     matched = [r for r in target if hit(r[0], src_keys)]
     src_matched = [r for r in source if hit(r[0], tgt_keys)]
-    src_unmatched = [r for r in source if not hit(r[0], tgt_keys)]
-    inserted = src_unmatched if when_not_matched == "insert" else []
-    keep = [
-        r
-        for r in target
-        if not (when_matched != "ignore" and hit(r[0], src_keys))
-        and not hit(r[0], del_keys)
-    ]
-    updated = src_matched if when_matched == "update" else []
+    keep = [r for r in target if not hit(r[0], src_keys | set(deletes))]
     stats = {
         "matched": len(matched),
-        "inserted": len(inserted),
-        "deleted": (len(matched) if when_matched == "delete" else 0)
-        + sum(hit(r[0], del_keys) for r in target),
-        "dup_target_rows_collapsed": (
-            len(matched) - len(src_matched) if when_matched == "update" else 0
-        ),
+        "inserted": len(source) - len(src_matched),
+        "deleted": sum(hit(r[0], set(deletes)) for r in target),
+        "dup_target_rows_collapsed": len(matched) - len(src_matched),
     }
-    return stats, sorted(keep + updated + inserted, key=repr)
+    return stats, sorted(keep + list(source), key=repr)
 
 
 @pytest.mark.parametrize(
-    "source, when_matched, when_not_matched, deletes",
+    "source, deletes",
     [
-        ([(None, 99, "s"), (2, 21, "s")], "update", "insert", None),
-        ([(None, 98, "s"), (None, 99, "t"), (2, 21, "s")], "update", "insert", None),
-        ([(None, 0, "x"), (1, 0, "x")], "delete", "ignore", None),
-        ([(None,), (2,)], "delete_keys", "ignore", None),
-        ([(3, 30, "s")], "update", "insert", [None]),
+        ([(None, 99, "s"), (2, 21, "s")], None),
+        ([(None, 98, "s"), (None, 99, "t"), (2, 21, "s")], None),
+        ([], [None, 1]),
+        (None, [None, 2]),  # source None: through delete_keys()
+        ([(3, 30, "s")], [None]),
+        ([(None, 5, "s"), (2, 21, "s")], [None]),
     ],
     ids=[
         "upsert", "two_null_key_sources", "matched_delete", "delete_keys",
-        "op_aware_delete",
+        "op_aware_delete", "null_source_and_null_delete",
     ],
 )
 def test_merge_stats_with_null_key_target_rows_match_brute_force(
-    spark, tmp_path, source, when_matched, when_not_matched, deletes
+    spark, tmp_path, source, deletes
 ):
     """ADVICE r19: the key-stats union groupBy put NULL source keys in
     the same group as NULL target keys, so a NULL-key row merged into a
     table already holding NULL-key rows reported them as matched — while
-    the null-unsafe clause joins inserted it as a new row and left the
+    the null-unsafe key joins inserted it as a new row and left the
     target rows in place. matched/inserted/deleted, delete_keys() and
     dup_target_rows_collapsed were all inflated."""
     target = [(None, 1, "n1"), (None, 2, "n2"), (1, 10, "a"), (2, 20, "b")]
     path = str(tmp_path / "t")
     _table(spark, path, target)
-    if when_matched == "delete_keys":
-        keys = spark.createDataFrame(source, "k long")
-        stats = {"deleted": delete_keys(spark, path, keys, on=["k"])}
-        when_matched = "delete"
+    dels = (
+        None
+        if deletes is None
+        else spark.createDataFrame([(k,) for k in deletes], "k long")
+    )
+    if source is None:
+        stats = {"deleted": delete_keys(spark, path, dels, on=["k"])}
+        source = []
     else:
         src = spark.createDataFrame(source, "k long, v long, tag string")
-        dels = (
-            None
-            if deletes is None
-            else spark.createDataFrame([(k,) for k in deletes], "k long")
-        )
-        stats = merge_into(
-            spark, path, src, on=["k"], when_matched=when_matched,
-            when_not_matched=when_not_matched, deletes=dels,
-        )
-    want_stats, want_rows = _brute_merge(
-        target, source, when_matched, when_not_matched, deletes or []
-    )
+        stats = merge_into(spark, path, src, on=["k"], deletes=dels)
+    want_stats, want_rows = _brute_merge(target, source, deletes or [])
     shared = stats.keys() & want_stats.keys()
     assert {k: stats[k] for k in shared} == {k: want_stats[k] for k in shared}
     got = sorted(map(tuple, read_table(spark, path).collect()), key=repr)

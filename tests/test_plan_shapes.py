@@ -16,12 +16,16 @@ from contextlib import contextmanager
 @contextmanager
 def _fanout_off(spark):
     """Build plans as they would look on properly-split (production)
-    input, where the §2.5 fan-out guard never fires."""
-    spark.conf.set("spark.wod_etl.scan_fanout", "false")
-    try:
+    input, where the §2.5 fan-out guard never fires: every scan reports
+    ``defaultParallelism`` achievable splits."""
+    import pytest
+
+    from weightlifting_wod_etl_spark import io
+
+    parallelism = spark.sparkContext.defaultParallelism
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(io, "achievable_scan_splits", lambda path: parallelism)
         yield
-    finally:
-        spark.conf.set("spark.wod_etl.scan_fanout", "true")
 
 
 def test_q6_filters_pushed_to_scan(spark, sf_dir):
@@ -205,7 +209,7 @@ def test_pii_and_repetition_are_scan_local(spark, sf_dir):
     """PII redaction and intra-doc repetition are pure projections —
     zero Exchanges; at 100 TB they fuse into the scan stage. The r18
     §2.5 fan-out guard never fires on properly-split input, so the
-    100 TB shape is the plan under ``scan_fanout=false`` (production
+    100 TB shape is the plan built under ``_fanout_off`` (production
     inputs have row groups >= cores; the testdata has one)."""
     from weightlifting_wod_etl_spark.queries_registry import QUERIES
 
@@ -281,8 +285,8 @@ def test_no_query_plans_python_row_udfs_or_cartesian(spark, sf_dir):
 def test_trigram_entropy_is_shuffle_free(spark, sf_dir):
     """The per-row run-length fold must plan ZERO exchanges — the whole
     point vs the explode+groupBy shape that shuffles one row per corpus
-    character. 100 TB shape pinned under ``scan_fanout=false`` (the
-    §2.5 guard never fires on properly-split input)."""
+    character. 100 TB shape pinned under ``_fanout_off`` (the §2.5
+    guard never fires on properly-split input)."""
     from weightlifting_wod_etl_spark.queries_registry import QUERIES
 
     with _fanout_off(spark):
@@ -293,9 +297,9 @@ def test_trigram_entropy_is_shuffle_free(spark, sf_dir):
 
 def test_scan_fanout_is_adaptive_not_constant(spark, sf_dir, tmp_path):
     """The §2.5 unsplittable-input guard must (a) fire as a round-robin
-    Exchange when achievable splits < parallelism, (b) disappear under
-    the conf kill-switch, and (c) count real row groups so that a
-    well-split production input never pays it."""
+    Exchange when achievable splits < parallelism, (b) disappear when
+    the input reports as many splits as parallelism, and (c) count real
+    row groups so that a well-split production input never pays it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -308,7 +312,7 @@ def test_scan_fanout_is_adaptive_not_constant(spark, sf_dir, tmp_path):
     df = load_table(spark, sf_dir, "documents", fan_out=True)
     assert "roundrobinpartitioning" in _plan(df).lower()
 
-    # (b) kill-switch removes it (the 100 TB plan shape)
+    # (b) properly-split input never pays it (the 100 TB plan shape)
     with _fanout_off(spark):
         df_off = load_table(spark, sf_dir, "documents", fan_out=True)
         assert "Exchange" not in _plan(df_off)

@@ -469,66 +469,67 @@ def test_interval_join_matches_bruteforce(spark, left, right, delay):
     assert got == want
 
 
+_KEY = st.one_of(st.none(), st.integers(0, 7))
+
+
 @given(
-    base=st.lists(
-        st.tuples(st.integers(0, 5), st.integers(0, 99)), min_size=0, max_size=12
-    ),
+    base=st.lists(st.tuples(_KEY, st.integers(0, 99)), min_size=0, max_size=12),
     source=st.dictionaries(
         st.integers(0, 7), st.integers(100, 199), min_size=0, max_size=8
     ),
-    when_matched=st.sampled_from(["update", "delete", "ignore"]),
-    when_not_matched=st.sampled_from(["insert", "ignore"]),
+    null_sources=st.lists(st.integers(100, 199), min_size=0, max_size=2),
+    deletes=st.sets(_KEY, min_size=0, max_size=4),
+    pass_deletes=st.booleans(),
 )
 @settings(**_SETTINGS)
 def test_merge_into_matches_dict_model(
-    spark, tmp_path_factory, base, source, when_matched, when_not_matched
+    spark, tmp_path_factory, base, source, null_sources, deletes, pass_deletes
 ):
-    """MERGE INTO vs a four-line reference model on randomized inputs:
-    tiny key domains force duplicate target keys, empty sides, full
-    overlap, and no overlap — the clause-combination edges the fixed
-    merge tests enumerate only partially."""
+    """MERGE INTO vs a dict model on randomized inputs: tiny key domains
+    force duplicate target keys, empty sides, full overlap and no
+    overlap; NULL keys on every side (target rows, source rows, delete
+    keys) match nothing under SQL key equality. All four returned counts
+    and the committed rows must equal the model's."""
     from weightlifting_wod_etl_spark.io import read_table
     from weightlifting_wod_etl_spark.operators.merge import merge_into
 
     path = str(tmp_path_factory.mktemp("merge_prop") / "t")
     if base:
         spark.createDataFrame(base, "k long, v long").write.parquet(path)
-
-    src = spark.createDataFrame(
-        sorted(source.items()) or [(None, None)], "k long, v long"
-    ).filter("k IS NOT NULL")
-    stats = merge_into(
-        spark, path, src, on=["k"],
-        when_matched=when_matched, when_not_matched=when_not_matched,
+    # keys must be unique across source and deletes (the merge rejects
+    # the ambiguity), so a delete key never names a source key
+    deletes = {k for k in deletes if k not in source} if pass_deletes else set()
+    src_rows = sorted(source.items()) + [(None, v) for v in null_sources]
+    src = spark.createDataFrame(src_rows, "k long, v long")
+    dels = (
+        spark.createDataFrame([(k,) for k in deletes], "k long")
+        if pass_deletes
+        else None
     )
+    stats = merge_into(spark, path, src, on=["k"], deletes=dels)
 
-    target_keys = {k for k, _ in base}
-    expect = []
-    if when_matched == "ignore":
-        expect += base
-    else:  # update and delete both remove matched target rows
-        expect += [(k, v) for k, v in base if k not in source]
-    if when_matched == "update":
-        expect += [(k, v) for k, v in source.items() if k in target_keys]
-    if when_not_matched == "insert":
-        expect += [(k, v) for k, v in source.items() if k not in target_keys]
+    # the model: NULL matches nothing, so only non-NULL keys address rows
+    target_keys = {k for k, _ in base if k is not None}
+    del_keys = deletes - {None}
+    expect = [
+        (k, v) for k, v in base if k not in source and k not in del_keys
+    ] + src_rows
+    matched = sum(1 for k, _ in base if k in source)
+    src_matched = sum(1 for k in source if k in target_keys)
+    assert stats["matched"] == matched
+    assert stats["inserted"] == len(src_rows) - src_matched
+    assert stats["deleted"] == sum(1 for k, _ in base if k in del_keys)
+    assert stats["dup_target_rows_collapsed"] == matched - src_matched
 
     import os
 
     if os.path.exists(path):
-        got = sorted((r.k, r.v) for r in read_table(spark, path).collect())
+        got = sorted(
+            ((r.k, r.v) for r in read_table(spark, path).collect()), key=repr
+        )
     else:
-        got = []  # everything-ignore on a fresh path writes nothing
-    assert got == sorted(expect)
-    if (when_matched, when_not_matched) == ("ignore", "ignore"):
-        # nothing can change: the operator short-circuits without a scan
-        assert stats == {"matched": 0, "inserted": 0, "deleted": 0}
-    else:
-        assert stats["matched"] == sum(1 for k, _ in base if k in source)
-        if when_not_matched == "insert":
-            assert stats["inserted"] == sum(
-                1 for k in source if k not in target_keys
-            )
+        got = []  # an empty batch on a fresh path commits nothing
+    assert got == sorted(expect, key=repr)
 
 
 @given(

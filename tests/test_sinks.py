@@ -52,7 +52,7 @@ def test_jsonl_fail_open_on_corrupt_ledger(spark, tmp):
     with open(os.path.join(ledger, "garbage.parquet"), "w") as f:
         f.write("not parquet")
     # reference §2.3-7: infra failure must NOT block the write
-    assert write_jsonl_idempotent(df, out, ledger, fail_open=True) == 3
+    assert write_jsonl_idempotent(df, out, ledger) == 3
 
 
 def test_kv_upsert_last_writer_wins(spark, tmp):
@@ -301,92 +301,60 @@ def test_weekly_rollup_path_empty_batch_raises(spark, tmp):
 
 
 def test_jsonl_idempotent_preserves_existing_ledger_key_type(spark, tmp):
-    """Review r12 (reproduced): the NULL-key content fallback cast every
-    key to string, so one run against a pre-existing LONG-typed ledger
-    appended string parquet files into the long dir — a mixed-schema
-    ledger that crashed every later run outside fail_open's guard. The
-    fallback's type now follows the ledger's stored type."""
+    """The ledger holds string (sha256 hex) keys only. A pre-existing
+    ledger with integral keys is refused with ValueError BEFORE anything
+    is written: appending string keys into it would leave a mixed-schema
+    ledger no later run can read."""
     import os
 
-    from weightlifting_wod_etl_spark.sinks import write_jsonl_idempotent
+    import pytest
 
-    path = os.path.join(tmp, "ltype_out")
-    ledger = os.path.join(tmp, "ltype_ledger")
-    # seed a pre-r12-style LONG-typed ledger
-    spark.createDataFrame([(12345,)], "idem_key long").write.parquet(ledger)
+    from weightlifting_wod_etl_spark.sinks import write_jsonl_idempotent
 
     batch = spark.createDataFrame(
         [(1, "a"), (None, "n1"), (None, "n2")],
         "idem_key long, payload string",
     )
-    n1 = write_jsonl_idempotent(batch, path, ledger)
-    assert n1 == 3  # key 1 + two distinct NULL-key payloads
-    # replay must be suppressible — i.e. the ledger is still READABLE
-    # as one schema and the content keys match deterministically
-    n2 = write_jsonl_idempotent(batch, path, ledger)
-    assert n2 == 0
-    lt = spark.read.parquet(ledger)
-    assert dict(lt.dtypes)["idem_key"] == "bigint"  # type never corrupted
-    assert lt.count() == 4  # seed + 3 new keys
+    for ltype in ("long", "int"):
+        path = os.path.join(tmp, f"{ltype}_out")
+        ledger = os.path.join(tmp, f"{ltype}_ledger")
+        spark.createDataFrame([(7,)], f"idem_key {ltype}").write.parquet(ledger)
+        with pytest.raises(ValueError, match="only string"):
+            write_jsonl_idempotent(batch, path, ledger)
+        assert not os.path.exists(path)  # nothing written
+        lt = spark.read.parquet(ledger)
+        assert lt.dtypes == [("idem_key", "bigint" if ltype == "long" else "int")]
+        assert lt.count() == 1
 
 
 def test_jsonl_idempotent_casts_wider_keys_to_ledger_type(spark, tmp):
-    """Review r13 advice: the integral fallback cast only the content
-    hash to the ledger's stored type; a LONG-keyed batch against an
-    INT-typed ledger still appended bigint parquet files into the int
-    dir — the same mixed-schema wedge the r12 fix closed for strings.
-    The whole coalesced key now casts to the ledger type; a real key
-    that overflows the narrower type raises loudly instead of wrapping
-    (a wrapped key silently changes identity)."""
+    """Integral batch keys of any width are cast to the ledger's string
+    type on the way in: a fresh ledger is string-typed, a replay
+    suppresses, and an INT-keyed batch carrying the same key values as
+    an earlier LONG-keyed one matches the same ledger entries instead of
+    widening or splitting the ledger's schema."""
     import os
-
-    import pytest
 
     from weightlifting_wod_etl_spark.sinks import write_jsonl_idempotent
 
-    path = os.path.join(tmp, "itype_out")
-    ledger = os.path.join(tmp, "itype_ledger")
-    spark.createDataFrame([(7,)], "idem_key int").write.parquet(ledger)
-
-    batch = spark.createDataFrame(
-        [(1, "a"), (None, "n1")], "idem_key long, payload string"
+    path = os.path.join(tmp, "wide_out")
+    ledger = os.path.join(tmp, "wide_ledger")
+    wide = spark.createDataFrame(
+        [(1, "a"), (2**40, "big"), (None, "n1")],
+        "idem_key long, payload string",
     )
-    assert write_jsonl_idempotent(batch, path, ledger) == 2
-    assert write_jsonl_idempotent(batch, path, ledger) == 0  # replayable
+    assert write_jsonl_idempotent(wide, path, ledger) == 3
+    assert write_jsonl_idempotent(wide, path, ledger) == 0  # replayable
+    assert spark.read.parquet(ledger).dtypes == [("idem_key", "string")]
+
+    narrow = spark.createDataFrame(
+        [(1, "a"), (3, "c")], "idem_key int, payload string"
+    )
+    assert write_jsonl_idempotent(narrow, path, ledger) == 1  # only key 3
     lt = spark.read.parquet(ledger)
-    assert dict(lt.dtypes)["idem_key"] == "int"  # never widened on disk
-    assert lt.count() == 3
-
-    over = spark.createDataFrame(
-        [(2**40, "big")], "idem_key long, payload string"
-    )
-    with pytest.raises(Exception, match="exceeds the existing ledger"):
-        write_jsonl_idempotent(over, path, ledger)
+    assert lt.dtypes == [("idem_key", "string")]
+    assert sorted(r.idem_key for r in lt.collect() if len(r.idem_key) < 64) == [
+        "1", "1099511627776", "3",
+    ]
 
 
-def test_jsonl_idempotent_raises_on_unparseable_key_for_integral_ledger(spark, tmp):
-    """Round-diff review r13: a string key that does not parse as the
-    ledger's integral type became NULL under the ANSI-off cast — every
-    such row collapsed onto one NULL ledger key and deduped to a single
-    survivor (silent data loss). It must fail loudly instead; numeric
-    strings still parse and write."""
-    import os
-
-    import pytest
-
-    from weightlifting_wod_etl_spark.sinks import write_jsonl_idempotent
-
-    path = os.path.join(tmp, "strkey_out")
-    ledger = os.path.join(tmp, "strkey_ledger")
-    spark.createDataFrame([(7,)], "idem_key long").write.parquet(ledger)
-
-    ok = spark.createDataFrame(
-        [("123", "a"), (None, "n1")], "idem_key string, payload string"
-    )
-    assert write_jsonl_idempotent(ok, path, ledger) == 2  # numeric parses
-
-    bad = spark.createDataFrame(
-        [("abc", "x"), ("def", "y")], "idem_key string, payload string"
-    )
-    with pytest.raises(Exception, match="does not parse"):
-        write_jsonl_idempotent(bad, path, ledger)

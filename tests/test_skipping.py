@@ -262,135 +262,81 @@ def test_read_pruned_rebuilds_on_incomplete_index(spark, tmp_path):
     assert got == full == 200  # both copies visible — nothing dropped
 
 
-def test_clustered_scratch_copy_builds_once_and_gcs_stale_generations(
-    spark, tmp_path, monkeypatch
-):
-    """Review r12: the inline q_pruned_scan fixture builder leaked one
-    clustered scratch copy per (sf_dir, testdata generation) into tempdir
-    forever, plus crashed builders' .tmp.<pid> staging dirs. The
-    extracted operator must (a) reuse an existing build, (b) rebuild
-    into a NEW dir when the source bytes change, (c) GC the stale
-    generation and orphaned staging dirs, (d) never touch the live
-    generation's own staging."""
+def test_clustered_scratch_copy_builds_once(spark, tmp_path):
+    """The clustered copy is a build-once fixture: a second call returns
+    the same dir without rewriting it, and a regenerated source (new
+    size/mtime) builds a fresh copy holding the new rows."""
     import os
-    import time
 
+    from weightlifting_wod_etl_spark.io import scratch_dir
     from weightlifting_wod_etl_spark.operators.skipping import (
         clustered_scratch_copy,
+        list_data_files,
+        load_stats_index,
     )
 
-    tmp_root = str(tmp_path / "tmproot")
-    os.makedirs(tmp_root)
-    monkeypatch.setenv("TMPDIR", tmp_root)
-    import tempfile
+    sf = str(tmp_path / "sf")
+    src = os.path.join(sf, "orders.parquet")
 
-    tempfile.tempdir = None  # force re-read of TMPDIR
-    try:
-        sf = str(tmp_path / "sf")
-        os.makedirs(sf)
-        spark.range(50).selectExpr(
+    def write_source(n):
+        spark.range(n).selectExpr(
             "id AS o_orderkey",
             "timestamp '1996-01-01' + make_interval(0,0,0,cast(id as int)) AS o_orderdate",
             "cast(id * 2 as double) AS o_totalprice",
-        ).write.parquet(os.path.join(sf, "orders.parquet"))
+        ).write.mode("overwrite").parquet(src)
 
-        kw = dict(
-            select_cols=["o_orderdate", "o_totalprice"],
-            cluster_col="o_orderdate",
-            prefix="wod_test_csc",
-        )
-        d1 = clustered_scratch_copy(spark, sf, "orders", **kw)
-        assert os.path.exists(os.path.join(d1, "_BUILT"))
-        mtime1 = os.path.getmtime(os.path.join(d1, "_BUILT"))
-        # second call reuses, does not rebuild
-        assert clustered_scratch_copy(spark, sf, "orders", **kw) == d1
-        assert os.path.getmtime(os.path.join(d1, "_BUILT")) == mtime1
+    kw = dict(select_cols=["o_orderdate", "o_totalprice"], cluster_col="o_orderdate")
+    write_source(50)
+    d1 = clustered_scratch_copy(spark, sf, "orders", **kw)
+    assert os.path.dirname(d1) == scratch_dir()
+    files1 = {f: os.stat(f).st_mtime_ns for f in list_data_files(d1)}
+    assert files1 and load_stats_index(d1)
+    # second call reuses the build: same dir, files untouched
+    assert clustered_scratch_copy(spark, sf, "orders", **kw) == d1
+    assert {f: os.stat(f).st_mtime_ns for f in list_data_files(d1)} == files1
 
-        # orphaned staging dir from a "crashed" builder of generation 1 —
-        # backdated past the liveness window (a FRESH .tmp dir is spared:
-        # it may belong to a live concurrent builder, review r12)
-        orphan = d1 + ".tmp.99999"
-        os.makedirs(orphan)
-        old = time.time() - 7200
-        os.utime(orphan, (old, old))
-        fresh_live = d1 + ".tmp.88888"
-        os.makedirs(fresh_live)
-
-        # regenerate the source -> new fingerprint
-        time.sleep(0.05)
-        spark.range(60).selectExpr(
-            "id AS o_orderkey",
-            "timestamp '1996-01-01' + make_interval(0,0,0,cast(id as int)) AS o_orderdate",
-            "cast(id * 3 as double) AS o_totalprice",
-        ).write.mode("overwrite").parquet(os.path.join(sf, "orders.parquet"))
-        d2 = clustered_scratch_copy(spark, sf, "orders", **kw)
-        assert d2 != d1
-        assert os.path.exists(os.path.join(d2, "_BUILT"))
-        # the aged orphan staging is gone; the fresh (possibly-live)
-        # staging survives; the stale PUBLISHED generation d1 is
-        # DEFERRED one generation (r13 advice: a long-running reader may
-        # still be mid-scan of it — mtime can't see readers, so the
-        # newest stale generation gets a full generation of grace)
-        assert os.path.exists(d1)
-        assert not os.path.exists(orphan)
-        assert os.path.exists(fresh_live)
-
-        # regenerate AGAIN: d1 is no longer the newest stale generation
-        # and is finally reclaimed; d2 becomes the deferred one
-        time.sleep(0.05)
-        spark.range(70).selectExpr(
-            "id AS o_orderkey",
-            "timestamp '1997-01-01' + make_interval(0,0,0,cast(id as int)) AS o_orderdate",
-            "cast(id * 5 as double) AS o_totalprice",
-        ).write.mode("overwrite").parquet(os.path.join(sf, "orders.parquet"))
-        d3 = clustered_scratch_copy(spark, sf, "orders", **kw)
-        assert d3 not in (d1, d2)
-        assert not os.path.exists(d1)
-        assert os.path.exists(d2)
-    finally:
-        tempfile.tempdir = None
+    write_source(60)  # regenerate the source: new size/mtime
+    d2 = clustered_scratch_copy(spark, sf, "orders", **kw)
+    assert d2 != d1
+    assert spark.read.parquet(d2).count() == 60
 
 
-def test_source_fingerprint_is_order_invariant_and_path_keyed(tmp_path):
-    """Review r14: the fingerprint must hash a SORTED walk of relative
-    paths — the inline predecessor used os.walk's unsorted dir order and
-    basenames only, so (a) the same bytes could fingerprint differently
-    between runs (spawning a spurious generation each time), and (b) two
-    same-named files in different subdirs were indistinguishable, so
-    swapping their contents kept the fingerprint and served a stale
-    clustered copy."""
+_FIXTURE_RUN = r"""
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from weightlifting_wod_etl_spark.io import scratch_dir
+from weightlifting_wod_etl_spark.queries_registry import QUERIES
+from weightlifting_wod_etl_spark.session import get_spark
+
+spark = get_spark(app_name="wod-etl-scratch", cpus=2, shuffle_partitions=4)
+for name in ("q_cdc_apply", "q_pruned_scan"):
+    assert QUERIES[name](spark, sys.argv[2]).count() > 0, name
+assert sorted(os.listdir(scratch_dir())), "fixtures built nothing"
+print(scratch_dir(), flush=True)
+spark.stop()
+"""
+
+
+def test_query_fixtures_leave_no_scratch_dirs(tmp_path, sf_dir):
+    """q_cdc_apply and q_pruned_scan build scratch tables; a process that
+    ran both must leave no ``wod_etl_*`` dir in the temp dir once it
+    exits (they used to leak one dir per process / per source dir)."""
     import os
-    import shutil
+    import subprocess
+    import sys
 
-    from weightlifting_wod_etl_spark.operators.skipping import (
-        _source_fingerprint,
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = {**os.environ, "TMPDIR": str(tmp), "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", _FIXTURE_RUN, repo, sf_dir],
+        env=env, capture_output=True, text=True, timeout=600,
     )
-
-    src = tmp_path / "t.parquet"
-    (src / "a=1").mkdir(parents=True)
-    (src / "a=2").mkdir()
-    (src / "a=1" / "part-0.parquet").write_bytes(b"xx")
-    (src / "a=2" / "part-0.parquet").write_bytes(b"yyy")
-    fp1 = _source_fingerprint(str(src))
-    assert fp1 == _source_fingerprint(str(src))  # deterministic
-
-    # same basenames, same sizes, same mtimes — but files live in
-    # SWAPPED subdirs: a basename-keyed fingerprint cannot tell these
-    # apart; the relpath-keyed one must
-    swapped = tmp_path / "s.parquet"
-    shutil.copytree(src, swapped)
-    a1 = swapped / "a=1" / "part-0.parquet"
-    a2 = swapped / "a=2" / "part-0.parquet"
-    tmp = swapped / "hold"
-    a1.rename(tmp)
-    a2.rename(a1)
-    tmp.rename(a2)
-    # equalize mtimes so only the path→size mapping differs
-    st = os.stat(src / "a=1" / "part-0.parquet")
-    for p in [src / "a=1" / "part-0.parquet", src / "a=2" / "part-0.parquet",
-              a1, a2]:
-        os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
-    assert _source_fingerprint(str(src)) != _source_fingerprint(str(swapped))
+    assert out.returncode == 0, out.stderr[-2000:]
+    used = out.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(used) == str(tmp)  # the fixtures did use TMPDIR
+    assert [e for e in os.listdir(tmp) if e.startswith("wod_etl_")] == []
 
 
 def test_compact_empty_table_is_a_noop(spark, tmp_path):

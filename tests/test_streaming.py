@@ -1109,11 +1109,11 @@ def test_cdc_apply_null_key_changes_are_replay_idempotent(spark, tmp_path):
     assert rows == [(1, "base"), (2, "ins")]  # no NULL-key duplicates ever
 
 
-def test_cdc_apply_null_key_drop_is_counted_on_stderr(spark, tmp_path, capfd):
+def test_cdc_apply_null_key_drop_is_counted_on_stderr(spark, tmp_path, caplog):
     """r13 advice (regression pin): NULL-key change rows are dropped as
     unaddressable, but a corrupted feed silently shrinking is hard to
     detect downstream — the drop must be COUNTED and logged per batch.
-    Asserts the stderr line carries the batch id and the exact count."""
+    Asserts the warning carries the batch id and the exact count."""
     import os
 
     from weightlifting_wod_etl_spark.streaming.cdc_apply import make_cdc_apply
@@ -1126,19 +1126,19 @@ def test_cdc_apply_null_key_drop_is_counted_on_stderr(spark, tmp_path, capfd):
     )
     apply_batch = make_cdc_apply(target, on=["k"], seq_col="seq", op_col="op")
     apply_batch(batch, 7)
-    err = capfd.readouterr().err
-    assert "batch 7 dropped 2 NULL-key change row(s)" in err
+    assert "batch 7 dropped 2 NULL-key change row(s)" in caplog.text
     # a clean batch must NOT log — the counter is a corruption signal,
     # not per-batch noise
     clean = spark.createDataFrame(
         [(3, "U", 1, "c")], "k long, op string, seq long, v string"
     )
+    caplog.clear()
     apply_batch(clean, 8)
-    assert "batch 8" not in capfd.readouterr().err
+    assert "batch 8" not in caplog.text
 
 
 def test_cdc_apply_null_key_drop_is_logged_when_merge_raises(
-    spark, tmp_path, capfd, monkeypatch
+    spark, tmp_path, caplog, monkeypatch
 ):
     """ADVICE r19: the NULL-key drop count was printed only after a
     successful merge, so a batch whose commit failed lost the feed-
@@ -1165,7 +1165,7 @@ def test_cdc_apply_null_key_drop_is_logged_when_merge_raises(
     apply_batch = make_cdc_apply(target, on=["k"], seq_col="seq", op_col="op")
     with pytest.raises(OSError, match="planted commit failure"):
         apply_batch(batch, 3)
-    assert "batch 3 dropped 1 NULL-key change row(s)" in capfd.readouterr().err
+    assert "batch 3 dropped 1 NULL-key change row(s)" in caplog.text
 
 
 def test_dedup_stream_batch_fallback_tolerates_map_column(spark):

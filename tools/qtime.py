@@ -4,7 +4,6 @@ Usage:
     python tools/qtime.py q_foo q_bar            # min-of-N noop timing
     python tools/qtime.py --plan out_dir q_foo   # also write explain("formatted")
     python tools/qtime.py --runs 5 q_foo
-    python tools/qtime.py --conf spark.wod_etl.scan_fanout=false q_foo
 
 Same methodology as bench.py's min-of-N timings: frame built once,
 N noop-sink re-executions, report min (and all samples). Reads

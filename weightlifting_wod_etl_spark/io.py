@@ -10,13 +10,18 @@ pruning on the hot keys.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
 # serializes the nanosAsLong set→infer→unset window in load_table
 _NANOS_CONF_LOCK = threading.Lock()
+_SCRATCH_LOCK = threading.Lock()
+_scratch: str | None = None
 
 TABLES = (
     "region",
@@ -36,6 +41,20 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def scratch_dir() -> str:
+    """This process's scratch directory for query fixtures (scratch
+    tables a query builds before it reads them): one
+    ``tempfile.mkdtemp(prefix="wod_etl_")``, created on first use and
+    removed at interpreter exit. No other process sees it, so fixtures
+    under it need no cross-process naming, locking or GC."""
+    global _scratch
+    with _SCRATCH_LOCK:
+        if _scratch is None:
+            _scratch = tempfile.mkdtemp(prefix="wod_etl_")
+            atexit.register(shutil.rmtree, _scratch, True)
+        return _scratch
 
 
 # achievable_scan_splits is immutable per path for the static testdata;
@@ -94,15 +113,7 @@ def fan_out_unsplittable(spark: SparkSession, df: DataFrame, path: str) -> DataF
     benefit; a cheap map feeding an immediate aggregation loses more to
     the extra exchange than it gains (measured r18 A/B: q_tpch_q21
     0.45x, q_hll_bound 0.61x with a blanket fan-out — vs q_trigram_entropy
-    8x, q_date_extract 4.2x with a targeted one).
-    Disable with ``spark.wod_etl.scan_fanout=false`` (plan-shape tests
-    pin the 100 TB zero-exchange shapes under that setting)."""
-    try:
-        enabled = spark.conf.get("spark.wod_etl.scan_fanout", "true")
-    except Exception:
-        enabled = "true"
-    if enabled != "true":
-        return df
+    8x, q_date_extract 4.2x with a targeted one)."""
     target = spark.sparkContext.defaultParallelism
     if achievable_scan_splits(path) >= target:
         return df

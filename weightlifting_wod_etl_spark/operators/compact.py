@@ -19,12 +19,15 @@ commit.
 
 from __future__ import annotations
 
+import logging
 import math
 import os
 
 from pyspark.sql import SparkSession
 
 from .versioned import commit_version, resolve
+
+log = logging.getLogger(__name__)
 
 
 def dir_stats(path: str) -> tuple[int, int]:
@@ -122,15 +125,15 @@ def compact_parquet(
             # sort_by path, whose range partitioning CAN split within a
             # partition. 2× threshold: one file modestly over target is
             # normal packing slack, not actionable debt.
-            import sys
-
-            print(
-                f"compact_parquet: {data_dir} holds ~{total / 2**20:.0f} MiB "
-                f"across {n_part_dirs} partition dirs (~{want} files at "
-                f"target size) — the default partitioned compact cannot "
-                "split within a partition; pass sort_by to split oversized "
-                "partitions",
-                file=sys.stderr,
+            log.warning(
+                "compact_parquet: %s holds ~%.0f MiB across %d partition "
+                "dirs (~%d files at target size) — the default partitioned "
+                "compact cannot split within a partition; pass sort_by to "
+                "split oversized partitions",
+                data_dir,
+                total / 2**20,
+                n_part_dirs,
+                want,
             )
     else:
         ideal = want

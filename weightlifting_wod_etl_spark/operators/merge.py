@@ -1,30 +1,33 @@
 """MERGE INTO for parquet tables — Delta/Iceberg merge semantics on top
 of the manifest-pointer commit protocol (operators/versioned.py).
 
-One join-based rewrite implements the three clauses:
+One form, the CDC upsert with op-aware deletes:
 
     MERGE INTO target USING source ON <keys>
-    WHEN MATCHED THEN UPDATE | DELETE
+    WHEN MATCHED AND <key in deletes> THEN DELETE
+    WHEN MATCHED THEN UPDATE
     WHEN NOT MATCHED THEN INSERT
 
-``sinks.kv_upsert_parquet`` is the update+insert special case with a
-version column choosing the survivor; this operator is the general form,
-including the matched-DELETE clause — the right-to-be-forgotten path a
-training-data pipeline must run at 100 TB (delete every document of a
+so the new table is ``target LEFT ANTI JOIN (source keys ∪ delete keys)
+UNION source``.
+``delete_keys`` is the deletes-only case — the right-to-be-forgotten path
+a training-data pipeline must run at 100 TB (delete every document of a
 revoked source without rewriting unrelated data... which parquet cannot
 do below file granularity: here the rewrite is table-scoped and commits
 atomically; the deployment form is Delta ``MERGE``/``DELETE`` where only
 files containing matches rewrite, with the same join plan underneath).
+``sinks.kv_upsert_parquet`` is the sibling keyed writer with a version
+column choosing the survivor.
 
-Plan shape: ONE left-outer (or anti) join of target against the source
-keyed on ``on`` — the source is typically small (a day's increment, a
-deletion list) so Catalyst broadcasts it; the target side streams through
-without a shuffle in that case. The new version dir is written while the
-live one stays readable; ``versioned.commit_version`` publishes it.
+Plan shape: ONE left-anti join of target against the batch keys — the
+batch is typically small (a day's increment, a deletion list) so Catalyst
+broadcasts it; the target side streams through without a shuffle in that
+case. The new version dir is written while the live one stays readable;
+``versioned.commit_version`` publishes it.
 
 FILE-TARGETED REWRITE: when the table carries a persisted footer-stats
 index (operators/skipping.py) covering the first merge key, only files
-whose [min, max] key interval can contain a source key are read and
+whose [min, max] key interval can contain a batch key are read and
 rewritten; every other file is carried into the new version by hard link
 (metadata-only), and the index is refreshed incrementally — carried files
 keep their entries, only the rewritten files pay a footer read. This is
@@ -34,11 +37,10 @@ table. Soundness does not depend on the layout — a file the index cannot
 rule out is rewritten — but a clustered layout (operators/zorder.py /
 compact with sort_by) is what makes the candidate set small.
 
-Bookkeeping is ONE Spark job: the per-key source/target counts that feed
-the duplicate-key guard, matched/inserted/deleted counts, and the
-matched-key set for the clause joins all come from a single keyed
-aggregation over a lazily-checkpointed key-stats frame — not one action
-per statistic (4 jobs before; measured directly in cdc_apply's per-batch
+Bookkeeping is ONE Spark job: the per-key source/delete/target counts
+that feed the duplicate-key guard and the matched/inserted/deleted
+counts come from a single keyed aggregation — not one action per
+statistic (4 jobs before; measured directly in cdc_apply's per-batch
 latency).
 """
 
@@ -55,7 +57,7 @@ from .versioned import commit_version, resolve, table_exists
 
 def keys_not_null(on: list[str]) -> Column:
     """True iff every key column is non-NULL: the only keys the
-    null-unsafe clause joins can match."""
+    null-unsafe key joins can match."""
     return reduce(operator.and_, (F.col(k).isNotNull() for k in on))
 
 
@@ -64,86 +66,56 @@ def merge_into(
     target_path: str,
     source: DataFrame,
     on: list[str],
-    when_matched: str = "update",
-    when_not_matched: str = "insert",
     deletes: DataFrame | None = None,
 ) -> dict:
-    """Merge ``source`` into the parquet table at ``target_path``.
+    """Upsert ``source`` into the parquet table at ``target_path`` and
+    remove every target row whose key is in ``deletes``, in ONE commit.
 
-    ``when_matched``: ``"update"`` (source row replaces target row),
-    ``"delete"`` (matched target rows are removed), or ``"ignore"``
-    (target row kept unchanged). ``when_not_matched``: ``"insert"`` or
-    ``"ignore"`` (source-only rows added or dropped). Keys must be unique
-    within ``source`` (enforced — ambiguous merges are rejected, the same
-    error Delta raises for multi-match sources). Target-side key
-    uniqueness is NOT enforced: this is a KEYED-table merge, so an
-    update of a key the target holds N times collapses those N rows to
-    the one source row — LWW semantics, the contract kv_upsert/cdc_apply
-    carry (Delta's row-wise MERGE UPDATE would keep all N). The collapse
-    is reported, never silent (review r12): see
-    ``dup_target_rows_collapsed`` in the returned stats.
+    A matched target row is replaced by its source row; an unmatched
+    source row is inserted. Keys must be unique across ``source`` AND
+    ``deletes`` together (enforced — ambiguous merges are rejected, the
+    same error Delta raises for multi-match sources; a key both deleted
+    and upserted is the same ambiguity). That disjointness is why the
+    single commit equals the sequential delete-then-upsert form: final =
+    target ∖ (all batch keys) ∪ source either way (pinned in
+    tests/test_merge.py). Key joins are null-unsafe: a NULL-key source
+    row matches nothing and is inserted, a NULL delete key removes
+    nothing. Target-side key uniqueness is NOT enforced: this is a
+    KEYED-table merge, so an update of a key the target holds N times
+    collapses those N rows to the one source row — LWW semantics, the
+    contract kv_upsert/cdc_apply carry (Delta's row-wise MERGE UPDATE
+    would keep all N). The collapse is reported, never silent: see
+    ``dup_target_rows_collapsed``.
 
-    ``deletes`` (r18 optimization round): an optional key-only frame
-    merged IN THE SAME COMMIT — every target row matching a ``deletes``
-    key is removed and nothing is inserted for it (the per-row
-    MATCHED-DELETE clause of a Delta-style op-aware MERGE). This is the
-    CDC fast path: a collapsed change batch applies its deletes and
-    upserts through ONE target read, ONE rewrite and ONE atomic commit
-    instead of two of each (streaming/cdc_apply.py — measured ~2x on the
-    q_cdc_apply pipeline). Keys must be unique across ``source`` AND
-    ``deletes`` together (the same ambiguous-merge guard); equivalence
-    to the sequential delete-then-upsert form holds exactly because of
-    that disjointness: final = target ∖ (all batch keys) ∪ upserts
-    either way (pinned in tests/test_merge.py).
-
-    Returns counts: ``{"matched": n, "inserted": n, "deleted": n,
-    "dup_target_rows_collapsed": n, ...}``.
+    Returns counts: ``{"matched", "inserted", "deleted",
+    "dup_target_rows_collapsed", "files_rewritten", "files_carried"}``.
+    A merge with no source rows and no delete keys commits nothing.
     """
-    if when_matched not in ("update", "delete", "ignore"):
-        raise ValueError(f"when_matched={when_matched!r}")
-    if when_not_matched not in ("insert", "ignore"):
-        raise ValueError(f"when_not_matched={when_not_matched!r}")
-    if (
-        when_matched == "ignore"
-        and when_not_matched == "ignore"
-        and deletes is None
-    ):
-        # nothing can change. This is the ONLY return before the key-stats
-        # job, so no action has scanned ``source``: a caller observing it
-        # (cdc_apply's NULL-key count) would block forever in obs.get.
-        # cdc_apply never takes this path (it merges with the defaults);
-        # any new early return belongs after the key-stats collect.
-        return {"matched": 0, "inserted": 0, "deleted": 0}
-
     data_dir = resolve(target_path)
     # Committed data, not bare directory existence: a failed first commit
     # leaves an empty makedirs'd path whose "read" would wedge every retry.
     exists = table_exists(target_path)
 
     # Checkpoint BEFORE the prune collect: _prune_rewrite_set and the
-    # clause joins must consume the SAME source snapshot. A source that is
+    # write must consume the SAME source snapshot. A source that is
     # non-deterministic under recomputation (sampled, rand-salted) could
     # otherwise produce a key at write time that the prune didn't see —
     # whose file was carried — silently duplicating or losing that row.
     source = source.localCheckpoint(eager=False)
-    if deletes is not None:
-        deletes = deletes.select(*on).localCheckpoint(eager=False)
     # every key this merge can touch: drives target-row removal, the
     # bookkeeping aggregation, and file pruning (a file holding ONLY a
     # delete key must still be rewritten)
-    all_keys = (
-        source.select(*on)
-        if deletes is None
-        else source.select(*on).unionByName(deletes)
-    )
+    all_keys = source.select(*on)
+    if deletes is not None:
+        deletes = deletes.select(*on).localCheckpoint(eager=False)
+        all_keys = all_keys.unionByName(deletes)
 
     # File-targeted path: with a persisted stats index covering the first
     # merge key, read/rewrite only the files whose key interval can hold a
-    # source key; carry the rest by reference. Requires source schema ⊆
+    # batch key; carry the rest by reference. Requires source schema ⊆
     # target schema (else carried and rewritten files would disagree).
     carried_files: list[str] = []
     n_candidates = 0
-    target = None
     pkeys: list[str] = []
     if exists:
         from .compact import _partition_keys
@@ -173,139 +145,73 @@ def merge_into(
     else:
         target = source.limit(0)
 
-    # ONE bookkeeping job AND one exchange: source/delete keys and target
-    # keys ride a single union keyed by a ``_side`` tag, so per-key source
-    # counts, target counts, the dup guard, matched/total counts, and the
-    # matched-key set all come from ONE hash aggregation — the former
-    # groupBy-each-side-then-join shape shuffled the same keys twice and
-    # paid a join (r19 optimization round, guide §2.4; measured 0.63 →
-    # 0.47 s on q_cdc_apply's per-batch key-stats job). The lazy
-    # localCheckpoint materializes key_stats at the agg and the clause
-    # joins reuse it without re-running the union lineage. Delete keys
-    # ride the same aggregation tagged ``_isdel`` so the op-aware form
-    # costs no extra job; the dup guard covers duplicates WITHIN and
-    # ACROSS the two sides (a key that is both deleted and upserted in
-    # one merge is the same ambiguity Delta rejects). Target-only keys
-    # surface with _scnt=0 and NULL _isdel — every consumer below
-    # filters or NULL-skips them, preserving the old left-join shape's
-    # source-keys-only semantics.
-    tagged = source.select(*on).withColumn("_isdel", F.lit(False))
+    # ONE bookkeeping job AND one exchange: source keys (_side 1), delete
+    # keys (_side 2) and target keys (_side 0) ride a single union, so the
+    # per-key counts behind the dup guard and every returned count come
+    # from ONE hash aggregation (a groupBy per side plus a join would
+    # shuffle the same keys twice). The dup guard covers duplicates
+    # WITHIN and ACROSS source and deletes.
+    # groupBy puts NULL source and target keys in one group, but the key
+    # joins are null-unsafe, so such a group's target count is 0 and it
+    # is kept out of the guard: NULL-key rows match nothing.
+    side = F.col("_side")
+    tagged = source.select(*on).withColumn("_side", F.lit(1))
     if deletes is not None:
-        tagged = tagged.unionByName(deletes.withColumn("_isdel", F.lit(True)))
-    both_sides = tagged.withColumn("_side", F.lit(1)).unionByName(
-        target.select(*on)
-        .withColumn("_isdel", F.lit(None).cast("boolean"))
-        .withColumn("_side", F.lit(0))
+        tagged = tagged.unionByName(deletes.withColumn("_side", F.lit(2)))
+    both_sides = tagged.unionByName(target.select(*on).withColumn("_side", F.lit(0)))
+    key_stats = both_sides.groupBy(*on).agg(
+        F.count_if(side == 1).alias("_scnt"),
+        F.count_if(side == 2).alias("_dcnt"),
+        F.when(keys_not_null(on), F.count_if(side == 0))
+        .otherwise(0)
+        .alias("_tcnt"),
     )
-    key_stats = (
-        both_sides.groupBy(*on)
-        .agg(
-            F.sum("_side").alias("_scnt"),
-            F.max("_isdel").alias("_isdel"),
-            # NULL (not 0) when the key has no target rows, mirroring the
-            # old left join's _tcnt so "matched" stays _tcnt.isNotNull().
-            # Also NULL for a key with any NULL column: groupBy puts NULL
-            # source and target keys in one group, but the clause joins
-            # are null-unsafe, so such a source row never matches — it is
-            # inserted, and no target row is updated or deleted for it.
-            F.when(
-                keys_not_null(on),
-                F.nullif(F.sum(F.lit(1) - F.col("_side")), F.lit(0)),
-            ).alias("_tcnt"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    scnt, dcnt, tcnt = F.col("_scnt"), F.col("_dcnt"), F.col("_tcnt")
     row = key_stats.agg(
-        # NULL-key source rows share one group but match nothing, so they
-        # cannot make a target row match twice: keep them out of the guard
-        F.coalesce(
-            F.max(F.when(keys_not_null(on), F.col("_scnt"))), F.lit(0)
-        ).alias("max_dup"),
-        F.coalesce(
-            F.sum(F.when(~F.col("_isdel"), F.col("_scnt"))), F.lit(0)
-        ).alias("n_src"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("_tcnt").isNotNull() & ~F.col("_isdel"),
-                    F.col("_scnt"),
-                )
-            ),
-            F.lit(0),
-        ).alias("n_src_matched"),
-        F.coalesce(
-            F.sum(F.when(~F.col("_isdel"), F.col("_tcnt"))), F.lit(0)
-        ).alias("n_matched"),
-        F.coalesce(
-            F.sum(F.when(F.col("_isdel"), F.col("_tcnt"))), F.lit(0)
-        ).alias("n_del_matched"),
-        F.coalesce(
-            F.sum(F.when(F.col("_isdel"), F.col("_scnt"))), F.lit(0)
-        ).alias("n_del_keys"),
+        F.max(F.when(keys_not_null(on), scnt + dcnt)).alias("max_dup"),
+        F.sum(scnt).alias("n_src"),
+        F.sum(dcnt).alias("n_del_keys"),
+        F.sum(F.when(tcnt > 0, scnt)).alias("n_src_matched"),
+        F.sum(F.when(scnt > 0, tcnt)).alias("matched"),
+        F.sum(F.when(dcnt > 0, tcnt)).alias("deleted"),
     ).collect()[0]
-    if row.max_dup > 1:
+    n = {k: int(v or 0) for k, v in row.asDict().items()}
+    if n["max_dup"] > 1:
         raise ValueError(
             "source has duplicate merge keys — a target row would match "
             "more than one source row (non-deterministic merge)"
         )
-    if row.n_src == 0 and row.n_del_keys == 0:
-        # TOTAL no-op: no source rows and no delete keys means every
-        # clause arm is empty and out == target exactly, in every
-        # when_matched/when_not_matched mode — committing would republish
+    stats = {
+        "matched": n["matched"],
+        "inserted": n["n_src"] - n["n_src_matched"],
+        "deleted": n["deleted"],
+        # duplicate-keyed target rows an update collapsed to one survivor
+        # (keyed-table LWW semantics — see docstring); 0 for unique keys
+        "dup_target_rows_collapsed": n["matched"] - n["n_src_matched"],
+        "files_rewritten": 0,
+        "files_carried": 0,
+    }
+    if n["n_src"] == 0 and n["n_del_keys"] == 0:
+        # TOTAL no-op: out == target exactly — committing would republish
         # the table byte-identically and mint an empty version (or create
-        # an empty version-0 table on a fresh path). Skipping here moves
-        # the empty-batch guard INTO the merge, where "collapsed to
-        # nothing" is a local fact — cdc_apply no longer has to infer it
-        # from raw-batch stats via the cross-module "key-ok rows exist
-        # iff collapsed rows do" invariant (r18 ADVICE).
-        return {
-            "matched": 0,
-            "inserted": 0,
-            "deleted": 0,
-            "dup_target_rows_collapsed": 0,
-            "files_rewritten": 0,
-            "files_carried": 0,
-        }
-    n_matched, n_src_matched = row.n_matched, row.n_src_matched
-    matched_keys = key_stats.filter(
-        F.col("_tcnt").isNotNull() & ~F.col("_isdel")
-    ).select(*on)
+        # an empty version-0 table on a fresh path). The empty-batch guard
+        # lives here, where "collapsed to nothing" is a local fact. Every
+        # return comes after the key-stats job has scanned ``source``:
+        # cdc_apply's NULL-key Observation relies on that to never block.
+        return stats
 
-    # survivors from the target side. NO forced broadcast on the source
-    # key set (review r12): a right-to-be-forgotten deletion list — the
-    # module's own 100 TB use case — can hold hundreds of millions of
-    # keys, and a hard hint would OOM the driver/executors where AQE
-    # left free still broadcasts small sources and falls back to a
-    # shuffled join for large ones.
-    if when_matched == "ignore":
-        removal = deletes  # only explicit delete keys remove target rows
-    else:  # update and delete both remove the matched target rows
-        removal = all_keys
-    keep_target = (
-        target if removal is None else target.join(removal, on, "left_anti")
+    # NO forced broadcast on the batch key set (review r12): a
+    # right-to-be-forgotten deletion list — the module's own 100 TB use
+    # case — can hold hundreds of millions of keys, and a hard hint would
+    # OOM the driver/executors where AQE left free still broadcasts small
+    # batches and falls back to a shuffled join for large ones.
+    out = target.join(all_keys, on, "left_anti").unionByName(
+        source, allowMissingColumns=True
     )
 
-    # rows contributed by the source side
-    parts = []
-    if when_matched == "update" and when_not_matched == "insert":
-        # semi(matched) ∪ anti(matched) == source exactly — the common
-        # upsert form needs NEITHER clause join (r18 optimization round:
-        # two broadcast joins and a union removed from every kv-upsert/
-        # CDC merge plan; the split exists only to serve an "ignore" arm)
-        parts.append(source)
-    else:
-        if when_matched == "update":
-            parts.append(source.join(matched_keys, on, "left_semi"))
-        if when_not_matched == "insert":
-            parts.append(source.join(matched_keys, on, "left_anti"))
-
-    out = keep_target
-    for p in parts:
-        out = out.unionByName(p, allowMissingColumns=True)
-
     # A FULL rewrite over an indexed table re-clusters on the indexed
-    # columns (review r12): the anti/semi clause joins shuffle the target,
-    # and without re-clustering the committed files carry overlapping key
+    # columns (review r12): the anti join shuffles the target, and
+    # without re-clustering the committed files carry overlapping key
     # ranges — the index can rule out nothing, every later merge degrades
     # to a full rewrite and read_pruned to full scans, a silent one-way
     # perf cliff. One range shuffle is the honest price of keeping the
@@ -336,11 +242,6 @@ def merge_into(
                 *cluster_major
             )
 
-    n_inserted = int(row.n_src - n_src_matched) if when_not_matched == "insert" else 0
-    n_deleted = (int(n_matched) if when_matched == "delete" else 0) + int(
-        row.n_del_matched
-    )
-
     if carried_files:
         # keep file granularity ≈ the files being replaced — without
         # this the rewritten slice fans out to one file per shuffle
@@ -360,18 +261,9 @@ def merge_into(
     )
     from .skipping import list_data_files
 
-    return {
-        "matched": int(n_matched),
-        "inserted": n_inserted,
-        "deleted": n_deleted,
-        # duplicate-keyed target rows an update collapsed to one survivor
-        # (keyed-table LWW semantics — see docstring); 0 for unique keys
-        "dup_target_rows_collapsed": (
-            int(n_matched - n_src_matched) if when_matched == "update" else 0
-        ),
-        "files_rewritten": len(list_data_files(staging)) - len(carried_files),
-        "files_carried": len(carried_files),
-    }
+    stats["files_rewritten"] = len(list_data_files(staging)) - len(carried_files)
+    stats["files_carried"] = len(carried_files)
+    return stats
 
 
 def _prune_rewrite_set(
@@ -437,13 +329,9 @@ def delete_keys(
     spark: SparkSession, target_path: str, keys: DataFrame, on: list[str]
 ) -> int:
     """Remove every target row whose key appears in ``keys`` — the
-    right-to-be-forgotten primitive, as a matched-DELETE merge. Returns
+    right-to-be-forgotten primitive, as a deletes-only merge. Returns
     the number of rows deleted."""
+    keys = keys.select(*on)
     return merge_into(
-        spark,
-        target_path,
-        keys.select(*on).distinct(),
-        on,
-        when_matched="delete",
-        when_not_matched="ignore",
+        spark, target_path, keys.limit(0), on, deletes=keys.distinct()
     )["deleted"]

@@ -20,8 +20,13 @@ clustered dimension while a linearly-sorted one prunes on one.
 from __future__ import annotations
 
 import os
+import threading
 
 import pyarrow.parquet as pq
+
+# clustered_scratch_copy's build-once memo: source/layout key -> copy dir
+_SCRATCH_COPIES: dict[tuple, str] = {}
+_SCRATCH_COPIES_LOCK = threading.Lock()
 
 
 def list_data_files(path: str) -> list[str]:
@@ -183,31 +188,6 @@ def load_stats_index(data_dir: str) -> list[dict] | None:
     ]
 
 
-def _source_fingerprint(src_path: str, fallback_name: str = "src") -> str:
-    """Content-generation fingerprint of a source file or directory:
-    md5 over every file's (relative path, size, mtime_ns), walked in a
-    SORTED order. Review r14: the inline predecessor iterated os.walk's
-    unsorted directory order and keyed on basenames alone — on a
-    filesystem that lists dirs differently between runs the same bytes
-    hashed to a different fingerprint, spawning a spurious "generation"
-    per run (each deferring the last one's GC), and two same-named files
-    in different subdirs were indistinguishable."""
-    import hashlib
-
-    stat_parts = []
-    for root, dirs, files in os.walk(src_path):
-        dirs.sort()
-        for fn in sorted(files):
-            full = os.path.join(root, fn)
-            st = os.stat(full)
-            rel = os.path.relpath(full, src_path)
-            stat_parts.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-    if not stat_parts and os.path.exists(src_path):
-        st = os.stat(src_path)
-        stat_parts.append(f"{fallback_name}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5(";".join(stat_parts).encode()).hexdigest()[:12]
-
-
 def clustered_scratch_copy(
     spark,
     sf_dir: str,
@@ -215,110 +195,38 @@ def clustered_scratch_copy(
     select_cols: list[str],
     cluster_col: str,
     n_ranges: int = 8,
-    prefix: str = "wod_etl_clustered",
 ) -> str:
     """Build-once clustered scratch copy of a source table, with a
     persisted skipping index — the fixture a pruned-read query needs so
     its bench row times the READ, not a rewrite per run.
 
-    Contract (review r12 — this plumbing used to live inline in
-    q_pruned_scan and leaked):
-      * the scratch name embeds an mtime/size FINGERPRINT of the source,
-        so a regenerated testdata generation lands in a NEW dir instead
-        of silently serving a stale clustered copy;
-      * concurrent builders write private staging dirs; exactly one
-        atomic rename publishes, the loser reuses the winner's copy;
-      * STALE generations of the same (prefix, source) are GC'd on the
-        next build — without this, every testdata regeneration and every
-        dirty-sweep tmp dir accumulated an orphaned multi-MB parquet
-        copy in tempdir forever — and so are crashed builders' leftover
-        ``.tmp.<pid>`` staging dirs.
-    """
-    import re
-    import shutil
+    The copy lives under this process's scratch dir (``io.scratch_dir``,
+    removed at exit), so no other process ever sees it. It is built once
+    per (source path, source ``os.stat`` size and mtime, layout
+    arguments): a regenerated source builds a fresh copy in a new dir
+    instead of silently serving a stale one. The build runs under a lock,
+    so concurrent callers in one process share one build."""
     import tempfile
 
+    from ..io import load_table, scratch_dir
+
     src_path = os.path.join(sf_dir, f"{table}.parquet")
-    fp = _source_fingerprint(src_path, fallback_name=table)
-    # table belongs in the GC namespace (round-diff review r13): keyed on
-    # (prefix, sf_dir) alone, a second table's LIVE published copy from
-    # the same sf_dir read as a "stale generation" of the first and the
-    # defer-by-one GC below would reclaim it mid-scan
-    base = (
-        prefix + "_" + re.sub(r"\W+", "_", sf_dir).strip("_")
-        + "_" + re.sub(r"\W+", "_", table) + "_"
-    )
-    scratch = os.path.join(tempfile.gettempdir(), base + fp)
-
-    marker = os.path.join(scratch, "_BUILT")
-    if os.path.exists(marker):
-        return scratch
-    # GC stale generations and orphaned staging dirs BEFORE building the
-    # new one: anything with this source's prefix but a different
-    # fingerprint is a dead generation (its fingerprint can never recur
-    # — mtimes are monotone), and a .tmp.<pid> left by a crashed builder
-    # is unreachable garbage. Racing GC against a concurrent builder of
-    # the SAME generation is safe: that builder stages privately and the
-    # publish rename is atomic.
-    tmp_root = tempfile.gettempdir()
-    stale_published: list[tuple[float, str]] = []
-    for entry in os.listdir(tmp_root):
-        if not entry.startswith(base):
-            continue
-        # skip the CURRENT generation entirely — published dir AND any
-        # concurrent builder's live ".tmp.<pid>" staging of it (deleting
-        # that mid-write would corrupt the race the atomic rename wins)
-        if entry.startswith(base + fp):
-            continue
-        full = os.path.join(tmp_root, entry)
-        if ".tmp." in entry:
-            # an OLD-generation staging dir may still belong to a LIVE
-            # builder that started before the source regenerated (review
-            # r12: GC'ing it mid-write failed that builder's Spark job,
-            # or let its swallowed rename return a nonexistent scratch).
-            # Only reclaim stale ones — a crashed builder's staging goes
-            # quiet; a live write keeps touching the dir.
-            import time
-
-            try:
-                if time.time() - os.path.getmtime(full) < 3600:
-                    continue
-            except OSError:
-                continue
-            shutil.rmtree(full, ignore_errors=True)
-        else:
-            # a stale PUBLISHED generation may still be mid-scan by a
-            # long-running process that planned its read before the
-            # source regenerated (r13 advice: unconditional rmtree
-            # failed that reader with FileNotFound). mtime can't see
-            # readers, so defer by one generation instead: keep the
-            # NEWEST stale published dir, reclaim everything older —
-            # any older generation already survived a previous GC pass
-            # as "newest stale" and has had a full generation of grace.
-            try:
-                stale_published.append((os.path.getmtime(full), full))
-            except OSError:
-                continue
-    for _, full in sorted(stale_published)[:-1]:
-        shutil.rmtree(full, ignore_errors=True)
-    staging = f"{scratch}.tmp.{os.getpid()}"
-    from ..io import load_table
-
-    (
-        load_table(spark, sf_dir, table)
-        .select(*select_cols)
-        .repartitionByRange(n_ranges, cluster_col)
-        .sortWithinPartitions(cluster_col)
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    # persist the skipping index next to the data — read_pruned consumes
-    # the persisted form (the metadata-layer path), not a live footer scan
-    save_stats_index(staging, [cluster_col])
-    with open(os.path.join(staging, "_BUILT"), "w") as f:
-        f.write(sf_dir)
-    try:
-        os.rename(staging, scratch)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)  # another builder won
-    return scratch
+    st = os.stat(src_path)
+    key = (src_path, st.st_size, st.st_mtime_ns, tuple(select_cols), cluster_col, n_ranges)
+    with _SCRATCH_COPIES_LOCK:
+        if key not in _SCRATCH_COPIES:
+            out = tempfile.mkdtemp(prefix=f"clustered_{table}_", dir=scratch_dir())
+            (
+                load_table(spark, sf_dir, table)
+                .select(*select_cols)
+                .repartitionByRange(n_ranges, cluster_col)
+                .sortWithinPartitions(cluster_col)
+                .write.mode("overwrite")
+                .parquet(out)
+            )
+            # persist the skipping index next to the data — read_pruned
+            # consumes the persisted form (the metadata-layer path), not a
+            # live footer scan
+            save_stats_index(out, [cluster_col])
+            _SCRATCH_COPIES[key] = out
+        return _SCRATCH_COPIES[key]

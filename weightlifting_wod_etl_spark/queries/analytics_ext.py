@@ -361,12 +361,9 @@ def q_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
 
     # The clustered layout is a FIXTURE, not the thing measured: built
-    # once per (sf_dir, generation) so the bench times the pruned READ —
-    # at deployment the table is maintained clustered by compact/zorder,
-    # not rebuilt per query (VERDICT r8 §next.6). The build-once
-    # machinery (source fingerprint, private staging + atomic publish,
-    # GC of stale generations — review r12: the inline version leaked
-    # one scratch copy per testdata generation forever) lives in
+    # once per process and source generation so the bench times the
+    # pruned READ — at deployment the table is maintained clustered by
+    # compact/zorder, not rebuilt per query (VERDICT r8 §next.6). See
     # operators/skipping.clustered_scratch_copy.
     from ..operators.skipping import clustered_scratch_copy
 
@@ -376,7 +373,6 @@ def q_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "orders",
         ["o_orderdate", "o_orderpriority", "o_totalprice"],
         "o_orderdate",
-        prefix="wod_etl_pruned_scan",
     )
     from ..io import read_pruned
 

@@ -6,10 +6,10 @@ q_cdc_apply drives the PRODUCTION path end-to-end: it materializes a
 base table, synthesizes a deterministic change batch (updates, deletes,
 out-of-order duplicates, inserts of unseen keys), applies it through
 ``streaming.cdc_apply.make_cdc_apply`` — window last-by-sequence
-collapse, then two atomic ``merge_into`` commits — and returns the
-final table. The oracle states the same semantics declaratively
-(row_number collapse + anti-join + union), which is exactly the
-Debezium-sink contract the operator promises.
+collapse, then one atomic ``merge_into`` commit of the deletes and
+upserts — and returns the final table. The oracle states the same
+semantics declaratively (row_number collapse + anti-join + union),
+which is exactly the Debezium-sink contract the operator promises.
 
 q_interval_join runs ``streaming.joins.interval_join`` on batch frames
 (the operator is stream/batch agnostic by design — the batch plan just
@@ -23,12 +23,11 @@ from __future__ import annotations
 
 import os
 import re as _re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table, read_table
+from ..io import load_table, read_table, scratch_dir
 from ..queries_registry import register
 
 ORACLE_CDC_APPLY = """
@@ -84,16 +83,13 @@ def cdc_prepare_base(spark: SparkSession, sf_dir: str) -> str:
         F.col("o_orderstatus").alias("status"),
         F.round("o_totalprice", 2).alias("val"),
     )
-    # pid suffix: the path is per-process, so a bench run overlapping a
-    # test run (or parallel pytest workers) at the same sf can never race
-    # one process's overwrite against another's mid-commit merge; within
-    # one process reruns still share the dir and stay deterministic
+    # under the per-process scratch dir: a bench run overlapping a test
+    # run at the same sf can never race one process's overwrite against
+    # another's mid-commit merge, and the dir goes at process exit;
+    # within one process reruns share the path and stay deterministic
     # (rebuilt from scratch each call)
     scratch = os.path.join(
-        tempfile.gettempdir(),
-        "wod_etl_cdc_apply_"
-        + _re.sub(r"\W+", "_", sf_dir).strip("_")
-        + f"_{os.getpid()}",
+        scratch_dir(), "cdc_apply_" + _re.sub(r"\W+", "_", sf_dir).strip("_")
     )
     base.write.mode("overwrite").parquet(scratch)  # fresh base every run
     return scratch

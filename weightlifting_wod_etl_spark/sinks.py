@@ -7,7 +7,7 @@ Reference behaviors mapped:
   - DynamoDB putItem keyed (date, session) (state machine :67-102) →
     last-writer-wins parquet upsert via row_number over a total order;
   - fail-open policy (§2.3-7): ledger read errors must not block writes —
-    surfaced here as the ``fail_open`` flag.
+    an unreadable ledger counts as empty.
 
 Scale notes: the ledger is keys-only (a few bytes per written unit), so the
 anti-join broadcasts. The upsert rewrites only the partitions whose keys
@@ -22,161 +22,74 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from .operators.dedup import exact_dedup
 
 
-def _ledger_keys(spark: SparkSession, ledger_path: str, fail_open: bool) -> DataFrame | None:
+def _ledger_keys(spark: SparkSession, ledger_path: str) -> DataFrame | None:
+    """The ledger's keys — read ONCE per batch — or ``None`` when there is
+    no ledger yet or it cannot be read (fail-open: reference §2.3-7, an
+    infra failure must not block the write). A readable ledger whose keys
+    are not strings raises before anything is written: appending string
+    keys into it would leave a mixed-schema ledger that no later run can
+    read."""
+    if not os.path.exists(ledger_path):
+        return None
     try:
-        if not os.path.exists(ledger_path):
-            return None
-        return spark.read.parquet(ledger_path).select("idem_key")
+        keys = spark.read.parquet(ledger_path).select("idem_key")
     except Exception:
-        if fail_open:
-            return None  # reference: infra failure ⇒ proceed with the write
-        raise
+        return None  # reference: infra failure ⇒ proceed with the write
+    ltype = keys.schema["idem_key"].dataType
+    if not isinstance(ltype, StringType):
+        raise ValueError(
+            f"write_jsonl_idempotent: ledger {ledger_path} holds "
+            f"{ltype.simpleString()} keys; only string (sha256 hex) "
+            "ledgers are supported"
+        )
+    return keys
 
 
-def write_jsonl_idempotent(
-    df: DataFrame,
-    path: str,
-    ledger_path: str,
-    key_col: str = "idem_key",
-    fail_open: bool = True,
-) -> int:
-    """Write rows whose key is not yet in the ledger; record written keys.
+def write_jsonl_idempotent(df: DataFrame, path: str, ledger_path: str) -> int:
+    """Write rows whose ``idem_key`` is not yet in the ledger; record the
+    written keys. Returns the number of rows written.
 
-    Returns the number of rows written. Exactly-once-ish across reruns:
-    replays anti-join to zero rows, mirroring the reference's sha256 ledger
-    check (services/idempotency_service.py:42-73).
+    Exactly-once-ish across reruns: replays anti-join to zero rows,
+    mirroring the reference's sha256 ledger check
+    (services/idempotency_service.py:42-73). Keys are strings (cast on
+    the way in), the ledger is a keys-only parquet dir of strings.
 
-    Review r11 hardening: (a) duplicate keys WITHIN one batch collapse to
-    one deterministic winner before the ledger check — the reference's
-    per-record check-then-write admits a key once per RUN, not once per
-    occurrence; (b) a NULL key (unidentifiable content) falls back to a
-    CONTENT-HASH key — sha256 (string ledgers) or xxhash64 (integral
-    ledgers; the fallback's type always matches the ledger's stored
-    type, never corrupting a pre-existing ledger's schema) of the row's
-    canonical JSON payload — the
-    same never-NULL contract the reference ledger keys on
-    (services/idempotency_service.py:42-73). The r11 null-safe-join
-    treatment made all NULL-key rows behave as ONE key, which silently
-    dropped distinct payloads on the very first write (r11 advice: data
-    loss, not idempotency); with the content fallback, distinct payloads
-    each write once and content-identical replays still suppress. The
-    anti-join stays null-safe as belt-and-braces; (c) no forced
-    broadcast hint: the keys-only ledger grows without bound across
-    runs, and AQE must stay free to pick a shuffled join once it
-    outgrows the driver (operators/dedup.anti_join_ledger's documented
+    (a) duplicate keys WITHIN one batch collapse to one deterministic
+    winner before the ledger check — the reference's per-record
+    check-then-write admits a key once per RUN, not once per occurrence;
+    (b) a NULL key (unidentifiable content) falls back to the sha256 of
+    the row's canonical JSON payload — the same never-NULL contract the
+    reference ledger keys on — so distinct payloads each write once and
+    content-identical replays still suppress (treating all NULLs as one
+    key silently dropped distinct payloads: data loss, not idempotency);
+    (c) no forced broadcast hint: the keys-only ledger grows without
+    bound across runs, and AQE must stay free to pick a shuffled join once
+    it outgrows the driver (operators/dedup.anti_join_ledger's documented
     rationale).
     """
-    from .operators.dedup import exact_dedup
+    from .operators.dedup import orderable_order_cols
 
-    spark = df.sparkSession
-    payload = [c for c in df.columns if c != key_col]
-    if payload:
-        # canonical payload JSON: struct field order is the fixed column
-        # order, so the hash is deterministic per content. The fallback
-        # key's TYPE must match the ledger's stored type (review r12,
-        # reproduced): the first cut cast every key to string, so one run
-        # against a pre-existing long-typed ledger appended string files
-        # into the long parquet dir and PERMANENTLY wedged the sink
-        # (mixed-schema read crash at the anti-join, outside fail_open's
-        # guard). The ledger's existing type wins; a fresh ledger takes
-        # the key column's own type (string keys stay string).
-        from pyspark.sql.types import IntegerType, LongType, StringType
-
-        ltype = df.schema[key_col].dataType
-        if os.path.exists(ledger_path):
-            try:
-                ltype = spark.read.parquet(ledger_path).schema["idem_key"].dataType
-            except Exception:
-                pass  # unreadable ledger: _ledger_keys applies fail_open below
-        if isinstance(ltype, StringType):
-            content_key = F.sha2(F.to_json(F.struct(*payload)), 256)
-            df = df.withColumn(
-                key_col,
-                F.coalesce(F.col(key_col).cast("string"), content_key),
-            )
-        elif isinstance(ltype, (LongType, IntegerType)):
-            # integral ledger: xxhash64 of the same canonical JSON — a
-            # 64-bit content key that appends type-compatibly (the
-            # ANSI-off int cast wraps deterministically — acceptable for
-            # a HASH, whose identity is arbitrary anyway). The whole
-            # coalesced key is cast to the ledger's stored type (r13
-            # advice): coalesce(long key, int hash) otherwise promoted to
-            # long and appended wider-typed files into an int ledger —
-            # the same mixed-schema wedge the r12 fix closed for strings.
-            # A REAL key that overflows the narrower ledger type raises
-            # loudly instead of wrapping: a wrapped real key silently
-            # changes identity and could collide with another real key.
-            real = F.col(key_col)
-            if isinstance(ltype, IntegerType) and not isinstance(
-                df.schema[key_col].dataType, IntegerType
-            ):
-                bound = 2**31
-                real = F.when(
-                    real.isNull() | ((real >= -bound) & (real < bound)),
-                    real,
-                ).otherwise(
-                    F.raise_error(
-                        F.lit(
-                            "write_jsonl_idempotent: key value exceeds the "
-                            "existing ledger's INT key type — migrate the "
-                            "ledger to a wider type"
-                        )
-                    ).cast("long")
-                )
-            content_key = F.xxhash64(F.to_json(F.struct(*payload)))
-            # lossy-cast guard (round-diff review r13): a non-numeric key
-            # (string column against an integral ledger) becomes NULL
-            # under the ANSI-off cast — every such row would then collapse
-            # onto ONE NULL ledger key and dedup to a single survivor
-            # (silent data loss). Raise loudly instead, like the overflow
-            # guard above.
-            real_cast = F.when(
-                real.isNotNull() & real.cast(ltype).isNull(),
-                F.raise_error(
-                    F.lit(
-                        "write_jsonl_idempotent: key value does not parse "
-                        "as the existing ledger's integral key type"
-                    )
-                ).cast(ltype),
-            ).otherwise(real.cast(ltype))
-            df = df.withColumn(
-                key_col,
-                F.coalesce(real_cast, content_key.cast(ltype)),
-            )
-        else:
-            # no content-hash fallback can be expressed in this key type;
-            # fail LOUDLY only if a NULL key actually arrives (raise
-            # inside the coalesce) rather than silently dropping payloads
-            df = df.withColumn(
-                key_col,
-                F.coalesce(
-                    F.col(key_col),
-                    F.raise_error(
-                        F.lit(
-                            "write_jsonl_idempotent: NULL idempotency key "
-                            f"but key type {ltype.simpleString()} supports "
-                            "no content-hash fallback — use a string key"
-                        )
-                    ).cast(ltype),
-                ),
-            )
+    ledger = _ledger_keys(df.sparkSession, ledger_path)
+    # canonical payload JSON: struct field order is the fixed column
+    # order, so the content key is deterministic per content
+    payload = F.to_json(F.struct(*[c for c in df.columns if c != "idem_key"]))
+    df = df.withColumn(
+        "idem_key",
+        F.coalesce(F.col("idem_key").cast("string"), F.sha2(payload, 256)),
+    )
     # shared orderable tiebreaks (r12): a MapType payload column in the
     # bare per-column ORDER BY rejected the whole plan (the cdc_apply /
     # dedup_stream defect class — one definition in operators/dedup.py)
-    from .operators.dedup import orderable_order_cols
-
-    others = orderable_order_cols(df, {key_col})
-    df = exact_dedup(df, key_cols=[key_col], order_cols=others or [F.lit(1)])
-    ledger = _ledger_keys(spark, ledger_path, fail_open)
-    fresh = df if ledger is None else df.join(
-        ledger.withColumnRenamed("idem_key", "__ledger_key"),
-        F.col(key_col).eqNullSafe(F.col("__ledger_key")),
-        "left_anti",
-    )
+    others = orderable_order_cols(df, {"idem_key"})
+    df = exact_dedup(df, key_cols=["idem_key"], order_cols=others or [F.lit(1)])
+    # keys are never NULL here (the content key fills them), so a plain
+    # equi anti-join is exact
+    fresh = df if ledger is None else df.join(ledger, "idem_key", "left_anti")
     # localCheckpoint, not cache(): three actions (count, JSON write,
     # ledger write) must see ONE snapshot. A cache() partition evicted
     # under memory pressure recomputes — with a non-deterministic df the
@@ -185,8 +98,8 @@ def write_jsonl_idempotent(
     fresh = fresh.localCheckpoint(eager=False)
     n = fresh.count()
     if n:
-        fresh.drop(key_col).write.mode("append").json(path)
-        fresh.select(F.col(key_col).alias("idem_key")).write.mode("append").parquet(ledger_path)
+        fresh.drop("idem_key").write.mode("append").json(path)
+        fresh.select("idem_key").write.mode("append").parquet(ledger_path)
     return n
 
 

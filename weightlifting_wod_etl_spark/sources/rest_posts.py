@@ -34,6 +34,7 @@ policy), and the scan surface is bounded by the planned page window.
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 from pyspark.sql.datasource import (
@@ -50,6 +51,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+log = logging.getLogger(__name__)
 
 # Typed projection of the raw WP post (D1) — the fields the pipeline reads
 # (`handler.py:166-190`): everything else (yoast_head, _links, ...) is
@@ -204,12 +207,12 @@ class _PostsReader(DataSourceReader):
         the per-post normalization in read())."""
         if isinstance(posts, list):
             return posts
-        import sys
-
-        print(
-            f"wod_posts: page {page} at {origin} is not a JSON array "
-            f"(got {type(posts).__name__}); skipping page",
-            file=sys.stderr,
+        log.warning(
+            "wod_posts: page %s at %s is not a JSON array (got %s); "
+            "skipping page",
+            page,
+            origin,
+            type(posts).__name__,
         )
         return []
 
@@ -225,12 +228,12 @@ class _PostsReader(DataSourceReader):
                 # corrupt/truncated page file: poison-page tolerance —
                 # a deterministic parse error would fail the task on
                 # every retry and abort the scan (review r13)
-                import sys
-
-                print(
-                    f"wod_posts: page {page} at {path} is unparseable "
-                    f"({exc}); skipping page",
-                    file=sys.stderr,
+                log.warning(
+                    "wod_posts: page %s at %s is unparseable (%s); "
+                    "skipping page",
+                    page,
+                    path,
+                    exc,
                 )
                 return []
             posts = self._as_page_list(posts, page, path)
@@ -416,14 +419,12 @@ class _PostsStreamReader(DataSourceStreamReader):
         except OSError as exc:
             if not self._warned_hint:
                 self._warned_hint = True
-                import sys
-
-                print(
-                    f"wod_posts stream: cursor hint write failed ({exc}); "
+                log.warning(
+                    "wod_posts stream: cursor hint write failed (%s); "
                     "restarts are only safe while no consumed page has "
                     "been deleted — set option 'cursor_dir' to a writable "
                     "directory",
-                    file=sys.stderr,
+                    exc,
                 )
 
 

@@ -5,8 +5,8 @@ The canonical change-data-capture consumer: each micro-batch carries
 upserts and deletes (an ``op`` column: 'U'/'I' vs 'D') with a sequence
 column establishing order. The batch is first collapsed to one winning
 change per key (last by sequence — a batch may contain several changes
-to the same key), then deletes and upserts apply through
-``operators/merge.py``'s atomic versioned commits.
+to the same key), then deletes and upserts apply through ONE
+``operators/merge.merge_into`` call — one atomic versioned commit.
 
 Replay safety: applying the same collapsed batch twice is a no-op by
 construction (an upsert overwrites with identical rows; a delete of an
@@ -23,6 +23,7 @@ files; the commit protocol and join plan are identical).
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -30,6 +31,8 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import exact_dedup
 from ..operators.merge import keys_not_null, merge_into
+
+log = logging.getLogger(__name__)
 
 
 def make_cdc_apply(
@@ -117,9 +120,8 @@ def make_cdc_apply(
             # test_merge.py's sequential-vs-single equivalence test).
             # eqNullSafe keeps the r10 null-op rule: a null/unknown op is
             # an upsert, never silently dropped from both branches.
-            # deletes passes unconditionally (possibly empty — merge_into
-            # handles an empty key frame identically to None, it just
-            # rides the same tagged aggregation): probing the collapsed
+            # deletes passes unconditionally (possibly empty — it just
+            # rides merge_into's one key aggregation): probing the collapsed
             # batch for "are there any deletes?" was a whole extra Spark
             # job whose answer changes nothing the merge doesn't already
             # compute. Called UNCONDITIONALLY (r19): a batch that
@@ -145,13 +147,12 @@ def make_cdc_apply(
                 row = obs._jo.getRowOrEmpty()
                 n_null_key = row.get().get(0) if row.isDefined() else 0
             if n_null_key:
-                import sys
-
-                print(
-                    f"cdc_apply: batch {batch_id} dropped {n_null_key} "
-                    "NULL-key change row(s) — unaddressable by MERGE; "
-                    "check the upstream feed for PK corruption",
-                    file=sys.stderr,
+                log.warning(
+                    "cdc_apply: batch %s dropped %s NULL-key change row(s) — "
+                    "unaddressable by MERGE; check the upstream feed for PK "
+                    "corruption",
+                    batch_id,
+                    n_null_key,
                 )
 
     return apply_batch
