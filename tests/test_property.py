@@ -547,11 +547,14 @@ def test_merge_into_matches_dict_model(
         min_size=1,
         max_size=3,
     ),
+    partition_by=st.sampled_from([None, ["p"]]),
 )
 @settings(**_SETTINGS)
-def test_kv_upsert_lww_matches_dict_model(spark, tmp_path_factory, batches):
-    """Partitioned kv_upsert vs a dict model across a SEQUENCE of
-    increments: for each key the surviving row is the max-(version,
+def test_kv_upsert_lww_matches_dict_model(
+    spark, tmp_path_factory, batches, partition_by
+):
+    """kv_upsert vs a dict model across a SEQUENCE of increments, flat and
+    partitioned: for each key the surviving row is the max-(version,
     payload) row ever written — regardless of batch boundaries, in-batch
     duplicates, or keys that repeat across partitions of the same batch.
     Total order includes payload as tie-break so the model is exact."""
@@ -567,7 +570,7 @@ def test_kv_upsert_lww_matches_dict_model(spark, tmp_path_factory, batches):
         ).filter("k IS NOT NULL")
         kv_upsert_parquet(
             df, path, key_cols=["k", "p"], order_cols=["ver", "payload"],
-            partition_by=["p"],
+            partition_by=partition_by,
         )
         for k, p, ver, payload in batch:
             cur = model.get((k, p))

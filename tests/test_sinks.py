@@ -210,6 +210,62 @@ def test_kv_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp):
     }
 
 
+@pytest.mark.parametrize(
+    "first, second",
+    [(None, ["p"]), (["p"], None), (["p"], ["q"])],
+    ids=["flat_to_p", "p_to_flat", "p_to_q"],
+)
+def test_kv_upsert_layout_change_rewrites_into_requested_layout(
+    spark, tmp, first, second
+):
+    """An upsert whose ``partition_by`` differs from the table's on-disk
+    partition columns rewrites the whole table into the requested layout:
+    the table stays readable, holds the last-writer-wins rows, and its
+    partition columns are the requested ones. (p → q used to commit a
+    version holding both p=* and q=* dirs, and every later read raised
+    CONFLICTING_PARTITION_COLUMN_NAMES.)"""
+    from weightlifting_wod_etl_spark.operators.compact import _partition_keys
+    from weightlifting_wod_etl_spark.sinks import kv_upsert_parquet
+
+    path = os.path.join(tmp, "kv_layout")
+    schema = "k long, p long, q long, ver long, v string"
+    b1 = [(1, 0, 0, 1, "a"), (2, 1, 1, 1, "b"), (3, 1, 0, 1, "c")]
+    b2 = [(1, 0, 0, 2, "a2"), (2, 1, 1, 0, "stale"), (4, 0, 1, 1, "d")]
+    model = {}
+    for rows, layout in ((b1, first), (b2, second)):
+        kv_upsert_parquet(
+            spark.createDataFrame(rows, schema), path, key_cols=["k"],
+            order_cols=["ver"], partition_by=layout,
+        )
+        for k, *rest in rows:
+            if k not in model or rest[2] > model[k][2]:
+                model[k] = tuple(rest)
+    got = {r.k: (r.p, r.q, r.ver, r.v) for r in read_table(spark, path).collect()}
+    assert got == model
+    assert _partition_keys(resolve(path)) == (second or [])
+
+
+def test_kv_upsert_survivor_ignores_input_layout(spark, tmp):
+    """Rows that tie on every order column still leave one survivor per
+    key that does not depend on how the batch is partitioned or ordered:
+    the other non-key columns break the tie, descending. (Ordering by
+    ``order_cols`` alone picked a different survivor set per layout.)"""
+    from weightlifting_wod_etl_spark.sinks import kv_upsert_parquet
+
+    rows = [(k, 1, f"v{k}_{i}") for k in range(20) for i in range(4)]
+    layouts = [(1, False), (4, False), (3, False), (1, True), (4, True)]
+    got = []
+    for i, (n, reverse) in enumerate(layouts):
+        df = spark.createDataFrame(
+            rows[::-1] if reverse else rows, "k long, ver long, v string"
+        ).repartition(n)
+        path = os.path.join(tmp, f"kv_tie_{i}")
+        kv_upsert_parquet(df, path, key_cols=["k"], order_cols=["ver"])
+        got.append(sorted(tuple(r) for r in read_table(spark, path).collect()))
+    assert all(g == got[0] for g in got)
+    assert got[0] == [(k, 1, f"v{k}_3") for k in range(20)]
+
+
 def test_xml_round_trip_explicit_schema(spark, tmp):
     """XML source/sink (Spark 4 native) — the XML interchange path (RSS /
     WXR exports in the reference's WordPress world), explicit schema."""

@@ -292,172 +292,6 @@ def test_completion_notification_listener(spark, stream_dirs):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState driver worker requires google.protobuf "
-    "(absent in this container); processor logic is covered by "
-    "test_tws_processor_logic_with_fake_state",
-)
-def test_transform_with_state_sessionizer_stream(spark, stream_dirs):
-    """transformWithStateInPandas flavor: same gap sessions as the batch
-    truth, on the Spark 4 arbitrary-state API (RocksDB-backed, event-time
-    close timers)."""
-    from weightlifting_wod_etl_spark.operators.sessionize import gap_sessionize
-    from weightlifting_wod_etl_spark.streaming.sessions import tws_gap_sessionize
-
-    src, in_dir, ckpt = stream_dirs
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(in_dir)
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got = _run_stream(
-            spark,
-            tws_gap_sessionize(stream, watermark="1 minute"),
-            ckpt + "_tws",
-            "tws_out",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    batch_df = gap_sessionize(
-        src.select("user_id", "ts", "value"),
-        ts_col="ts",
-        partition_cols=["user_id"],
-        gap_seconds=1800,
-        tiebreak_cols=["value"],
-    )
-    batch = {
-        (r.user_id, r.session_start): (r.n_events, float(r.sum_value))
-        for r in batch_df.groupBy("user_id", "session_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .collect()
-    }
-    assert len(got) > 0
-    matched = 0
-    for r in got:
-        key = (r.user_id, r.session_start)
-        if key in batch:
-            assert batch[key][0] == r.n_events
-            # both sides round to 2dp; allow one ulp of the last digit
-            # for accumulation-order drift at a rounding knife-edge
-            assert abs(batch[key][1] - float(r.sum_value)) < 0.015, (
-                key,
-                batch[key],
-                r.sum_value,
-            )
-            matched += 1
-    assert matched >= len(got) * 0.9
-
-
-def test_tws_processor_logic_with_fake_state():
-    """Drive the transformWithState session processor directly with fake
-    handle/state/timer objects: mid-stream gap closes emit, state carries
-    across batches, a stale timer is ignored, and a ripe timer flushes
-    the final open session and clears state."""
-    import pandas as pd
-
-    from weightlifting_wod_etl_spark.streaming.sessions import (
-        make_gap_session_processor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-        def clear(self):
-            self._v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-            self.timers = []
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-        def registerTimer(self, ts_ms):
-            self.timers.append(ts_ms)
-
-        def deleteTimer(self, ts_ms):
-            # mirror the real handle: deleting an unknown timer is a no-op
-            if ts_ms in self.timers:
-                self.timers.remove(ts_ms)
-
-    class FakeExpiredTimer:
-        def __init__(self, ms):
-            self._ms = ms
-
-        def getExpiryTimeInMs(self):
-            return self._ms
-
-    proc = make_gap_session_processor(gap_seconds=1800)
-    handle = FakeHandle()
-    proc.init(handle)
-
-    def hours(h):
-        return pd.Timestamp("2024-01-01") + pd.Timedelta(hours=h)
-
-    # batch 1: two events 10 min apart, then a 2 h gap, then one event
-    b1 = pd.DataFrame(
-        {"ts": [hours(0), hours(1 / 6), hours(2)], "value": [1.0, 2.0, 4.0]}
-    )
-    out1 = pd.concat(list(proc.handleInputRows((7,), iter([b1]), None)))
-    assert len(out1) == 1  # the 2-event session closed by the gap
-    assert out1.iloc[0].n_events == 2 and out1.iloc[0].sum_value == 3.0
-    assert handle.state.exists()  # the h=2 event stays open in state
-    assert handle.timers  # close timer armed
-
-    # batch 2: extends the open session
-    b2 = pd.DataFrame({"ts": [hours(2.25)], "value": [8.0]})
-    out2 = list(proc.handleInputRows((7,), iter([b2]), None))
-    assert not out2  # nothing closed
-    start_us, last_us, n, total = handle.state.get()
-    assert n == 2 and total == 1200  # state holds integer CENTS (r12)
-
-    # a STALE timer (armed before the extension) must not close the session
-    stale = FakeExpiredTimer(handle.timers[0] - 1)
-    assert not list(proc.handleExpiredTimer((7,), None, stale))
-    assert handle.state.exists()
-
-    # the ripe timer flushes the final session and clears state
-    ripe = FakeExpiredTimer(last_us // 1000 + 1800 * 1000)
-    out3 = pd.concat(list(proc.handleExpiredTimer((7,), None, ripe)))
-    assert len(out3) == 1
-    assert out3.iloc[0].n_events == 2 and out3.iloc[0].sum_value == 12.0
-    assert not handle.state.exists()
-
-
 def test_stream_stream_interval_join_matches_batch(spark, stream_dirs):
     """Stream-stream event-time interval join (purchase within 1 hour of a
     click by the same user): the streamed inner join must emit exactly the
@@ -716,75 +550,46 @@ def test_cdc_null_sequence_loses_to_numbered_change(spark, tmp_path):
     assert again == got
 
 
-def test_tws_processor_late_event_never_regresses_open_session():
-    """Review r10: a late-but-in-watermark event used to set last_us
-    backwards unconditionally — emitting inverted sessions (end < start)
-    and re-arming the close timer at an earlier horizon (premature
-    flush). Late events now extend-or-singleton, never regress."""
+def _sweep_batch(open_session, hours, values, gap_seconds=1800):
+    """One micro-batch through the shared gap-merge sweep, the way
+    ``stateful_gap_sessionize`` drives it: every merged session but the
+    last is emitted, the last is the new open-session state. Sessions are
+    ``(start_us, last_us, n, total_cents)``; ``hours`` are offsets from
+    2024-01-01."""
     import pandas as pd
 
-    from weightlifting_wod_etl_spark.streaming.sessions import (
-        make_gap_session_processor,
-    )
+    from weightlifting_wod_etl_spark.streaming.sessions import _gap_merge_sweep
 
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
+    sweep = _gap_merge_sweep(gap_seconds * 1_000_000)
+    ts = [pd.Timestamp("2024-01-01") + pd.Timedelta(hours=h) for h in hours]
+    merged = sweep(iter([pd.DataFrame({"ts": ts, "value": values})]), open_session)
+    return [tuple(m) for m in merged[:-1]], tuple(merged[-1])
 
-        def exists(self):
-            return self._v is not None
 
-        def get(self):
-            return self._v
+def _us(h):
+    """µs since epoch of 2024-01-01 + ``h`` hours."""
+    import pandas as pd
 
-        def update(self, v):
-            self._v = tuple(v)
+    return int((pd.Timestamp("2024-01-01") + pd.Timedelta(hours=h)).value) // 1000
 
-        def clear(self):
-            self._v = None
 
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-            self.timers = []
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-        def registerTimer(self, ts_ms):
-            self.timers.append(ts_ms)
-
-        def deleteTimer(self, ts_ms):
-            # mirror the real handle: deleting an unknown timer is a no-op
-            if ts_ms in self.timers:
-                self.timers.remove(ts_ms)
-
-    proc = make_gap_session_processor(gap_seconds=1800)
-    handle = FakeHandle()
-    proc.init(handle)
-
-    def hours(h):
-        return pd.Timestamp("2024-01-01") + pd.Timedelta(hours=h)
-
+def test_tws_processor_late_event_never_regresses_open_session():
+    """Review r10: a late-but-in-watermark event used to set last_us
+    backwards unconditionally — emitting inverted sessions (end < start).
+    Late events now extend-or-singleton, never regress."""
     # batch 1: one event at h=10 opens the session
-    b1 = pd.DataFrame({"ts": [hours(10)], "value": [1.0]})
-    assert not list(proc.handleInputRows((7,), iter([b1]), None))
-    t_open = handle.timers[-1]
+    out, state = _sweep_batch(None, [10], [1.0])
+    assert not out
 
     # batch 2 delivers LATE events h=9 (before the session's gap reach —
     # singleton) and h=9.7 (within gap of h=10 — extends start backwards)
-    b2 = pd.DataFrame({"ts": [hours(9), hours(9.7)], "value": [2.0, 4.0]})
-    out = list(proc.handleInputRows((7,), iter([b2]), None))
-    flat = pd.concat(out) if out else pd.DataFrame()
-    assert len(flat) == 1  # exactly the singleton for h=9
-    assert flat.iloc[0].session_start == flat.iloc[0].session_end == hours(9)
+    out, state = _sweep_batch(state, [9, 9.7], [2.0, 4.0])
+    assert out == [(_us(9), _us(9), 1, 200)]  # exactly the singleton for h=9
 
-    start_us, last_us, n, total = handle.state.get()
-    assert last_us // 1_000_000 == int(hours(10).timestamp())  # NOT regressed
-    assert start_us // 1_000_000 == int(hours(9.7).timestamp())  # extended back
+    start_us, last_us, n, total = state
+    assert last_us == _us(10)  # NOT regressed
+    assert start_us == _us(9.7)  # extended back
     assert n == 2 and total == 500  # integer cents in state (r12)
-    # the re-armed timer must not be EARLIER than the original horizon
-    assert handle.timers[-1] >= t_open
 
 
 def test_tws_processor_merges_consecutive_late_events():
@@ -793,84 +598,26 @@ def test_tws_processor_merges_consecutive_late_events():
     gap_sessionize which merges them into one session. The sweep now
     gap-merges (state ∪ batch), so a late chain becomes one session, and
     a chain reaching the open session's horizon merges into it."""
-    import pandas as pd
-
-    from weightlifting_wod_etl_spark.streaming.sessions import (
-        make_gap_session_processor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-        def clear(self):
-            self._v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-            self.timers = []
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-        def registerTimer(self, ts_ms):
-            self.timers.append(ts_ms)
-
-        def deleteTimer(self, ts_ms):
-            # mirror the real handle: deleting an unknown timer is a no-op
-            if ts_ms in self.timers:
-                self.timers.remove(ts_ms)
-
-    proc = make_gap_session_processor(gap_seconds=1800)
-    handle = FakeHandle()
-    proc.init(handle)
-
-    def hours(h):
-        return pd.Timestamp("2024-01-01") + pd.Timedelta(hours=h)
-
     # batch 1: open session at h=10
-    b1 = pd.DataFrame({"ts": [hours(10)], "value": [1.0]})
-    assert not list(proc.handleInputRows((7,), iter([b1]), None))
+    out, state = _sweep_batch(None, [10], [1.0])
+    assert not out
 
     # batch 2: three very-late events — h=8 and h=8.4 are within the
     # 30-min gap of each other (ONE merged session, not two singletons);
     # h=5 stands alone (its own singleton)
-    b2 = pd.DataFrame(
-        {"ts": [hours(8.4), hours(5), hours(8)], "value": [2.0, 8.0, 4.0]}
-    )
-    out = pd.concat(list(proc.handleInputRows((7,), iter([b2]), None)))
-    out = out.sort_values("session_start").reset_index(drop=True)
-    assert len(out) == 2
-    assert out.iloc[0].session_start == out.iloc[0].session_end == hours(5)
-    assert out.iloc[0].n_events == 1 and out.iloc[0].sum_value == 8.0
-    assert out.iloc[1].session_start == hours(8)
-    assert out.iloc[1].session_end == hours(8.4)
-    assert out.iloc[1].n_events == 2 and out.iloc[1].sum_value == 6.0
+    out, state = _sweep_batch(state, [8.4, 5, 8], [2.0, 8.0, 4.0])
+    assert out == [
+        (_us(5), _us(5), 1, 800),
+        (_us(8), _us(8.4), 2, 600),
+    ]
     # open session untouched
-    start_us, last_us, n, total = handle.state.get()
-    assert start_us // 1_000_000 == int(hours(10).timestamp())
-    assert n == 1 and total == 100  # integer cents in state (r12)
+    assert state == (_us(10), _us(10), 1, 100)  # integer cents (r12)
 
     # batch 3: a late CHAIN h=9.0 → h=9.4 → h=9.8 that connects through
     # to the open session at h=10 — everything merges, nothing emits
-    b3 = pd.DataFrame(
-        {"ts": [hours(9.0), hours(9.8), hours(9.4)], "value": [1.0, 1.0, 1.0]}
-    )
-    assert not list(proc.handleInputRows((7,), iter([b3]), None))
-    start_us, last_us, n, total = handle.state.get()
-    assert start_us // 1_000_000 == int(hours(9.0).timestamp())
-    assert last_us // 1_000_000 == int(hours(10).timestamp())
-    assert n == 4 and total == 400  # integer cents in state (r12)
+    out, state = _sweep_batch(state, [9.0, 9.8, 9.4], [1.0, 1.0, 1.0])
+    assert not out
+    assert state == (_us(9.0), _us(10), 4, 400)  # integer cents (r12)
 
 
 def test_stateful_sessionize_out_of_order_microbatch_no_inverted_sessions(
@@ -1054,26 +801,38 @@ def test_cdc_apply_tolerates_map_payload_column(spark, tmp_path):
     assert got == {1: ("fin", {"v": "2"}), 2: ("ins", {"v": "9"})}
 
 
-def test_twin_sink_jsonl_keeps_explicit_nulls(spark, tmp_path):
+@pytest.mark.parametrize("writer", ["twin_sink", "write_jsonl_idempotent"])
+def test_twin_sink_jsonl_keeps_explicit_nulls(spark, tmp_path, writer):
     """Review r11: the JSONL twin used the writer default
     ignoreNullFields=true, silently dropping null-valued keys per row —
-    the shape drift io.write_jsonl exists to prevent."""
+    the shape drift io.write_jsonl exists to prevent. Both JSONL writers
+    go through io.write_jsonl (the idempotent sink used to write ``{}``
+    for a row whose only payload field was NULL)."""
     import glob
     import json as _json
     import os
 
+    from weightlifting_wod_etl_spark.sinks import write_jsonl_idempotent
     from weightlifting_wod_etl_spark.streaming.twin_sink import make_twin_sink
 
     out = str(tmp_path / "twin")
-    sink = make_twin_sink(
-        os.path.join(out, "pq"), os.path.join(out, "jsonl"),
-        os.path.join(out, "ledger"),
-    )
     batch = spark.createDataFrame(
         [(1, None), (2, 5.0)], "k long, value double"
     )
-    sink(batch, 0)
-    files = glob.glob(os.path.join(out, "jsonl", "batch_id=0", "part-*"))
+    if writer == "twin_sink":
+        sink = make_twin_sink(
+            os.path.join(out, "pq"), os.path.join(out, "jsonl"),
+            os.path.join(out, "ledger"),
+        )
+        sink(batch, 0)
+        jsonl_dir = os.path.join(out, "jsonl", "batch_id=0")
+    else:
+        jsonl_dir = os.path.join(out, "jsonl")
+        keyed = batch.withColumn("idem_key", F.col("k").cast("string"))
+        assert write_jsonl_idempotent(
+            keyed, jsonl_dir, os.path.join(out, "ledger")
+        ) == 2
+    files = glob.glob(os.path.join(jsonl_dir, "part-*"))
     lines = []
     for fp in files:
         with open(fp) as f:

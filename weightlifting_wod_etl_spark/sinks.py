@@ -9,11 +9,13 @@ Reference behaviors mapped:
   - fail-open policy (§2.3-7): ledger read errors must not block writes —
     an unreadable ledger counts as empty.
 
-Scale notes: the ledger is keys-only (a few bytes per written unit), so the
-anti-join broadcasts. The upsert rewrites only the partitions whose keys
-appear in the incoming batch when ``partition_by`` is set — at 100 TB you
-never rewrite the whole table for a daily increment (dynamic partition
-overwrite).
+One write path per sink. The JSONL sink is ``dedup.anti_join_ledger``
+then ``io.write_jsonl`` (which owns the null-field policy). The upsert
+has one partition-scoped path: when the table's layout already equals
+``partition_by`` it rewrites only the partitions named in the increment
+and carries the rest by hard link — at 100 TB you never rewrite the
+whole table for a daily increment; any other layout is a full rewrite
+into the requested one.
 """
 
 from __future__ import annotations
@@ -24,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from .operators.dedup import exact_dedup
+from .io import write_jsonl
+from .operators.dedup import anti_join_ledger, exact_dedup, orderable_order_cols
 
 
 def _ledger_keys(spark: SparkSession, ledger_path: str) -> DataFrame | None:
@@ -70,10 +73,10 @@ def write_jsonl_idempotent(df: DataFrame, path: str, ledger_path: str) -> int:
     (c) no forced broadcast hint: the keys-only ledger grows without
     bound across runs, and AQE must stay free to pick a shuffled join once
     it outgrows the driver (operators/dedup.anti_join_ledger's documented
-    rationale).
+    rationale);
+    (d) the rows go out through ``io.write_jsonl``, so a NULL field is an
+    explicit ``"key": null`` like every other JSONL write in the engine.
     """
-    from .operators.dedup import orderable_order_cols
-
     ledger = _ledger_keys(df.sparkSession, ledger_path)
     # canonical payload JSON: struct field order is the fixed column
     # order, so the content key is deterministic per content
@@ -89,7 +92,7 @@ def write_jsonl_idempotent(df: DataFrame, path: str, ledger_path: str) -> int:
     df = exact_dedup(df, key_cols=["idem_key"], order_cols=others or [F.lit(1)])
     # keys are never NULL here (the content key fills them), so a plain
     # equi anti-join is exact
-    fresh = df if ledger is None else df.join(ledger, "idem_key", "left_anti")
+    fresh = df if ledger is None else anti_join_ledger(df, ledger)
     # localCheckpoint, not cache(): three actions (count, JSON write,
     # ledger write) must see ONE snapshot. A cache() partition evicted
     # under memory pressure recomputes — with a non-deterministic df the
@@ -98,7 +101,7 @@ def write_jsonl_idempotent(df: DataFrame, path: str, ledger_path: str) -> int:
     fresh = fresh.localCheckpoint(eager=False)
     n = fresh.count()
     if n:
-        fresh.drop("idem_key").write.mode("append").json(path)
+        write_jsonl(fresh.drop("idem_key"), path, mode="append")
         fresh.select("idem_key").write.mode("append").parquet(ledger_path)
     return n
 
@@ -112,101 +115,72 @@ def kv_upsert_parquet(
     stats_cols: list[str] | None = None,
 ) -> None:
     """Last-writer-wins keyed table: union existing + incoming, keep one row
-    per key by a TOTAL order, rewrite. The engine-side equivalent of the
-    reference's per-record DynamoDB putItem (OP18) with deterministic
-    survivor choice.
+    per key, commit. The engine-side equivalent of the reference's
+    per-record DynamoDB putItem (OP18) with deterministic survivor choice:
+    rows rank by ``order_cols`` descending, then by every other non-key
+    column descending (``dedup.orderable_order_cols``), so the order is
+    total and the survivor never depends on input partitioning.
 
-    Every write is one ``versioned.commit_version`` (crash safety and
-    index upkeep are defined there). With ``partition_by``, the upsert is
-    INCREMENTAL: only the partitions whose values appear in the incoming
-    batch are read (partition-pruned scan) and rewritten; every untouched
-    partition is carried into the new version by hard link
-    (metadata-only — no data bytes move). A crash never leaves a
-    half-overwritten partition, which the old in-place
-    ``partitionOverwriteMode=dynamic`` write could produce.
-    A daily increment against a 100 TB table still costs O(increment):
-    at deployment scale the links are manifest/CopyObject operations, the
-    same shape as a partition-scoped Delta replaceWhere. Keys must not
-    move between partitions (partition cols ⊆ key semantics), the same
-    contract a Delta/Iceberg MERGE keyed on ``key_cols`` would carry.
+    One path, one ``versioned.commit_version`` (crash safety and index
+    upkeep are defined there). The increment's distinct ``partition_by``
+    tuples are collected first — zero-column rows for a flat table, none
+    at all for an empty increment, which then writes nothing. When the
+    table's on-disk partition columns equal ``partition_by``, only the
+    partitions named by those tuples are read (partition-pruned scan) and
+    rewritten; every untouched partition is carried into the new version
+    by hard link (metadata-only — no data bytes move), so a daily
+    increment against a 100 TB table costs O(increment), the same shape
+    as a partition-scoped Delta replaceWhere. For a flat table the filter
+    is TRUE. Any other existing layout (flat → partitioned, partitioned →
+    flat, or different partition columns) is read whole and rewritten
+    into the requested layout. Keys must not move between partitions
+    (partition cols ⊆ key semantics), the same contract a Delta/Iceberg
+    MERGE keyed on ``key_cols`` would carry.
 
-    The affected-partition value list is collected to the driver — bounded
-    by the increment's distinct partition tuples (e.g. days in the batch),
-    never by table or batch row count."""
+    The tuple list is collected to the driver — bounded by the
+    increment's distinct partition tuples (e.g. days in the batch), never
+    by table or batch row count."""
     from functools import reduce
 
+    from .operators.compact import _partition_keys
     from .operators.versioned import commit_version, resolve, table_exists
 
-    spark = df.sparkSession
+    part_cols = partition_by or []
     data_dir = resolve(path)
-    # One snapshot for ALL evaluations of the increment (partition-list
-    # collect, emptiness probe, and the write): a source that is
-    # non-deterministic under recomputation could otherwise materialize a
-    # partition value at write time that the collect didn't see — that
-    # partition's existing rows were never unioned in, and the staging
-    # subtree (which blocks the carry) would silently replace them.
+    # One snapshot for BOTH evaluations of the increment (tuple collect and
+    # the write): a source that is non-deterministic under recomputation
+    # could otherwise materialize a partition value at write time that the
+    # collect didn't see — that partition's existing rows were never
+    # unioned in, and the staging subtree (which blocks the carry) would
+    # silently replace them.
     df = df.localCheckpoint(eager=False)
+    parts = df.select(*part_cols).distinct().collect()
+    if not parts:
+        return  # empty increment: nothing to merge, nothing to rewrite
+    merged, in_place = df, False
     # table_exists, not bare path existence: a failed first write leaves an
     # empty makedirs'd dir whose "read" would wedge every retry
-    if partition_by and table_exists(path):
-        # a pre-partitioning plain layout (loose root files) can't be
-        # carried per-partition — migrate it with one full rewrite below
-        loose = any(
-            f.endswith(".parquet") and not f.startswith(("_", "."))
-            for f in os.listdir(data_dir)
-        )
-        if not loose:
-            parts = df.select(*partition_by).distinct().collect()
-            if not parts:
-                return  # empty increment: nothing to merge, nothing to rewrite
-            # eqNullSafe: a null partition value must still match its existing
-            # __HIVE_DEFAULT_PARTITION__ rows, or duplicate keys survive there
-            pred = reduce(
-                lambda a, b: a | b,
-                [
-                    reduce(
-                        lambda a, b: a & b,
-                        [F.col(c).eqNullSafe(F.lit(r[c])) for c in partition_by],
-                    )
-                    for r in parts
-                ],
-            )
-            existing = spark.read.parquet(data_dir).filter(pred)
-            merged = existing.unionByName(df, allowMissingColumns=True)
-            winners = exact_dedup(
-                merged,
-                key_cols=key_cols,
-                order_cols=[F.col(c).desc() for c in order_cols],
-            )
-            commit_version(
-                path, winners, base=data_dir, partition_by=partition_by,
-                carry="partitions", index_cols=stats_cols,
-            )
-            return
-
-    # Empty-increment guard for the full-rewrite branches: a first-write
-    # empty batch would otherwise create a parquet dir with no data files
-    # (unreadable table), and an empty batch over an existing unpartitioned
-    # table would pay a pointless full rewrite. The probe evaluates the
-    # increment once (limit-1); the partitioned-incremental branch above
-    # derives emptiness for free from its collected partition list instead.
-    if df.isEmpty():
-        return
-    existed = table_exists(path)
-    if existed:
-        existing = spark.read.parquet(data_dir)
+    if table_exists(path):
+        existing = df.sparkSession.read.parquet(data_dir)
+        in_place = _partition_keys(data_dir) == part_cols
+        if in_place:
+            # eqNullSafe: a null partition value must still match its
+            # existing __HIVE_DEFAULT_PARTITION__ rows, or duplicate keys
+            # survive there
+            existing = existing.filter(reduce(lambda a, b: a | b, [
+                reduce(lambda a, b: a & b,
+                       [F.col(c).eqNullSafe(F.lit(r[c])) for c in part_cols],
+                       F.lit(True))
+                for r in parts
+            ]))
         merged = existing.unionByName(df, allowMissingColumns=True)
-    else:
-        merged = df
-    winners = exact_dedup(
-        merged, key_cols=key_cols, order_cols=[F.col(c).desc() for c in order_cols]
+    order = [F.col(c).desc() for c in order_cols] + orderable_order_cols(
+        merged, set(key_cols) | set(order_cols), ascending=False
     )
-    # full rewrite (first write, or unpartitioned table) as one new
-    # version (operators/versioned.py). At cluster scale this branch is a
-    # Delta MERGE INTO keyed on key_cols.
     commit_version(
-        path, winners, base=data_dir, partition_by=partition_by,
-        index_cols=stats_cols,
+        path, exact_dedup(merged, key_cols=key_cols, order_cols=order),
+        base=data_dir, partition_by=partition_by,
+        carry="partitions" if in_place else None, index_cols=stats_cols,
     )
 
 

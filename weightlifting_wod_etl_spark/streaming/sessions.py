@@ -79,11 +79,12 @@ OUT_SCHEMA = (
 
 
 def _gap_merge_sweep(gap_us: int):
-    """Build the per-key session sweep both stateful sessionizers share:
-    ``sweep(pdf_iter, open_session)`` -> start-sorted merged sessions as
-    ``[start_us, last_us, n, total_cents]`` lists, the last one still open.
+    """Build the per-key session sweep behind
+    :func:`stateful_gap_sessionize`: ``sweep(pdf_iter, open_session)`` ->
+    start-sorted merged sessions as ``[start_us, last_us, n, total_cents]``
+    lists, the last one still open.
 
-    Returned as a closure so cloudpickle ships it BY VALUE inside each
+    Returned as a closure so cloudpickle ships it BY VALUE inside the
     sessionizer's function — Python workers cannot import this package,
     and a module-level helper would be pickled by reference."""
 
@@ -192,116 +193,3 @@ def stateful_gap_sessionize(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def make_gap_session_processor(gap_seconds: int = 1800):
-    """Build the ``StatefulProcessor`` behind :func:`tws_gap_sessionize`.
-
-    Factored out so its session logic is unit-testable against fake
-    handles/state even where the transformWithState RUNTIME is absent
-    (the API's driver worker imports ``google.protobuf``, which this
-    container does not ship — the end-to-end streaming test skips there;
-    see test_streaming.py). The class is defined inside the factory so
-    cloudpickle ships it by value: Python workers cannot import this
-    package."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    sweep = _gap_merge_sweep(gap_seconds * 1_000_000)
-
-    class GapSessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            # total_cents long, same order-free convention as STATE_SCHEMA
-            self._state = handle.getValueState(
-                "open_session",
-                "start_us long, last_us long, n long, total_cents long",
-            )
-
-        def _emit(self, user_id, s):
-            import pandas as pd
-
-            return pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.to_datetime(s[0], unit="us")],
-                    "session_end": [pd.to_datetime(s[1], unit="us")],
-                    "n_events": [s[2]],
-                    "sum_value": [s[3] / 100.0],
-                }
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            cur = self._state.get() if self._state.exists() else None
-            # the sweep's bounds never regress (the open session only
-            # absorbs intervals), so the re-armed close timer is never
-            # earlier than the horizon already promised
-            merged = sweep(rows, cur)
-            for s, e, cnt, tot in merged[:-1]:
-                yield self._emit(user_id, (s, e, cnt, tot))
-            if not merged:
-                return
-            start_us, last_us, n, total = merged[-1]
-            # delete the previously armed timer BEFORE re-arming (review
-            # r12): registerTimer adds, never replaces, so a session
-            # extended across N batches accumulated N timers — O(batches)
-            # timer-state rows per active key, each firing a no-op'd
-            # stale callback. The old horizon is derivable from the prior
-            # state; deleting a never-registered timer is a no-op.
-            if cur is not None and cur[1] is not None:
-                old_horizon = cur[1] // 1000 + gap_seconds * 1000
-                new_horizon = last_us // 1000 + gap_seconds * 1000
-                if old_horizon != new_horizon:
-                    self._handle.deleteTimer(old_horizon)
-            self._state.update((start_us, last_us, n, total))
-            # (re-)arm the close timer: fires once the watermark passes the
-            # open session's gap horizon
-            self._handle.registerTimer(last_us // 1000 + gap_seconds * 1000)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (user_id,) = key
-            if self._state.exists():
-                s = self._state.get()
-                # the timer may be stale (session extended since armed):
-                # only close if the gap horizon has truly passed
-                if (
-                    expiredTimerInfo.getExpiryTimeInMs()
-                    >= s[1] // 1000 + gap_seconds * 1000
-                ):
-                    yield self._emit(user_id, s)
-                    self._state.clear()
-
-        def close(self) -> None:
-            pass
-
-    return GapSessionProcessor()
-
-
-def tws_gap_sessionize(
-    events: DataFrame, gap_seconds: int = 1800, watermark: str = DEFAULT_WATERMARK
-) -> DataFrame:
-    """Gap sessionizer on the Spark 4 ``transformWithStateInPandas`` API —
-    the successor to applyInPandasWithState, and the variant that closes
-    the old API's semantic gap: an EVENT-TIME TIMER fires when the
-    watermark passes (last_event + gap), so an idle user's final session
-    is EMITTED instead of parked forever in state.
-
-    State layout: one ValueState row per user (open session aggregate).
-    Scale: state is O(open sessions) in the RocksDB store (required by
-    this API — incremental checkpoints, spill-to-disk, so state size is
-    bounded by disk not heap); each micro-batch touches only keys with
-    input rows or expiring timers.
-
-    Runtime requirement: the transformWithState driver worker imports
-    ``google.protobuf`` — on environments without it (this container),
-    use :func:`stateful_gap_sessionize`; the processor logic itself is
-    shared-tested via :func:`make_gap_session_processor`."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return src.groupBy("user_id").transformWithStateInPandas(
-        make_gap_session_processor(gap_seconds),
-        outputStructType=OUT_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
-    )

@@ -33,6 +33,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from ..io import write_jsonl
+
 
 def make_twin_sink(
     parquet_dir: str,
@@ -71,13 +73,10 @@ def make_twin_sink(
             first.write.mode("overwrite").parquet(
                 os.path.join(parquet_dir, f"batch_id={batch_id}")
             )
-            # ignoreNullFields=false: the writer's default DROPS null-
-            # valued keys per row, so the JSONL twin's object shapes would
-            # drift from the parquet twin and from the reference's
-            # json.dumps output (io.write_jsonl documents the same pin)
-            batch_df.write.mode("overwrite").option(
-                "ignoreNullFields", "false"
-            ).json(os.path.join(jsonl_dir, f"batch_id={batch_id}"))
+            # io.write_jsonl keeps null-valued keys, so the JSONL twin's
+            # object shapes match the parquet twin and the reference's
+            # json.dumps output (the policy lives there, once)
+            write_jsonl(batch_df, os.path.join(jsonl_dir, f"batch_id={batch_id}"))
         finally:
             batch_df.unpersist()
         if obs is not None:
