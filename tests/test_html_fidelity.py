@@ -30,7 +30,7 @@ def test_fidelity_matches_regex_on_reference_fixture(spark):
         html = json.load(f)["content"]["rendered"]
     df = spark.createDataFrame([(html,)], ["content"])
     row = df.select(
-        strip_html(F.col("content")).alias("regex"),
+        strip_html("content").alias("regex"),
         strip_html_fidelity(F.col("content")).alias("parser"),
     ).first()
     assert row.regex == row.parser
@@ -43,7 +43,7 @@ def test_fidelity_survives_adversarial_markup(spark):
     html = '<p title="a>b">workout text</p><script>var hidden = 1;</script>'
     df = spark.createDataFrame([(html,)], ["content"])
     row = df.select(
-        strip_html(F.col("content")).alias("regex"),
+        strip_html("content").alias("regex"),
         strip_html_fidelity(F.col("content")).alias("parser"),
     ).first()
     assert row.parser == "workout text"
@@ -71,7 +71,7 @@ def test_escaped_literal_entities_decode_once_not_twice(spark):
     df = spark.createDataFrame(
         [("<p>a &amp;lt; b &amp; c &lt; d</p>",)], ["html"]
     )
-    got = df.select(strip_html(F.col("html")).alias("t")).collect()[0].t
+    got = df.select(strip_html("html").alias("t")).collect()[0].t
     assert got == "a &lt; b & c < d"
-    got2 = df.select(decode_entities(F.col("html")).alias("t")).collect()[0].t
+    got2 = df.select(decode_entities("html").alias("t")).collect()[0].t
     assert got2 == "<p>a &lt; b & c < d</p>"

@@ -706,3 +706,106 @@ def test_quality_decimal_tier_matches_oracle(spark, decimal_tier_dir, name):
         # the token mix) would silently drain this test's evidence
         got = spark_pdf.loc[spark_pdf["doc_id"] == 9000015, "quality"]
         assert list(got) == [0.7003], list(got)
+
+
+# ---------------------------------------------------------------------------
+# Non-BMP seam. q_trigram_entropy mints grams by indexing the text's
+# split(text, '') character array; that array must hold whole code points
+# — a supplementary-plane character is ONE element, never two UTF-16
+# surrogate halves — or the grams (and entropy) diverge from the oracle's
+# code-point grams. Documents of emoji, math-alphanumeric and CJK
+# Extension B characters, mixed with BMP text, and repeated so runs of
+# equal grams fold.
+
+_NON_BMP_DOCS = """
+    (9400001, 'a😀b😀c😀a😀b😀c😀', 'en', 'dirty', 12),
+    (9400002, '😀😀😀😀😀', 'en', 'dirty', 5),
+    (9400003, 'x𝔘y𝔘x𝔘y — 𠜎𠜱𠝹𠱓𠜎𠜱', 'en', 'dirty', 16),
+    (9400004, 'ab😀', 'en', 'dirty', 3)
+"""
+
+
+@pytest.fixture(scope="module")
+def non_bmp_dir(tmp_path_factory):
+    import duckdb
+
+    from weightlifting_wod_etl_spark.io import table_path
+
+    d = tmp_path_factory.mktemp("non_bmp_sf")
+    con = duckdb.connect()
+    con.execute(
+        f"""
+        COPY (
+            SELECT * FROM read_parquet('{table_path(SF_SMOKE, "documents")}')
+            UNION ALL SELECT * FROM (VALUES {_NON_BMP_DOCS}
+            ) t(doc_id, text, lang, source, n_chars)
+        ) TO '{table_path(str(d), "documents")}' (FORMAT PARQUET)
+        """
+    )
+    con.close()
+    return str(d)
+
+
+def test_trigram_entropy_non_bmp_matches_oracle(spark, non_bmp_dir):
+    import duckdb
+
+    from weightlifting_wod_etl_spark import queries_registry as reg
+    from weightlifting_wod_etl_spark.io import table_path
+
+    name = "q_trigram_entropy"
+    spark_pdf = reg.QUERIES[name](spark, non_bmp_dir).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{table_path(non_bmp_dir, 'documents')}')"
+    )
+    duck_pdf = con.execute(reg.ORACLES[name]).fetchdf()
+    con.close()
+    assert_frames_match(spark_pdf, duck_pdf, f"{name}[non-bmp]")
+    got = spark_pdf.set_index("doc_id")
+    # code points, not UTF-16 units: 5 emoji are 3 grams of one kind
+    assert got.loc[9400002, "n_grams"] == 3
+    assert got.loc[9400002, "entropy"] == 0.0
+    assert got.loc[9400004, "n_grams"] == 1
+
+
+# The oracle above mints grams by cutting each text into 3-character
+# chunks from offsets 1, 2 and 3 (linear in document length). The plain
+# definition — one substr per start position, O(n^2) per document — is
+# kept here as the reference for that rewrite; the smoke and non-BMP
+# documents are short enough for it.
+_PER_START_TRIGRAM_ORACLE = """
+    WITH d AS (
+        SELECT doc_id, text, row_number() OVER () AS rid
+        FROM documents WHERE doc_id IS NOT NULL
+    ), g AS (
+        SELECT rid, doc_id, text,
+               unnest(range(1, greatest(length(text) - 1, 1))) AS i
+        FROM d
+    ), cnt AS (
+        SELECT rid, doc_id, substr(text, i, 3) AS gram, count(*)::BIGINT AS c
+        FROM g GROUP BY 1, 2, 3
+    )
+    SELECT doc_id,
+           sum(c)::BIGINT AS n_grams,
+           round(ln(sum(c)) - sum(c * ln(c)) / sum(c), 6) AS entropy
+    FROM cnt GROUP BY rid, doc_id
+"""
+
+
+def test_trigram_entropy_oracle_matches_per_start_substr(non_bmp_dir):
+    import duckdb
+
+    from weightlifting_wod_etl_spark import queries_registry as reg
+    from weightlifting_wod_etl_spark.io import table_path
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{table_path(non_bmp_dir, 'documents')}')"
+    )
+    chunked = sorted(con.execute(reg.ORACLES["q_trigram_entropy"]).fetchall())
+    per_start = sorted(con.execute(_PER_START_TRIGRAM_ORACLE).fetchall())
+    con.close()
+    assert len(per_start) > 4  # the smoke documents plus the non-BMP ones
+    assert chunked == per_start

@@ -414,3 +414,74 @@ def test_jsonl_idempotent_casts_wider_keys_to_ledger_type(spark, tmp):
     ]
 
 
+
+
+def test_kv_upsert_partition_values_match_dict_model(spark, tmp):
+    """Partition values round-trip exactly through repeated upserts into
+    a string-partitioned table: integer-looking strings ('007'), NULL,
+    values that need path escaping (space, '/', '%') and partitions new to
+    the table. Reading the table back used to infer 'p' as int from
+    'p=007'/'p=010', and the rewrite minted p=7/p=10 beside them: four
+    rows for two keys."""
+    from weightlifting_wod_etl_spark.sinks import kv_upsert_parquet
+
+    path = os.path.join(tmp, "kv_pvals")
+    schema = "k long, p string, ver long, v string"
+    rounds = [
+        [(1, "007", 1, "a"), (2, "010", 1, "b"), (3, None, 1, "c")],
+        # same keys again (the int-like dirs are read back) + a new partition
+        [(1, "007", 2, "a2"), (2, "010", 2, "b2"), (3, None, 2, "c2"),
+         (4, "042", 1, "d")],
+        [(5, "a b", 1, "e"), (6, "x/y", 1, "f"), (7, "50%", 1, "g")],
+        [(5, "a b", 2, "e2"), (6, "x/y", 0, "stale"), (7, "50%", 2, "g2"),
+         (3, None, 1, "old"), (8, "new part", 1, "h")],
+    ]
+    model = {}
+    for rows in rounds:
+        kv_upsert_parquet(
+            spark.createDataFrame(rows, schema), path, key_cols=["k", "p"],
+            order_cols=["ver"], partition_by=["p"],
+        )
+        for k, p, ver, v in rows:
+            if (k, p) not in model or ver > model[(k, p)][0]:
+                model[(k, p)] = (ver, v)
+        got = [
+            ((r.k, r.p), (r.ver, r.v))
+            for r in spark.read.schema(schema).parquet(resolve(path)).collect()
+        ]
+        assert len(got) == len(model)  # no duplicate keys
+        assert dict(got) == model
+    assert not {"p=7", "p=10", "p=42"} & set(os.listdir(resolve(path)))
+
+
+def test_jsonl_idempotent_job_count_and_empty_replay(spark, tmp):
+    """A batch against an existing ledger runs exactly four Spark jobs:
+    two adaptive query stages (the in-batch dedup's shuffle and the
+    ledger side of the anti-join), the JSON write, which also observes
+    the written-row count, and the ledger append. Reading the ledger
+    starts no schema-inference job, and there is no separate count()
+    job. A full replay then adds no ledger file and no JSON part file."""
+    from weightlifting_wod_etl_spark.sinks import write_jsonl_idempotent
+
+    def batch(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("idem_key")
+        )
+
+    out, ledger = os.path.join(tmp, "out"), os.path.join(tmp, "ledger")
+    assert write_jsonl_idempotent(batch(0, 10), out, ledger) == 10
+    sc = spark.sparkContext
+    group = "test-jsonl-idempotent-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        assert write_jsonl_idempotent(batch(5, 15), out, ledger) == 5
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # the store fills async
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+    ledger_before, out_before = os.listdir(ledger), os.listdir(out)
+    assert write_jsonl_idempotent(batch(0, 15), out, ledger) == 0
+    assert sorted(os.listdir(ledger)) == sorted(ledger_before)
+    assert sorted(os.listdir(out)) == sorted(out_before)
+    assert spark.read.json(out).count() == 15

@@ -76,12 +76,10 @@ def test_per_page_limit(posts_reader, pages_dir):
 
 def test_feeds_pipeline(posts_reader, pages_dir):
     """Source output plugs straight into the OP4 HTML-strip projection."""
-    from pyspark.sql import functions as F
-
     from weightlifting_wod_etl_spark.functions.html import strip_html
 
     df = posts_reader.read.format("wod_posts").option("pages_dir", pages_dir).load()
-    out = df.select("slug", strip_html(F.col("content")).alias("text")).orderBy("slug")
+    out = df.select("slug", strip_html("content").alias("text")).orderBy("slug")
     first = out.first()
     assert first.text.startswith("Workout")
 

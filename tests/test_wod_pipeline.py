@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from tests.conftest import SF_SMOKE
 
+import os
+
 import pytest
 
 POST_1_HTML = """<p>Intro preamble that is dropped</p>
@@ -44,24 +46,32 @@ A.
 Jerk 5x1</p>"""
 
 
+POSTS = [
+    # slug carries the range dec 21-27 2020 (Monday start)
+    (1, POST_1_HTML, "2020-12-20T17:00:21",
+     "december-21-27-2020-5-day-weightlifting-program",
+     "December 21-27, 2020 &#8211; 5 Day Weightlifting Program"),
+    # no date in slug/title → post_date fallback (a Wednesday)
+    (2, POST_2_HTML, "2021-01-06T08:00:00", "misc-post", "Misc Post"),
+    # single day marker → zero records (reference pairwise rule)
+    (3, POST_3_HTML, "2021-01-06T08:00:00", "misc-post-2", "Misc 2"),
+]
+POST_COLS = ["post_id", "html", "post_date", "slug", "title"]
+
+
+def pipeline_rows(spark) -> list[tuple]:
+    """wod_pipeline over POSTS, built afresh, as sorted string tuples."""
+    from weightlifting_wod_etl_spark.plans.wod_pipeline import wod_pipeline
+
+    out = wod_pipeline(spark.createDataFrame(POSTS, POST_COLS)).collect()
+    return sorted(tuple(str(v) for v in r) for r in out)
+
+
 @pytest.fixture(scope="module")
 def records(spark):
     from weightlifting_wod_etl_spark.plans.wod_pipeline import wod_pipeline
 
-    posts = spark.createDataFrame(
-        [
-            # slug carries the range dec 21-27 2020 (Monday start)
-            (1, POST_1_HTML, "2020-12-20T17:00:21",
-             "december-21-27-2020-5-day-weightlifting-program",
-             "December 21-27, 2020 &#8211; 5 Day Weightlifting Program"),
-            # no date in slug/title → post_date fallback (a Wednesday)
-            (2, POST_2_HTML, "2021-01-06T08:00:00", "misc-post", "Misc Post"),
-            # single day marker → zero records (reference pairwise rule)
-            (3, POST_3_HTML, "2021-01-06T08:00:00", "misc-post-2", "Misc 2"),
-        ],
-        ["post_id", "html", "post_date", "slug", "title"],
-    )
-    rows = wod_pipeline(posts).collect()
+    rows = wod_pipeline(spark.createDataFrame(POSTS, POST_COLS)).collect()
     return {(r.post_id, str(r.date)): r for r in rows}
 
 
@@ -179,8 +189,6 @@ def test_extract_date_range_reference_flow(spark):
     front (slug if truthy, else dash-normalized title), patterns try in
     order on that text, first MATCH wins even when its dates are
     invalid, and the (start, end) pair is atomic."""
-    from pyspark.sql import functions as F
-
     from weightlifting_wod_etl_spark.operators.dates import extract_date_range
 
     cases = [
@@ -211,7 +219,7 @@ def test_extract_date_range_reference_flow(spark):
     df = spark.createDataFrame(
         [(s, t) for s, t, _, _ in cases], "slug string, title string"
     )
-    s, e = extract_date_range(F.col("slug"), F.col("title"))
+    s, e = extract_date_range("slug", "title")
     got = {
         (r.slug, r.title): (str(r.s) if r.s else None, str(r.e) if r.e else None)
         for r in df.select("slug", "title", s.alias("s"), e.alias("e")).collect()
@@ -238,3 +246,87 @@ def test_clean_records_non_iso_dates(spark):
     got = {r.id: r.date for r in clean_records(df).collect()}
     assert got[1] == got[2] == got[3] == got[4] == "2020-12-21"
     assert got[5] == ""  # documented degradation: unparseable -> ''
+
+
+def _clear_pipeline_memos() -> None:
+    from weightlifting_wod_etl_spark.functions import html
+    from weightlifting_wod_etl_spark.operators import clean, dates
+    from weightlifting_wod_etl_spark.plans import wod_pipeline as wp
+
+    for fn in (dates.extract_date_range, wp._week_start, html.strip_html,
+               html.decode_entities, clean._canonical_date):
+        fn.cache_clear()
+
+
+def test_pipeline_builds_date_range_parser_once(spark, monkeypatch):
+    """The pipeline's data-independent expressions are built once per
+    process: a second build of wod_pipeline builds no date-range parser
+    (its month lookups are not called again) and gives the same rows."""
+    from weightlifting_wod_etl_spark.operators import dates
+
+    calls = []
+    real = dates.month_number
+    monkeypatch.setattr(dates, "month_number", lambda c: calls.append(c) or real(c))
+    _clear_pipeline_memos()
+    first = pipeline_rows(spark)
+    assert calls  # the first build parsed slug and title
+    n = len(calls)
+    assert pipeline_rows(spark) == first
+    assert len(calls) == n
+    assert dates.extract_date_range.cache_info().misses == 1
+
+
+def test_pipeline_memo_under_concurrent_builds(spark):
+    """More threads than the session has cores building the pipeline at
+    once on empty memos (as concurrent ingest streams do), with a short
+    switch interval to interleave the first builds, all get the serial
+    build's rows."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    serial = pipeline_rows(spark)
+    n = spark.sparkContext.defaultParallelism + 2
+    _clear_pipeline_memos()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(n) as pool:
+            futures = [pool.submit(pipeline_rows, spark) for _ in range(n)]
+            got = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [serial] * n
+
+
+def test_pipeline_memo_survives_session_restart(spark, tmp_path):
+    """The memoized expressions hold no session: in a fresh process,
+    building the pipeline, stopping the session, starting a new one with
+    ``get_spark`` and building again gives the same rows as this session,
+    and the date-range parser is built once."""
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO_DIR
+
+    script = f"""
+import sys
+sys.path.insert(0, {REPO_DIR!r})
+from tests.test_wod_pipeline import pipeline_rows
+from weightlifting_wod_etl_spark.operators.dates import extract_date_range
+from weightlifting_wod_etl_spark.session import get_spark
+
+rows = []
+for _ in range(2):
+    spark = get_spark(app_name="memo-restart", cpus=2, shuffle_partitions=4)
+    rows.append(pipeline_rows(spark))
+    spark.stop()
+assert rows[0] == rows[1], rows
+assert extract_date_range.cache_info().misses == 1
+print(repr(rows[0]))
+"""
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, capture_output=True,
+        text=True, timeout=300, env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().splitlines()[-1] == repr(pipeline_rows(spark))

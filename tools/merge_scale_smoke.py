@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 import shutil
 import sys
@@ -37,6 +38,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+log = logging.getLogger("merge_scale")
 
 BASE = "/root/testdata/sf0.1"
 
@@ -114,6 +117,8 @@ def main() -> None:
     ap.add_argument("--cdc-batches", type=int, default=5)
     ap.add_argument("--out", default=os.path.join(REPO, "MERGE_SCALE.json"))
     args = ap.parse_args()
+    logging.basicConfig(format="[%(name)s] %(message)s")
+    log.setLevel(logging.INFO)
 
     from weightlifting_wod_etl_spark.session import get_spark
 
@@ -173,9 +178,8 @@ def main() -> None:
                 sum(c["seconds"] for c in cdc) / len(cdc), 3
             ) if cdc else None,
         }
-        print(f"[merge_scale] {label} rows={rows}: targeted={targeted} "
-              f"full={full} cdc_mean={report['sizes'][label]['cdc_mean_seconds']}",
-              file=sys.stderr)
+        log.info("%s rows=%s: targeted=%s full=%s cdc_mean=%s", label, rows, targeted,
+                 full, report["sizes"][label]["cdc_mean_seconds"])
 
     t1 = report["sizes"]["1x"]["targeted"]["seconds"]
     tk = report["sizes"][f"{args.factor}x"]["targeted"]["seconds"]

@@ -14,9 +14,12 @@ Not part of the bench contract — a dev tool only.
 from __future__ import annotations
 
 import argparse
+import logging
 import os
 import sys
 import time
+
+log = logging.getLogger("qtime")
 
 
 def main() -> None:
@@ -31,6 +34,7 @@ def main() -> None:
         help="also collect() once and capture the AQE-final executed plan",
     )
     args = ap.parse_args()
+    logging.basicConfig(format="%(message)s")
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -46,7 +50,7 @@ def main() -> None:
 
     for name in args.queries:
         if name not in QUERIES:
-            print(f"UNKNOWN {name}", file=sys.stderr)
+            log.warning("UNKNOWN %s", name)
             continue
         spark.sparkContext.setJobDescription(f"qtime:{name}")
         df = QUERIES[name](spark, sf_dir)

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 import shutil
 import sys
@@ -27,6 +28,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+log = logging.getLogger("scale_smoke")
 
 BASE = "/root/testdata/sf0.1"
 OFF = 1_000_000_000  # per-replica key offset, far above any sf0.1 key
@@ -131,6 +134,8 @@ def main() -> None:
         "— it is multiple GB per factor)",
     )
     args = ap.parse_args()
+    logging.basicConfig(format="[%(name)s] %(message)s")
+    log.setLevel(logging.INFO)
 
     from weightlifting_wod_etl_spark.queries_registry import QUERIES as REG
     from weightlifting_wod_etl_spark.session import get_spark
@@ -146,7 +151,7 @@ def main() -> None:
     t0 = time.perf_counter()
     build_scaled(spark, args.factor, scaled_dir)
     build_s = round(time.perf_counter() - t0, 1)
-    print(f"[scale_smoke] built {args.factor}x dataset in {build_s}s", file=sys.stderr)
+    log.info("built %sx dataset in %ss", args.factor, build_s)
 
     report = {"factor": args.factor, "queries": {}}
     for name in QUERIES:
@@ -161,8 +166,7 @@ def main() -> None:
             "ratio": ratio,
         }
         flag = " SUPERLINEAR" if ratio and ratio > args.factor * 1.3 else ""
-        print(f"[scale_smoke] {name}: {base_s}s -> {big_s}s ({ratio}x){flag}",
-              file=sys.stderr)
+        log.info("%s: %ss -> %ss (%sx)%s", name, base_s, big_s, ratio, flag)
 
     ratios = [q["ratio"] for q in report["queries"].values() if q["ratio"]]
     report["max_ratio"] = max(ratios) if ratios else None

@@ -22,6 +22,8 @@ corpora.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -63,9 +65,12 @@ _AMP_ENTITIES = ("&#038;", "&amp;")
 AMP_RE = "&(amp;|#038;)"
 
 
-def strip_html(html: Column) -> Column:
-    """Visible text of an HTML fragment: <br>/<p> → newline, tags dropped,
-    entities decoded, blank-run collapse."""
+@functools.cache
+def strip_html(html: str) -> Column:
+    """Visible text of the named HTML column: <br>/<p> → newline, tags
+    dropped, entities decoded, blank-run collapse. Built once per process
+    per column name (the expression does not depend on the data), like
+    ``decode_entities``."""
     # attributed breaks (<br class="wp" />) must still mint their
     # newline while <broken> stays a generic tag (review r11) — hence
     # the optional non-word-then-anything group.
@@ -74,7 +79,7 @@ def strip_html(html: Column) -> Column:
     # '<br' followed by an accented letter matched only on one side; the
     # optional [^>word] group expresses the same boundary in BOTH
     # engines (RE2 has no lookarounds)
-    c = F.regexp_replace(html, r"(?i)<br([^>a-zA-Z0-9_][^>]*)?>", "\n")
+    c = F.regexp_replace(F.col(html), r"(?i)<br([^>a-zA-Z0-9_][^>]*)?>", "\n")
     # explicit class, not \s (r13, the trim-class fix extended): Java \s
     # matches \x0B where RE2's does not — '</p\x0B>' minted a newline
     # here but fell to the generic tag-delete in the oracle
@@ -96,9 +101,11 @@ def strip_html(html: Column) -> Column:
     return F.regexp_replace(c, r"^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$", "")
 
 
-def decode_entities(text: Column) -> Column:
-    """Entity decode alone (titles are entity-encoded but tag-free)."""
-    c = text
+@functools.cache
+def decode_entities(text: str) -> Column:
+    """Entity decode alone of the named column (titles are entity-encoded
+    but tag-free)."""
+    c = F.col(text)
     for ent, ch in _ENTITIES.items():
         if ent in _AMP_ENTITIES:
             continue

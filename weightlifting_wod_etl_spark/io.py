@@ -11,12 +11,14 @@ pruning on the hot keys.
 from __future__ import annotations
 
 import atexit
+import json
 import os
 import shutil
 import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # serializes the nanosAsLong set→infer→unset window in load_table
 _NANOS_CONF_LOCK = threading.Lock()
@@ -92,6 +94,19 @@ def achievable_scan_splits(path: str) -> int:
             total += 1  # unreadable footer: assume one split, stay safe
     _SPLITS_CACHE[path] = total
     return total
+
+
+def footer_schema(data_file: str) -> StructType:
+    """Spark schema of one parquet data file Spark wrote, read on the
+    driver from the Spark row metadata in its footer — no Spark job, where
+    ``spark.read.parquet`` runs a schema-inference job on every read. A
+    file without that metadata raises ``KeyError``."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_schema(data_file).metadata or {}
+    return StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
 
 
 def fan_out_unsplittable(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:

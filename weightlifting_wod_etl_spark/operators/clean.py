@@ -11,7 +11,9 @@ scales: the plan is a single ``Project`` node over the scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # reference mapping at transforms.py:291-298
@@ -25,6 +27,36 @@ DEFAULT_RENAME = {
 }
 EXPECTED_FIELDS = ["warm_up", "segment_a", "segment_b", "segment_c", "segment_d", "segment_e"]
 REST_DAY = "Rest Day"
+
+
+@functools.cache
+def _canonical_date(date_col: str) -> Column:
+    """``yyyy-MM-dd`` string of the named date column; built once per
+    process per column name (the expression does not depend on the data)."""
+    # the reference parses with dateutil (transforms.py:323) — accept
+    # the common non-ISO shapes it handles, not just ISO. try_to_*
+    # never throws (ANSI-safe); a shape outside the list degrades to
+    # NULL -> '' (the reference would instead raise per-record, which
+    # a distributed job can't do row-by-row)
+    c = F.col(date_col).cast("string")
+    parsed = F.coalesce(
+        *[
+            F.try_to_timestamp(c, F.lit(fmt))
+            for fmt in (
+                "yyyy-MM-dd",
+                "yyyy-MM-dd'T'HH:mm:ss",
+                # the space-separated shape: dateutil parses it, and a
+                # TimestampType date column casts to exactly this
+                # string form (review r11 — without it such values
+                # silently degraded to '')
+                "yyyy-MM-dd HH:mm:ss",
+                "M/d/yyyy",
+                "MMMM d, yyyy",
+                "MMM d, yyyy",
+            )
+        ]
+    ).cast("date")
+    return F.date_format(parsed, "yyyy-MM-dd")
 
 
 def clean_records(
@@ -52,30 +84,7 @@ def clean_records(
     # drop AFTER rename — only raw single-letter keys are dropped (§2.3-5)
     out = out.drop(*[c for c in drop_cols if c in out.columns])
     if date_col in out.columns:
-        # the reference parses with dateutil (transforms.py:323) — accept
-        # the common non-ISO shapes it handles, not just ISO. try_to_*
-        # never throws (ANSI-safe); a shape outside the list degrades to
-        # NULL -> '' (the reference would instead raise per-record, which
-        # a distributed job can't do row-by-row)
-        c = F.col(date_col).cast("string")
-        parsed = F.coalesce(
-            *[
-                F.try_to_timestamp(c, F.lit(fmt))
-                for fmt in (
-                    "yyyy-MM-dd",
-                    "yyyy-MM-dd'T'HH:mm:ss",
-                    # the space-separated shape: dateutil parses it, and a
-                    # TimestampType date column casts to exactly this
-                    # string form (review r11 — without it such values
-                    # silently degraded to '')
-                    "yyyy-MM-dd HH:mm:ss",
-                    "M/d/yyyy",
-                    "MMMM d, yyyy",
-                    "MMM d, yyyy",
-                )
-            ]
-        ).cast("date")
-        out = out.withColumn(date_col, F.date_format(parsed, "yyyy-MM-dd"))
+        out = out.withColumn(date_col, _canonical_date(date_col))
     if session_col in out.columns:
         out = out.withColumn(session_col, F.coalesce(F.col(session_col), F.lit(REST_DAY)))
     for field in expected_fields:

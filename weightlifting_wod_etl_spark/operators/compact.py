@@ -44,6 +44,18 @@ def dir_stats(path: str) -> tuple[int, int]:
     return len(files), sum(os.path.getsize(f) for f in files)
 
 
+def first_data_file(data_dir: str) -> str | None:
+    """The first visible parquet data file under ``data_dir`` in sorted
+    walk order (``_``/``.``-prefixed entries skipped, as Spark's listing
+    does), or None when there is none."""
+    for root, dirs, files in os.walk(data_dir):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for fn in sorted(files):
+            if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
+                return os.path.join(root, fn)
+    return None
+
+
 def _partition_keys(data_dir: str) -> list[str]:
     """Hive partition column names of ``data_dir`` (in directory order),
     [] for a flat layout — read from the first data file's relative path
@@ -51,19 +63,11 @@ def _partition_keys(data_dir: str) -> list[str]:
     flattening it (review r11: the rewrite dropped date=*/ dirs, killing
     partition pruning and demoting the next partitioned upsert to a
     full-table migration)."""
-    for root, dirs, files in os.walk(data_dir):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        for fn in sorted(files):
-            if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
-                rel = os.path.relpath(root, data_dir)
-                if rel == ".":
-                    return []
-                return [
-                    seg.split("=", 1)[0]
-                    for seg in rel.split(os.sep)
-                    if "=" in seg
-                ]
-    return []
+    f = first_data_file(data_dir)
+    if f is None:
+        return []
+    rel = os.path.relpath(os.path.dirname(f), data_dir)
+    return [seg.split("=", 1)[0] for seg in rel.split(os.sep) if "=" in seg]
 
 
 def compact_parquet(

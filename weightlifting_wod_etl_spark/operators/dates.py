@@ -14,6 +14,8 @@ All pure column expressions — codegen'd, no UDFs, no shuffle.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -87,9 +89,11 @@ _SLUG_PAT = r"(\w+)-(\d+)-(\d+)-(\d{4})"
 _TITLE_PAT = r"(\w+)\s+(\d+)-(\d+)[,\s]+(\d{4})"
 
 
-def extract_date_range(slug: Column, title: Column | None = None) -> tuple[Column, Column]:
-    """OP12 — parse a (start, end) date pair, reference flow preserved
-    (``transforms.py:42-112``, verified against the executed reference):
+@functools.cache
+def extract_date_range(slug: str, title: str | None = None) -> tuple[Column, Column]:
+    """OP12 — parse a (start, end) date pair from the named slug (and
+    title) columns, reference flow preserved (``transforms.py:42-112``,
+    verified against the executed reference):
 
       - ONE text is chosen up front — the slug when truthy, else the
         dash-normalized title. A present-but-dateless slug therefore
@@ -105,7 +109,15 @@ def extract_date_range(slug: Column, title: Column | None = None) -> tuple[Colum
     regex work: the two getFields share one struct subtree and
     whole-stage codegen's subexpression elimination computes it once
     (measured at sf0.1, r11: both fields no slower than one).
+
+    Built once per process per column-name pair and reused by every
+    plan: the expression does not depend on the data, and building its
+    nested ``let``/``transform`` lambdas takes ~1,800 Py4J calls
+    (0.16–0.27 s on 4 vCPUs), a large share of a 5-post batch. A Column
+    is a session-free expression tree, so the cached pair stays valid
+    across ``spark.stop()`` and a new session in the same process.
     """
+    slug, title = F.col(slug), None if title is None else F.col(title)
 
     def parse(src: Column, pat: str) -> Column:
         # ONE regex execution per matched row (r18 optimization-round,

@@ -26,7 +26,9 @@ its test fixtures — see tests/test_wod_pipeline.py):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import functools
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.html import decode_entities, strip_html
@@ -55,10 +57,10 @@ def strip_posts(posts: DataFrame) -> DataFrame:
     """OP4 — html → text, carrying post metadata (handler.py:166-190)."""
     return posts.select(
         "post_id",
-        strip_html(F.col("html")).alias("text"),
+        strip_html("html").alias("text"),
         "post_date",
         "slug",
-        decode_entities(F.col("title")).alias("title"),
+        decode_entities("title").alias("title"),
     )
 
 
@@ -83,6 +85,16 @@ def sessionize_post_text(stripped: DataFrame) -> DataFrame:
         group_col="seg_idx",
         drop_preamble=False,
     )
+
+
+@functools.cache
+def _week_start() -> Column:
+    """Week spine anchor (OP12+OP13): the Sunday before the slug/title
+    range start, else before post_date. Built once per process: the
+    expression does not depend on the data, and its date-range parser is
+    the costliest part of building the pipeline's plan."""
+    rng_start, _ = extract_date_range("slug", "title")
+    return week_start_sunday(F.coalesce(rng_start, F.to_date("post_date")))
 
 
 def segments_to_records(segmented: DataFrame, stripped: DataFrame) -> DataFrame:
@@ -143,12 +155,7 @@ def segments_to_records(segmented: DataFrame, stripped: DataFrame) -> DataFrame:
     wide = pivot_wide(
         kv_all, ["post_id", "day_idx"], "k", SEGMENT_KEYS, F.max_by("v", "seg_idx")
     )
-    # week spine (OP12+OP13): Sunday before slug/title range start, else post_date
-    rng_start, _ = extract_date_range(F.col("slug"), F.col("title"))
-    anchor = F.coalesce(rng_start, F.to_date("post_date"))
-    week_start = stripped.select(
-        "post_id", week_start_sunday(anchor).alias("week_start")
-    )
+    week_start = stripped.select("post_id", _week_start().alias("week_start"))
     return (
         wide.join(week_start, "post_id")
         .withColumn("date", F.date_add(F.col("week_start"), F.col("day_idx").cast("int")))

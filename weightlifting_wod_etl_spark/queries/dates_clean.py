@@ -75,7 +75,7 @@ def q_date_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("string"),
         ).alias("slug"),
     )
-    start, end = extract_date_range(F.col("slug"))
+    start, end = extract_date_range("slug")
     return slugged.select(
         "o_orderkey",
         "slug",

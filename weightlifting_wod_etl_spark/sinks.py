@@ -10,23 +10,29 @@ Reference behaviors mapped:
     an unreadable ledger counts as empty.
 
 One write path per sink. The JSONL sink is ``dedup.anti_join_ledger``
-then ``io.write_jsonl`` (which owns the null-field policy). The upsert
-has one partition-scoped path: when the table's layout already equals
-``partition_by`` it rewrites only the partitions named in the increment
-and carries the rest by hard link — at 100 TB you never rewrite the
-whole table for a daily increment; any other layout is a full rewrite
-into the requested one.
+then ``io.write_jsonl`` (which owns the null-field policy); its row count
+is observed on the JSON write, and the ledger is read with its declared
+key schema, so neither the count nor the ledger read starts a job.
+The upsert has one partition-scoped path: when the table's layout
+already equals ``partition_by`` it lists, reads and rewrites only the
+partition directories the increment names and carries the rest by hard
+link — listing is O(increment), and at 100 TB you never rewrite the whole
+table for a daily increment; any other layout is a full rewrite into the
+requested one. The table is read with a declared schema whose partition
+column types come from the increment, never from directory names.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from .io import write_jsonl
+from .io import footer_schema, write_jsonl
+from .operators.compact import _partition_keys, first_data_file
 from .operators.dedup import anti_join_ledger, exact_dedup, orderable_order_cols
 
 
@@ -36,21 +42,23 @@ def _ledger_keys(spark: SparkSession, ledger_path: str) -> DataFrame | None:
     infra failure must not block the write). A readable ledger whose keys
     are not strings raises before anything is written: appending string
     keys into it would leave a mixed-schema ledger that no later run can
-    read."""
-    if not os.path.exists(ledger_path):
+    read. The key type comes from one file's footer, and the scan is
+    declared ``idem_key string``, so reading the ledger starts no
+    schema-inference job."""
+    first = first_data_file(ledger_path) if os.path.isdir(ledger_path) else None
+    if first is None:
         return None
     try:
-        keys = spark.read.parquet(ledger_path).select("idem_key")
+        ltype = footer_schema(first)["idem_key"].dataType
     except Exception:
         return None  # reference: infra failure ⇒ proceed with the write
-    ltype = keys.schema["idem_key"].dataType
     if not isinstance(ltype, StringType):
         raise ValueError(
             f"write_jsonl_idempotent: ledger {ledger_path} holds "
             f"{ltype.simpleString()} keys; only string (sha256 hex) "
             "ledgers are supported"
         )
-    return keys
+    return spark.read.schema("idem_key string").parquet(ledger_path)
 
 
 def write_jsonl_idempotent(df: DataFrame, path: str, ledger_path: str) -> int:
@@ -93,16 +101,30 @@ def write_jsonl_idempotent(df: DataFrame, path: str, ledger_path: str) -> int:
     # keys are never NULL here (the content key fills them), so a plain
     # equi anti-join is exact
     fresh = df if ledger is None else anti_join_ledger(df, ledger)
-    # localCheckpoint, not cache(): three actions (count, JSON write,
-    # ledger write) must see ONE snapshot. A cache() partition evicted
-    # under memory pressure recomputes — with a non-deterministic df the
-    # ledger could record a key whose row never reached the JSON output,
-    # suppressing that record on every future rerun.
+    # localCheckpoint, not cache(): two actions (JSON write, ledger write)
+    # must see ONE snapshot. A cache() partition evicted under memory
+    # pressure recomputes — with a non-deterministic df the ledger could
+    # record a key whose row never reached the JSON output, suppressing
+    # that record on every future rerun. The written-row count is observed
+    # on the JSON write itself instead of a separate count() job.
     fresh = fresh.localCheckpoint(eager=False)
-    n = fresh.count()
-    if n:
-        write_jsonl(fresh.drop("idem_key"), path, mode="append")
-        fresh.select("idem_key").write.mode("append").parquet(ledger_path)
+    written = Observation()
+    write_jsonl(
+        fresh.observe(written, F.count(F.lit(1)).alias("n")).drop("idem_key"),
+        path, mode="append",
+    )
+    n = written.get["n"]
+    if not n:
+        # a write of no rows still commits one zero-byte part file; drop
+        # zero-byte parts (they hold no rows) so a replay leaves the
+        # output's file list as it was
+        for f in os.listdir(path):
+            if f.startswith("part-") and os.path.getsize(os.path.join(path, f)) == 0:
+                os.remove(os.path.join(path, f))
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(path, f".{f}.crc"))
+        return 0
+    fresh.select("idem_key").write.mode("append").parquet(ledger_path)
     return n
 
 
@@ -123,28 +145,38 @@ def kv_upsert_parquet(
 
     One path, one ``versioned.commit_version`` (crash safety and index
     upkeep are defined there). The increment's distinct ``partition_by``
-    tuples are collected first — zero-column rows for a flat table, none
-    at all for an empty increment, which then writes nothing. When the
-    table's on-disk partition columns equal ``partition_by``, only the
-    partitions named by those tuples are read (partition-pruned scan) and
+    tuples are collected first, as the string forms Spark's partitioned
+    writer names its directories from — zero-column rows for a flat
+    table, none at all for an empty increment, which then writes nothing.
+    When the table's on-disk partition columns equal ``partition_by``,
+    only the partition directories those tuples name (Spark's own
+    ``ExternalCatalogUtils.getPartitionPathString``: NULL and path
+    escaping included) and that exist on disk are listed and read, and
     rewritten; every untouched partition is carried into the new version
-    by hard link (metadata-only — no data bytes move), so a daily
-    increment against a 100 TB table costs O(increment), the same shape
-    as a partition-scoped Delta replaceWhere. For a flat table the filter
-    is TRUE. Any other existing layout (flat → partitioned, partitioned →
-    flat, or different partition columns) is read whole and rewritten
-    into the requested layout. Keys must not move between partitions
-    (partition cols ⊆ key semantics), the same contract a Delta/Iceberg
-    MERGE keyed on ``key_cols`` would carry.
+    by hard link (metadata-only — no data bytes move). Listing and reading
+    therefore cost O(increment), never O(table): a daily increment against
+    a 100 TB table has the same shape as a partition-scoped Delta
+    replaceWhere. For a flat table the one directory is the table. Any
+    other existing layout (flat → partitioned, partitioned → flat, or
+    different partition columns) is read whole and rewritten into the
+    requested layout. Keys must not move between partitions (partition
+    cols ⊆ key semantics), the same contract a Delta/Iceberg MERGE keyed
+    on ``key_cols`` would carry.
+
+    The table is read with a declared schema: data columns from one
+    file's footer, partition columns typed as in the increment (string
+    for one the increment lacks). Nothing is inferred from directory
+    names, so a string partition value like ``"007"`` stays ``"007"``
+    (inference would read it as int 7, and the rewrite would mint ``p=7``
+    beside ``p=007``, leaving duplicate keys), and the read starts no
+    listing or schema-inference job.
 
     The tuple list is collected to the driver — bounded by the
     increment's distinct partition tuples (e.g. days in the batch), never
     by table or batch row count."""
-    from functools import reduce
-
-    from .operators.compact import _partition_keys
     from .operators.versioned import commit_version, resolve, table_exists
 
+    spark = df.sparkSession
     part_cols = partition_by or []
     data_dir = resolve(path)
     # One snapshot for BOTH evaluations of the increment (tuple collect and
@@ -154,26 +186,33 @@ def kv_upsert_parquet(
     # unioned in, and the staging subtree (which blocks the carry) would
     # silently replace them.
     df = df.localCheckpoint(eager=False)
-    parts = df.select(*part_cols).distinct().collect()
+    parts = df.select(*[F.col(c).cast("string") for c in part_cols]).distinct().collect()
     if not parts:
         return  # empty increment: nothing to merge, nothing to rewrite
     merged, in_place = df, False
     # table_exists, not bare path existence: a failed first write leaves an
     # empty makedirs'd dir whose "read" would wedge every retry
     if table_exists(path):
-        existing = df.sparkSession.read.parquet(data_dir)
-        in_place = _partition_keys(data_dir) == part_cols
+        table_parts = _partition_keys(data_dir)
+        in_place = table_parts == part_cols
+        schema = footer_schema(first_data_file(data_dir))
+        for c in table_parts:
+            schema.add(c, df.schema[c].dataType if c in df.columns else StringType())
+        dirs = [data_dir]
         if in_place:
-            # eqNullSafe: a null partition value must still match its
-            # existing __HIVE_DEFAULT_PARTITION__ rows, or duplicate keys
-            # survive there
-            existing = existing.filter(reduce(lambda a, b: a | b, [
-                reduce(lambda a, b: a & b,
-                       [F.col(c).eqNullSafe(F.lit(r[c])) for c in part_cols],
-                       F.lit(True))
+            catalog_utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            dirs = [
+                os.path.join(data_dir, *[
+                    catalog_utils.getPartitionPathString(c, v) for c, v in zip(part_cols, r)
+                ])
                 for r in parts
-            ]))
-        merged = existing.unionByName(df, allowMissingColumns=True)
+            ]
+        dirs = [d for d in dirs if os.path.isdir(d)]
+        if dirs:
+            existing = (
+                spark.read.schema(schema).option("basePath", data_dir).parquet(*dirs)
+            )
+            merged = existing.unionByName(df, allowMissingColumns=True)
     order = [F.col(c).desc() for c in order_cols] + orderable_order_cols(
         merged, set(key_cols) | set(order_cols), ascending=False
     )
