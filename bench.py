@@ -173,15 +173,11 @@ HEADLINE = [
 # Queries whose WORK happens eagerly during frame build (table writes /
 # MERGE commits), leaving only a result scan in the returned frame: the
 # build-once/min-of-N loop would time the scan and miss a 10x regression
-# in the pipeline itself. These rebuild the frame INSIDE each timed
-# sample, so cold/min both cover the full pipeline (build + action).
-EAGER = {"q_cdc_apply"}
-
-# EAGER queries with a setup/pipeline split: a (prepare, timed) import
-# path pair. prepare (the scratch-table rebuild) runs OUTSIDE the timer
-# each sample and the timed callable gets its return value, so
-# q_cdc_apply times the MERGE pipeline itself. Details recorded before
-# r17 timed the rebuild too.
+# in the pipeline itself. Each maps to a (prepare, timed) import path
+# pair. prepare (the scratch-table rebuild) runs OUTSIDE the timer each
+# sample and the timed callable gets its return value, so q_cdc_apply
+# times the MERGE pipeline itself. Details recorded before r17 timed the
+# rebuild too.
 EAGER_SPLIT = {
     "q_cdc_apply": (
         "weightlifting_wod_etl_spark.queries.cdc_interval:cdc_prepare_base",
@@ -279,14 +275,6 @@ def main() -> None:
                     prepared = prepare(spark, sf_dir)
                     t0 = time.perf_counter()
                     df = timed(spark, sf_dir, prepared)
-                    df.write.format("noop").mode("overwrite").save()
-                    samples.append(time.perf_counter() - t0)
-            elif name in EAGER:
-                # the pipeline runs at frame-build time: rebuild per
-                # sample so the timing means what the HEADLINE entry says
-                for _ in range(runs):
-                    t0 = time.perf_counter()
-                    df = QUERIES[name](spark, sf_dir)
                     df.write.format("noop").mode("overwrite").save()
                     samples.append(time.perf_counter() - t0)
             else:

@@ -9,8 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from weightlifting_wod_etl_spark.io import load_table, read_table
-from weightlifting_wod_etl_spark.operators.compact import compact_parquet, dir_stats
+from weightlifting_wod_etl_spark.io import dir_stats, load_table, read_table
+from weightlifting_wod_etl_spark.operators.compact import compact_parquet
 from weightlifting_wod_etl_spark.operators.versioned import resolve
 
 
@@ -152,10 +152,8 @@ def test_compact_partitioned_converges_and_no_ops_thereafter(spark, tmp_path):
     want x n_partitions files, MORE than before — and the no-op guard
     ignored the per-partition floor, so every maintenance run paid a
     full rewrite forever."""
-    from weightlifting_wod_etl_spark.operators.compact import (
-        compact_parquet,
-        dir_stats,
-    )
+    from weightlifting_wod_etl_spark.io import dir_stats
+    from weightlifting_wod_etl_spark.operators.compact import compact_parquet
     from weightlifting_wod_etl_spark.operators.versioned import resolve
 
     path = str(tmp_path / "pc")

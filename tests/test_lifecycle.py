@@ -10,8 +10,8 @@ from tests.conftest import SF_SMOKE
 
 from pyspark.sql import functions as F
 
-from weightlifting_wod_etl_spark.io import read_pruned, read_table
-from weightlifting_wod_etl_spark.operators.compact import compact_parquet, dir_stats
+from weightlifting_wod_etl_spark.io import dir_stats, read_pruned, read_table
+from weightlifting_wod_etl_spark.operators.compact import compact_parquet
 from weightlifting_wod_etl_spark.operators.merge import delete_keys
 from weightlifting_wod_etl_spark.operators.skipping import load_stats_index
 from weightlifting_wod_etl_spark.operators.versioned import (

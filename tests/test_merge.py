@@ -300,12 +300,16 @@ def test_merge_full_rewrite_keeps_stats_index(spark, tmp_path):
 def test_merge_incomplete_index_falls_back_to_full_rewrite(spark, tmp_path):
     """ADVICE r9 (low): a data file present on disk but missing from the
     index was neither carried nor a candidate — its rows silently vanished
-    from the new version. An incomplete index must force a full rewrite."""
+    from the new version. An incomplete index must force a full rewrite,
+    and so must a stale one naming a file the disk lacks (it would be read
+    or carried and fail)."""
     import os
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from weightlifting_wod_etl_spark.operators.skipping import _INDEX_NAME
+    from weightlifting_wod_etl_spark.operators.versioned import resolve
 
     path = str(tmp_path / "incomplete")
     _clustered_table(spark, path, n_files=4, rows_per=50)
@@ -321,6 +325,18 @@ def test_merge_incomplete_index_falls_back_to_full_rewrite(spark, tmp_path):
     got = _rows(spark, path)
     assert len(got) == 200  # no rows vanished
     assert got[5] == (9999, "new")
+
+    # stale: one more entry, for a file that is not on disk
+    idx_path = os.path.join(resolve(path), _INDEX_NAME)
+    entries = pq.read_table(idx_path).to_pylist()
+    pq.write_table(
+        pa.Table.from_pylist(entries + [{**entries[-1], "file": "ghost.parquet"}]),
+        idx_path,
+    )
+    src = spark.createDataFrame([(6, 6666, "new")], "k long, v long, tag string")
+    assert merge_into(spark, path, src, on=["k"])["files_carried"] == 0
+    got = _rows(spark, path)
+    assert len(got) == 200 and got[6] == (6666, "new")
 
 
 def test_merge_prune_sees_same_snapshot_as_write(spark, tmp_path):
@@ -721,3 +737,55 @@ def test_merge_stats_with_null_key_target_rows_match_brute_force(
     assert {k: stats[k] for k in shared} == {k: want_stats[k] for k in shared}
     got = sorted(map(tuple, read_table(spark, path).collect()), key=repr)
     assert got == want_rows
+
+
+def test_rewrite_reads_declare_schema_job_counts(spark, tmp_path):
+    """merge_into on an existing table and a sorted compact_parquet read
+    the committed table with a declared schema, so neither starts a
+    schema-inference job: 7 jobs per merge and 2 per sorted compact on
+    a 2000-row flat table (each was one more when the read inferred)."""
+    from weightlifting_wod_etl_spark.operators.compact import compact_parquet
+
+    path = str(tmp_path / "jobs")
+    rows = spark.range(2000).selectExpr("id AS k", "id * 10 AS v", "'old' AS tag")
+    rows.repartition(4).write.parquet(path)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # the store fills async
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    src = spark.createDataFrame([(5, -5, "new"), (2001, 1, "new")], "k long, v long, tag string")
+    merge_into(spark, path, src, on=["k"])  # migrates the plain dir
+    n_merge = jobs("test-merge-jobs", lambda: merge_into(spark, path, src, on=["k"]))
+    n_compact = jobs(
+        "test-compact-jobs", lambda: compact_parquet(spark, path, sort_by=["k"])
+    )
+    assert (n_merge, n_compact) == (7, 2)
+    got = _rows(spark, path)
+    assert got[5] == (-5, "new") and len(got) == 2001
+
+
+def test_merge_reads_a_table_without_spark_footer_metadata(spark, tmp_path):
+    """A plain table whose files another writer made (pyarrow here) carry
+    no Spark row metadata in their footers; the merge's declared read
+    then infers that one file's schema instead of failing."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "foreign")
+    os.makedirs(path)
+    pq.write_table(
+        pa.table({"k": [1, 2], "v": [10, 20], "tag": ["old", "old"]}),
+        os.path.join(path, "part-00000.parquet"),
+    )
+    src = spark.createDataFrame([(2, 99, "new")], "k long, v long, tag string")
+    assert merge_into(spark, path, src, on=["k"])["matched"] == 1
+    assert _rows(spark, path) == {1: (10, "old"), 2: (99, "new")}

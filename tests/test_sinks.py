@@ -224,7 +224,7 @@ def test_kv_upsert_layout_change_rewrites_into_requested_layout(
     partition columns are the requested ones. (p → q used to commit a
     version holding both p=* and q=* dirs, and every later read raised
     CONFLICTING_PARTITION_COLUMN_NAMES.)"""
-    from weightlifting_wod_etl_spark.operators.compact import _partition_keys
+    from weightlifting_wod_etl_spark.io import partition_columns
     from weightlifting_wod_etl_spark.sinks import kv_upsert_parquet
 
     path = os.path.join(tmp, "kv_layout")
@@ -242,7 +242,7 @@ def test_kv_upsert_layout_change_rewrites_into_requested_layout(
                 model[k] = tuple(rest)
     got = {r.k: (r.p, r.q, r.ver, r.v) for r in read_table(spark, path).collect()}
     assert got == model
-    assert _partition_keys(resolve(path)) == (second or [])
+    assert partition_columns(resolve(path)) == (second or [])
 
 
 def test_kv_upsert_survivor_ignores_input_layout(spark, tmp):
@@ -416,13 +416,20 @@ def test_jsonl_idempotent_casts_wider_keys_to_ledger_type(spark, tmp):
 
 
 
-def test_kv_upsert_partition_values_match_dict_model(spark, tmp):
+@pytest.mark.parametrize(
+    "rewrites", [False, True], ids=["upserts", "upserts_merge_compact"]
+)
+def test_kv_upsert_partition_values_match_dict_model(spark, tmp, rewrites):
     """Partition values round-trip exactly through repeated upserts into
     a string-partitioned table: integer-looking strings ('007'), NULL,
     values that need path escaping (space, '/', '%') and partitions new to
     the table. Reading the table back used to infer 'p' as int from
     'p=007'/'p=010', and the rewrite minted p=7/p=10 beside them: four
-    rows for two keys."""
+    rows for two keys. With ``rewrites``, a ``merge_into`` (one insert
+    into p=007) and a ``compact_parquet(sort_by=["k"])`` run after every
+    upsert: both used to read the table the same inferring way."""
+    from weightlifting_wod_etl_spark.operators.compact import compact_parquet
+    from weightlifting_wod_etl_spark.operators.merge import merge_into
     from weightlifting_wod_etl_spark.sinks import kv_upsert_parquet
 
     path = os.path.join(tmp, "kv_pvals")
@@ -445,6 +452,11 @@ def test_kv_upsert_partition_values_match_dict_model(spark, tmp):
         for k, p, ver, v in rows:
             if (k, p) not in model or ver > model[(k, p)][0]:
                 model[(k, p)] = (ver, v)
+        if rewrites:
+            row = (100 + len(model), "007", 1, "merged")
+            merge_into(spark, path, spark.createDataFrame([row], schema), on=["k"])
+            model[row[:2]] = row[2:]
+            compact_parquet(spark, path, sort_by=["k"])
         got = [
             ((r.k, r.p), (r.ver, r.v))
             for r in spark.read.schema(schema).parquet(resolve(path)).collect()

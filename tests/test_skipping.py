@@ -177,7 +177,7 @@ def test_persisted_index_is_committed_with_version_and_consumed(
     path = str(tmp_path / "orders_vt")
     src.repartition(32).write.parquet(path)  # small files, unclustered
     _, total = __import__(
-        "weightlifting_wod_etl_spark.operators.compact", fromlist=["dir_stats"]
+        "weightlifting_wod_etl_spark.io", fromlist=["dir_stats"]
     ).dir_stats(path)
     compact_parquet(
         spark, path, target_file_bytes=max(1, total // 8),

@@ -1,5 +1,9 @@
 """Table loaders / writers for the synthetic star schema (TESTDATA.md).
 
+Table layout is decided here and only here: which files under a table
+dir are data (:func:`data_files`, the one walk), its partition columns,
+and how a writer that rewrites a table reads it (:func:`read_declared`).
+
 Scale notes (100 TB design): loaders are plain ``spark.read.parquet`` scans —
 Catalyst pushes filters and prunes columns into the parquet reader, so every
 downstream operator should express selection declaratively rather than
@@ -16,9 +20,10 @@ import os
 import shutil
 import tempfile
 import threading
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructType
 
 # serializes the nanosAsLong set→infer→unset window in load_table
 _NANOS_CONF_LOCK = threading.Lock()
@@ -78,22 +83,59 @@ def achievable_scan_splits(path: str) -> int:
         return cached
     import pyarrow.parquet as pq
 
-    files: list[str] = []
-    if os.path.isdir(path):
-        for root, _dirs, names in os.walk(path):
-            files.extend(
-                os.path.join(root, n) for n in names if n.endswith(".parquet")
-            )
-    else:
-        files = [path]
     total = 0
-    for f in files:
+    for f in data_files(path) if os.path.isdir(path) else [path]:
         try:
             total += pq.ParquetFile(f).metadata.num_row_groups
         except Exception:
             total += 1  # unreadable footer: assume one split, stay safe
     _SPLITS_CACHE[path] = total
     return total
+
+
+def data_files(path: str) -> Iterator[str]:
+    """The one walk over a table directory: the parquet files Spark's own
+    listing would read under ``path``, in sorted walk order. ``_``/``.``-
+    prefixed FILES AND DIRECTORIES are skipped at every level.
+
+    Pruning directories matters for soundness, not just tidiness: a
+    versioned table root (operators/versioned.py) legally contains
+    ``_v*/`` snapshot dirs — including a possibly-orphaned staging dir
+    from a crash before the pointer flip — and a walk that only filtered
+    file basenames would count, index or carry UNCOMMITTED rows. Lazy, so
+    a caller that needs only the first file lists only its path there."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                yield os.path.join(root, f)
+
+
+def list_data_files(path: str) -> list[str]:
+    """Every data file under ``path`` (:func:`data_files`)."""
+    return list(data_files(path))
+
+
+def first_data_file(path: str) -> str | None:
+    """The first data file under ``path`` (:func:`data_files`), or None."""
+    return next(data_files(path), None)
+
+
+def dir_stats(path: str) -> tuple[int, int]:
+    """(n_data_files, total_bytes) of the data files under ``path``."""
+    files = list_data_files(path)
+    return len(files), sum(os.path.getsize(f) for f in files)
+
+
+def partition_columns(data_dir: str) -> list[str]:
+    """Hive partition column names of ``data_dir`` in directory order, []
+    for a flat layout — read from the first data file's relative path, so
+    a rewrite can keep the layout instead of flattening it."""
+    f = first_data_file(data_dir)
+    if f is None:
+        return []
+    rel = os.path.relpath(os.path.dirname(f), data_dir)
+    return [seg.split("=", 1)[0] for seg in rel.split(os.sep) if "=" in seg]
 
 
 def footer_schema(data_file: str) -> StructType:
@@ -107,6 +149,35 @@ def footer_schema(data_file: str) -> StructType:
     return StructType.fromJson(
         json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
     )
+
+
+def read_declared(
+    spark: SparkSession, data_dir: str, paths: list[str], like: DataFrame | None = None
+) -> DataFrame:
+    """Read ``paths`` (partition dirs or data files of the committed table
+    dir ``data_dir``) for a rewrite, with a declared schema and
+    ``basePath`` (without it a leaf read would bring every
+    directory-derived partition column back NULL). The schema: data columns from one file's footer (:func:`footer_schema`),
+    partition columns typed as in ``like`` (the incoming frame) when it
+    has them, else string. This is the one read rule of every writer that
+    rewrites a table (``sinks.kv_upsert_parquet``, ``merge.merge_into``,
+    ``compact.compact_parquet``). Nothing is inferred from directory
+    names, so a string partition value like ``"007"`` stays ``"007"``
+    (inference reads it as int 7, and the rewrite would mint ``p=7``
+    beside ``p=007``), and the read starts no schema-inference job.
+
+    A file without Spark's row metadata (one pyarrow wrote into a plain
+    table dir) has its own schema inferred instead: one job, paid until
+    the first commit rewrites the table in Spark's own files."""
+    first = first_data_file(data_dir)
+    try:
+        schema = footer_schema(first)
+    except KeyError:
+        schema = spark.read.parquet(first).schema
+    for c in partition_columns(data_dir):
+        has = like is not None and c in like.columns
+        schema.add(c, like.schema[c].dataType if has else StringType())
+    return spark.read.schema(schema).option("basePath", data_dir).parquet(*paths)
 
 
 def fan_out_unsplittable(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -200,12 +271,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def read_table(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
@@ -236,33 +301,16 @@ def read_pruned(spark: SparkSession, path: str, col: str, lo, hi) -> DataFrame:
     selective range query opens a handful of files instead of the table.
     At 100 TB the index itself is what Delta/Iceberg persist in their
     metadata layer — a persisted index (``skipping.save_stats_index``,
-    committed atomically with the version dir it describes) is preferred
-    when present; otherwise the index is rebuilt from footers (one
-    KB-scale footer read per file, no data pages)."""
+    committed atomically with the version dir it describes) is used when
+    ``skipping.usable_index`` accepts it; otherwise the index is rebuilt
+    from footers (one KB-scale footer read per file, no data pages)."""
     from pyspark.sql import functions as F
 
-    from .operators.skipping import (
-        file_stats_index,
-        list_data_files,
-        load_stats_index,
-        prune_files,
-    )
+    from .operators.skipping import file_stats_index, prune_files, usable_index
     from .operators.versioned import resolve
 
     data_dir = resolve(path)
-    index = load_stats_index(data_dir)
-    # absent, EMPTY, INCOMPLETE, or built for other columns → live footer
-    # scan. Empty matters (all() over [] is vacuously true: a zero-entry
-    # index would prune to zero files); incomplete matters the same way —
-    # a data file appended outside the commit protocol has no index entry,
-    # so it is neither pruned nor kept and its rows would silently vanish
-    # from a read that promises results identical to a full scan.
-    if (
-        not index
-        or not all(f"{col}_min" in e for e in index)
-        or {e["file"] for e in index} != set(list_data_files(data_dir))
-    ):
-        index = file_stats_index(data_dir, [col])
+    index = usable_index(data_dir, col) or file_stats_index(data_dir, [col])
     files = prune_files(index, col, lo, hi)
     if not files:  # nothing can match; keep the schema, scan nothing
         return spark.read.parquet(data_dir).where(F.lit(False))

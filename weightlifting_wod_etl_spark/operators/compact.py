@@ -12,8 +12,13 @@ the filesystem, not a row count — row width varies), then one
 ``repartition(n)`` round-robin shuffle balances the rewrite. An optional
 ``sort_by`` turns compaction into a clustering pass at the same cost
 (pair with operators/zorder.py's key for multi-dimensional layouts).
-The rewrite is one ``versioned.commit_version`` (crash safety is defined
-there) — the engine-side analog of a Delta/Iceberg ``OPTIMIZE``/``rewrite``
+The table is read by ``io.read_declared``, the read rule every rewriting
+writer shares: a declared schema, data columns from one footer,
+partition columns as string (a compaction has no incoming frame to type
+them from), no schema-inference job. Partition values come back exactly
+as their directory names, so ``p=007`` is rewritten as ``p=007`` (an
+inferring read would make it ``p=7``). The rewrite is one
+``versioned.commit_version`` (crash safety is defined there) — the engine-side analog of a Delta/Iceberg ``OPTIMIZE``/``rewrite``
 commit.
 """
 
@@ -25,49 +30,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ..io import dir_stats, list_data_files, partition_columns, read_declared
 from .versioned import commit_version, resolve
 
 log = logging.getLogger(__name__)
-
-
-def dir_stats(path: str) -> tuple[int, int]:
-    """(n_data_files, total_bytes) of the parquet files under ``path``.
-
-    Delegates visibility to ``skipping.list_data_files`` — the one
-    definition of "visible data file" (skips ``_``/``.``-prefixed
-    entries, the same children Spark's listing ignores), so compaction
-    sizing can never disagree with the commit protocol or the index
-    completeness checks (review r12)."""
-    from .skipping import list_data_files
-
-    files = list_data_files(path)
-    return len(files), sum(os.path.getsize(f) for f in files)
-
-
-def first_data_file(data_dir: str) -> str | None:
-    """The first visible parquet data file under ``data_dir`` in sorted
-    walk order (``_``/``.``-prefixed entries skipped, as Spark's listing
-    does), or None when there is none."""
-    for root, dirs, files in os.walk(data_dir):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        for fn in sorted(files):
-            if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
-                return os.path.join(root, fn)
-    return None
-
-
-def _partition_keys(data_dir: str) -> list[str]:
-    """Hive partition column names of ``data_dir`` (in directory order),
-    [] for a flat layout — read from the first data file's relative path
-    so a compaction can PRESERVE the layout instead of silently
-    flattening it (review r11: the rewrite dropped date=*/ dirs, killing
-    partition pruning and demoting the next partitioned upsert to a
-    full-table migration)."""
-    f = first_data_file(data_dir)
-    if f is None:
-        return []
-    rel = os.path.relpath(os.path.dirname(f), data_dir)
-    return [seg.split("=", 1)[0] for seg in rel.split(os.sep) if "=" in seg]
 
 
 def compact_parquet(
@@ -95,11 +61,10 @@ def compact_parquet(
     before, total = dir_stats(data_dir)
     if before == 0:
         # empty table (review r14): there is nothing to rewrite, and
-        # spark.read.parquet on a data-file-less dir fails schema
-        # inference — so the old path raised instead of no-opping
+        # there is no footer to declare the read's schema from
         return 0, 0
     want = max(1, math.ceil(total / target_file_bytes))
-    pkeys = _partition_keys(data_dir)
+    pkeys = partition_columns(data_dir)
     # No-op rules (review r12 — the old `before <= want + 1` guard was
     # wrong three ways):
     #  * an explicit sort_by/stats_cols request must ALWAYS rewrite — the
@@ -117,8 +82,6 @@ def compact_parquet(
     #    partitions that need intra-partition splitting are the sort_by
     #    path's job, whose requests always rewrite anyway).
     if pkeys:
-        from .skipping import list_data_files
-
         n_part_dirs = len({os.path.dirname(f) for f in list_data_files(data_dir)})
         ideal = n_part_dirs
         if want > n_part_dirs * 2 and not sort_by:
@@ -143,7 +106,7 @@ def compact_parquet(
         ideal = want
     if ideal <= before <= ideal + 1 and not sort_by and not stats_cols:
         return before, before
-    df = spark.read.parquet(data_dir)
+    df = read_declared(spark, data_dir, [data_dir])
     # Partitioned tables redistribute ON the partition keys (review r12):
     # a bare round-robin repartition(want) scatters every Hive
     # partition's rows across all `want` tasks, so the partitionBy write

@@ -37,6 +37,13 @@ table. Soundness does not depend on the layout — a file the index cannot
 rule out is rewritten — but a clustered layout (operators/zorder.py /
 compact with sort_by) is what makes the candidate set small.
 
+The target — the whole table or just the candidate files — is read by
+``io.read_declared``, the read rule every rewriting writer shares: a
+declared schema, data columns from one footer, partition columns typed
+as in ``source`` (string where the source lacks one), no
+schema-inference job. A string partition value like ``"007"`` is
+rewritten into ``p=007``, never into a new ``p=7`` beside it.
+
 Bookkeeping is ONE Spark job: the per-key source/delete/target counts
 that feed the duplicate-key guard and the matched/inserted/deleted
 counts come from a single keyed aggregation — not one action per
@@ -52,6 +59,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import list_data_files, partition_columns, read_declared
+from .skipping import index_cols, load_stats_index, usable_index
 from .versioned import commit_version, resolve, table_exists
 
 
@@ -118,26 +127,14 @@ def merge_into(
     n_candidates = 0
     pkeys: list[str] = []
     if exists:
-        from .compact import _partition_keys
-
-        pkeys = _partition_keys(data_dir)
-        full = spark.read.parquet(data_dir)
+        pkeys = partition_columns(data_dir)
+        full = read_declared(spark, data_dir, [data_dir], like=source)
         carried_files, candidates = _prune_rewrite_set(
             spark, data_dir, source, all_keys, on, set(full.columns)
         )
         n_candidates = len(candidates)
         if carried_files and candidates:
-            # basePath is load-bearing on a Hive-partitioned table
-            # (review r12): a bare leaf-file read does no partition
-            # discovery, so every directory-derived partition column
-            # would come back NULL for every candidate row — carried
-            # rows included — committing silent corruption. io.py's
-            # read_pruned sets it for the same reason.
-            target = (
-                spark.read.schema(full.schema)
-                .option("basePath", data_dir)
-                .parquet(*candidates)
-            )
+            target = read_declared(spark, data_dir, candidates, like=source)
         elif carried_files and not candidates:
             target = full.limit(0)  # no file can match: pure insert
         else:
@@ -219,15 +216,7 @@ def merge_into(
     # (Delta's optimized-write analog). File-targeted merges skip this:
     # their coalesced candidate slice plus carried files keep the layout.
     if exists and not carried_files:
-        from .skipping import index_cols as _index_cols
-        from .skipping import list_data_files, load_stats_index
-
-        old_index = load_stats_index(data_dir)
-        cluster = [
-            c
-            for c in (_index_cols(old_index) if old_index else [])
-            if c in out.columns
-        ]
+        cluster = [c for c in index_cols(load_stats_index(data_dir)) if c in out.columns]
         if cluster:
             n_out = max(1, len(list_data_files(data_dir)))
             # PARTITION-MAJOR ranges on a Hive table (review r12,
@@ -259,8 +248,6 @@ def merge_into(
         target_path, out, base=data_dir, partition_by=pkeys,
         carry=carried_files,
     )
-    from .skipping import list_data_files
-
     stats["files_rewritten"] = len(list_data_files(staging)) - len(carried_files)
     stats["files_carried"] = len(carried_files)
     return stats
@@ -277,26 +264,15 @@ def _prune_rewrite_set(
     """Split the table's files into (carried, candidates): a file is a
     rewrite candidate iff the persisted index cannot prove its first-key
     interval holds no source key. Returns ``([], [])`` — full rewrite —
-    when there is no usable index, the key is not indexed, or the source
-    introduces columns the target lacks (schema drift would make carried
-    files diverge from rewritten ones). ``all_keys`` carries EVERY key
+    when ``skipping.usable_index`` has no index for the first key, or the
+    source introduces columns the target lacks (schema drift would make
+    carried files diverge from rewritten ones). ``all_keys`` carries EVERY key
     the merge can touch (source plus the op-aware ``deletes`` side) —
     pruning on the insert side alone would carry a file holding only a
     deleted key, silently resurrecting the row."""
-    from .skipping import list_data_files, load_stats_index
-
-    if not set(source.columns) <= target_cols:
-        return [], []
-    index = load_stats_index(data_dir)
     key = on[0]
-    if not index or f"{key}_min" not in index[0]:
-        return [], []
-    # The index must be a COMPLETE file manifest: a data file with no index
-    # entry would be neither carried nor a candidate — its rows silently
-    # vanish from the new version. All in-repo writers keep it complete;
-    # enforce it here, where incompleteness means data loss, by falling
-    # back to a full rewrite.
-    if not set(list_data_files(data_dir)) <= {e["file"] for e in index}:
+    index = usable_index(data_dir, key)
+    if not index or not set(source.columns) <= target_cols:
         return [], []
     bounds = [(e["file"], e.get(f"{key}_min"), e.get(f"{key}_max")) for e in index]
     blind = [f for f, lo, hi in bounds if lo is None or hi is None]

@@ -24,31 +24,11 @@ import threading
 
 import pyarrow.parquet as pq
 
+from ..io import list_data_files
+
 # clustered_scratch_copy's build-once memo: source/layout key -> copy dir
 _SCRATCH_COPIES: dict[tuple, str] = {}
 _SCRATCH_COPIES_LOCK = threading.Lock()
-
-
-def list_data_files(path: str) -> list[str]:
-    """The parquet files Spark's own listing would read under ``path`` —
-    ``_``/``.``-prefixed FILES AND DIRECTORIES are skipped at every level.
-
-    Pruning directories matters for soundness, not just tidiness: a
-    versioned table root (operators/versioned.py) legally contains
-    ``_v*/`` snapshot dirs — including a possibly-orphaned staging dir
-    from a crash before the pointer flip. A recursive glob that only
-    filtered file basenames descended into those and would have indexed
-    UNCOMMITTED rows, so a pruned read could return duplicates a full
-    Spark scan never sees."""
-    out = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        out.extend(
-            os.path.join(root, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    return sorted(out)
 
 
 def stats_for_files(files: list[str], cols: list[str]) -> list[dict]:
@@ -85,7 +65,7 @@ def file_stats_index(path: str, cols: list[str]) -> list[dict]:
     A file missing statistics for a column gets ``None`` bounds (treated
     as always-matching by :func:`prune_files` — skipping must never be
     unsound). Only files Spark's listing would see are indexed
-    (:func:`list_data_files`)."""
+    (``io.data_files``)."""
     return stats_for_files(list_data_files(path), cols)
 
 
@@ -186,6 +166,24 @@ def load_stats_index(data_dir: str) -> list[dict] | None:
     return [
         {**e, "file": os.path.join(data_dir, e["file"])} for e in rows
     ]
+
+
+def usable_index(data_dir: str, col: str) -> list[dict] | None:
+    """The persisted index for ``data_dir`` when it can decide a prune on
+    ``col``, else None (the caller falls back to a live footer scan or a
+    full rewrite). Usable means it carries stats for ``col`` and names
+    exactly the data files on disk. An empty index would prune to zero
+    files; a data file with no entry (appended outside the commit
+    protocol) would be neither pruned nor kept, and its rows would vanish;
+    an entry for a file that is gone would be read or carried and fail."""
+    index = load_stats_index(data_dir)
+    if (
+        index
+        and all(f"{col}_min" in e for e in index)
+        and {e["file"] for e in index} == set(list_data_files(data_dir))
+    ):
+        return index
+    return None
 
 
 def clustered_scratch_copy(

@@ -65,6 +65,8 @@ import shutil
 import time
 from typing import TYPE_CHECKING
 
+from ..io import dir_stats, first_data_file, list_data_files
+
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
 
@@ -82,17 +84,6 @@ class ConcurrentCommitError(RuntimeError):
 
 def _lock_path(path: str, version: int) -> str:
     return os.path.join(path, f".lock_v{version:06d}")
-
-
-def _contains_parquet(d: str) -> bool:
-    # delegates to the ONE definition of "visible data file"
-    # (skipping.list_data_files) — review r12: four copies of the same
-    # walk-and-filter loop had drifted into versioned/compact/skipping,
-    # and any future change to visibility rules would desynchronize the
-    # commit protocol, history, compaction sizing, and index checks
-    from .skipping import list_data_files
-
-    return bool(list_data_files(d))
 
 
 def _pid_is_live(pid: int) -> bool:
@@ -131,10 +122,9 @@ def table_exists(path: str) -> bool:
     ``os.makedirs`` — is NOT a table: writers that treat it as one feed an
     empty dir to ``spark.read.parquet`` and wedge every retry with
     'Unable to infer schema'."""
-    d = resolve(path)
-    if d != path:
+    if resolve(path) != path:
         return True  # pointer present: finish_commit published this dir
-    return os.path.isdir(path) and _contains_parquet(path)
+    return first_data_file(path) is not None
 
 
 def _verify_read_base(path: str, data_dir: str) -> None:
@@ -193,19 +183,12 @@ def table_history(path: str) -> list[dict]:
     """Retained snapshots with their physical footprint, ascending — the
     ``DESCRIBE HISTORY`` analog for versioned tables. Each entry:
     ``{"version", "n_files", "bytes", "is_current"}``."""
-    from .skipping import list_data_files
-
     current = current_version(path)
     out = []
     for v in list_versions(path):
-        files = list_data_files(os.path.join(path, f"_v{v:06d}"))
+        n_files, nbytes = dir_stats(os.path.join(path, f"_v{v:06d}"))
         out.append(
-            {
-                "version": v,
-                "n_files": len(files),
-                "bytes": sum(os.path.getsize(f) for f in files),
-                "is_current": v == current,
-            }
+            {"version": v, "n_files": n_files, "bytes": nbytes, "is_current": v == current}
         )
     return out
 
@@ -401,15 +384,7 @@ def carry_missing_partitions(src_dir: str, dst_dir: str) -> list[str]:
             if os.path.isdir(d):
                 walk(s, d)  # partially rewritten level: descend
             else:
-                for root, dirs, files in os.walk(s):
-                    dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-                    for fn in files:
-                        if fn.startswith(("_", ".")):
-                            continue
-                        sf = os.path.join(root, fn)
-                        df_ = os.path.join(d, os.path.relpath(sf, s))
-                        _link_or_copy(sf, df_)
-                        carried.append(df_)
+                carried.extend(carry_files(list_data_files(s), s, d))
 
     walk(src_dir, dst_dir)
     return carried
@@ -468,7 +443,7 @@ def finish_commit(path: str, version: int) -> None:
             # directory co-located at the root (a backup, an export) is
             # NOT ours to delete.
             if os.path.isdir(full):
-                if "=" in entry or _contains_parquet(full):
+                if "=" in entry or first_data_file(full) is not None:
                     shutil.rmtree(full, ignore_errors=True)
             elif entry.endswith(".parquet"):
                 try:

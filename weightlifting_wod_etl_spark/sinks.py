@@ -18,8 +18,11 @@ already equals ``partition_by`` it lists, reads and rewrites only the
 partition directories the increment names and carries the rest by hard
 link — listing is O(increment), and at 100 TB you never rewrite the whole
 table for a daily increment; any other layout is a full rewrite into the
-requested one. The table is read with a declared schema whose partition
-column types come from the increment, never from directory names.
+requested one. The table is read by ``io.read_declared``, the read rule
+every rewriting writer shares (``merge_into`` and ``compact_parquet``
+too): a declared schema, data columns from one footer, partition column
+types from the increment (string where it lacks one), never from
+directory names, and no schema-inference job.
 """
 
 from __future__ import annotations
@@ -31,8 +34,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from .io import footer_schema, write_jsonl
-from .operators.compact import _partition_keys, first_data_file
+from .io import first_data_file, footer_schema, partition_columns, read_declared, write_jsonl
 from .operators.dedup import anti_join_ledger, exact_dedup, orderable_order_cols
 
 
@@ -45,7 +47,7 @@ def _ledger_keys(spark: SparkSession, ledger_path: str) -> DataFrame | None:
     read. The key type comes from one file's footer, and the scan is
     declared ``idem_key string``, so reading the ledger starts no
     schema-inference job."""
-    first = first_data_file(ledger_path) if os.path.isdir(ledger_path) else None
+    first = first_data_file(ledger_path)
     if first is None:
         return None
     try:
@@ -163,7 +165,7 @@ def kv_upsert_parquet(
     cols ⊆ key semantics), the same contract a Delta/Iceberg MERGE keyed
     on ``key_cols`` would carry.
 
-    The table is read with a declared schema: data columns from one
+    The table is read by ``io.read_declared``: data columns from one
     file's footer, partition columns typed as in the increment (string
     for one the increment lacks). Nothing is inferred from directory
     names, so a string partition value like ``"007"`` stays ``"007"``
@@ -193,11 +195,7 @@ def kv_upsert_parquet(
     # table_exists, not bare path existence: a failed first write leaves an
     # empty makedirs'd dir whose "read" would wedge every retry
     if table_exists(path):
-        table_parts = _partition_keys(data_dir)
-        in_place = table_parts == part_cols
-        schema = footer_schema(first_data_file(data_dir))
-        for c in table_parts:
-            schema.add(c, df.schema[c].dataType if c in df.columns else StringType())
+        in_place = partition_columns(data_dir) == part_cols
         dirs = [data_dir]
         if in_place:
             catalog_utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -209,10 +207,9 @@ def kv_upsert_parquet(
             ]
         dirs = [d for d in dirs if os.path.isdir(d)]
         if dirs:
-            existing = (
-                spark.read.schema(schema).option("basePath", data_dir).parquet(*dirs)
+            merged = read_declared(spark, data_dir, dirs, like=df).unionByName(
+                df, allowMissingColumns=True
             )
-            merged = existing.unionByName(df, allowMissingColumns=True)
     order = [F.col(c).desc() for c in order_cols] + orderable_order_cols(
         merged, set(key_cols) | set(order_cols), ascending=False
     )
