@@ -5,7 +5,9 @@ Two invariants that have bitten before:
 1. The driver's session is not ours and may carry a hostile timezone;
    the registry wrapper must re-pin UTC on every invocation or every
    date/timestamp query silently shifts (the round-3 driver failure).
-2. bench.py's one-line stdout contract: the external driver parses only the
+2. ``tune_for_session`` gives a session the engine did not build the same
+   runtime conf ``get_spark`` builds in (one table, ``RUNTIME_CONF``).
+3. bench.py's one-line stdout contract: the external driver parses only the
    last 2000 chars of its output, so the summary line must fit and must
    survive a failing query.
 """
@@ -33,6 +35,19 @@ def test_hostile_session_timezone_is_repinned(spark, sf_dir):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     for n in names:
         assert hostile[n] == baseline[n], f"{n} shifted under hostile TZ"
+
+
+def test_tune_for_session_sets_what_get_spark_sets(spark):
+    from weightlifting_wod_etl_spark.session import RUNTIME_CONF, tune_for_session
+
+    vanilla = spark.newSession()
+    for k in RUNTIME_CONF:
+        vanilla.conf.unset(k)
+    assert {k: vanilla.conf.get(k) for k in RUNTIME_CONF} != RUNTIME_CONF
+    tune_for_session(vanilla)
+    assert {k: vanilla.conf.get(k) for k in RUNTIME_CONF} == {
+        k: spark.conf.get(k) for k in RUNTIME_CONF
+    } == RUNTIME_CONF
 
 
 def test_bench_main_prints_contract_line_and_writes_detail(

@@ -138,65 +138,6 @@ def test_merge_file_targeted_rewrites_only_intersecting_files(spark, tmp_path):
     assert got[250] == (500, "old")
 
 
-@pytest.mark.parametrize(
-    "module, name",
-    [
-        ("versioned", "carry_files"),
-        ("skipping", "refresh_stats_index"),
-        ("versioned", "finish_commit"),
-    ],
-    ids=["carry", "index_refresh", "flip"],
-)
-def test_file_targeted_merge_crash_at_each_commit_step(
-    spark, tmp_path, monkeypatch, module, name
-):
-    """A file-targeted merge that dies at its carry, index-refresh or
-    pointer-flip step leaves readers on exactly the previous snapshot, no
-    lock or staging dir behind, and a retry commits the same rows and
-    stats as a clean run."""
-    import importlib
-    import os
-
-    from weightlifting_wod_etl_spark.operators.versioned import current_version
-
-    def snapshot(path):
-        return sorted(map(tuple, read_table(spark, path).collect()))
-
-    def merge(path, rows):
-        src = spark.createDataFrame(rows, "k long, v long, tag string")
-        return merge_into(spark, path, src, on=["k"])
-
-    rows = [(k, 9999, "new") for k in range(10, 20)] + [(5000, 1, "ins")]
-    clean, path = str(tmp_path / "clean"), str(tmp_path / "crash")
-    for p in (clean, path):
-        _clustered_table(spark, p)
-        merge(p, [(250, -1, "warm")])  # live version is now _v000001
-    expected = merge(clean, rows)
-    assert expected["files_carried"] == 3  # the carry step really runs
-
-    before, v = snapshot(path), current_version(path)
-    assert v == 1
-
-    def crash(*a, **k):
-        raise RuntimeError(f"crash at {name}")
-
-    mod = importlib.import_module(f"weightlifting_wod_etl_spark.operators.{module}")
-    monkeypatch.setattr(mod, name, crash)
-    with pytest.raises(RuntimeError, match=f"crash at {name}"):
-        merge(path, rows)
-    monkeypatch.undo()
-
-    assert snapshot(path) == before
-    assert current_version(path) == v
-    assert not [
-        e for e in os.listdir(path)
-        if e.startswith(".lock_v") or e == f"_v{v + 1:06d}"
-    ]
-
-    assert merge(path, rows) == expected
-    assert snapshot(path) == snapshot(clean)
-
-
 def test_merge_file_targeted_matches_full_rewrite(spark, tmp_path):
     """Same merge with and without the index must produce identical rows
     — pruning is an optimization, never a semantics change."""
@@ -378,23 +319,6 @@ def test_merge_prune_sees_same_snapshot_as_write(spark, tmp_path):
     assert len(got) == 200  # one snapshot: no duplicate, no lost update
     assert got[5] == (9999, "new")
     assert got[190] == (380, "old")
-
-
-def test_merge_retry_after_failed_first_commit_not_wedged(spark, tmp_path):
-    """Review r10: a failed FIRST commit leaves a bare makedirs'd dir (and
-    possibly an orphan staging dir). Retrying used to treat the empty dir
-    as an existing table and wedge forever on 'Unable to infer schema';
-    it must instead be treated as a fresh table."""
-    import os
-
-    path = str(tmp_path / "wedge")
-    os.makedirs(path)  # what begin_commit's makedirs left behind
-    os.makedirs(os.path.join(path, "_v000001"))  # orphan staging, no flip
-
-    src = spark.createDataFrame([(1, 10, "a")], "k long, v long, tag string")
-    stats = merge_into(spark, path, src, on=["k"])
-    assert stats["inserted"] == 1
-    assert _rows(spark, path) == {1: (10, "a")}
 
 
 def test_merge_refuses_commit_when_base_moved_before_lock(spark, tmp_path):

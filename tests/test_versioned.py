@@ -1,14 +1,14 @@
 """Manifest-pointer commit protocol (operators/versioned.py): a crash at
 ANY point of a rewrite must leave the table readable as exactly the old or
 exactly the new version — never a partial — and a crashed attempt must not
-wedge the next run."""
+wedge the next run. These tests pin the protocol's own functions; the
+crash of each committer at each step is tests/test_commit_faults.py."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from weightlifting_wod_etl_spark.io import read_table
 from weightlifting_wod_etl_spark.operators.compact import compact_parquet
@@ -31,36 +31,6 @@ def test_plain_dir_resolves_to_itself(spark, tmp_path):
     assert resolve(path) == path
     assert current_version(path) == 0
     assert read_table(spark, path).count() == 5
-
-
-def test_crash_before_flip_reads_old_version_and_next_run_recovers(
-    spark, tmp_path
-):
-    path = str(tmp_path / "t")
-    old = spark.range(10).selectExpr("id", "id * 2 AS x")
-    old.write.parquet(path)
-    before = _snapshot(spark, path)
-
-    # simulated crash: the new version is fully written but the process
-    # dies before the pointer flip (finish_commit never runs)
-    staging, v = begin_commit(path)
-    spark.range(3).selectExpr("id", "id * 99 AS x").write.parquet(staging)
-    assert _snapshot(spark, path) == before  # readers still see the old table
-    assert current_version(path) == 0
-
-    # ... and a half-written staging dir (crash mid-write) likewise
-    with open(os.path.join(staging, "part-junk.parquet"), "wb") as f:
-        f.write(b"\x00not a footer")
-    assert _snapshot(spark, path) == before
-
-    # the next rewrite reclaims the orphan and commits normally
-    staging2, v2 = begin_commit(path)
-    assert (staging2, v2) == (staging, v)  # same slot, reclaimed
-    new = spark.range(4).selectExpr("id", "id * 7 AS x")
-    new.write.mode("overwrite").parquet(staging2)
-    finish_commit(path, v2)
-    assert current_version(path) == 1
-    assert _snapshot(spark, path) == sorted(map(tuple, new.collect()))
 
 
 def test_flip_is_atomic_boundary(spark, tmp_path):
@@ -86,59 +56,6 @@ def test_repeated_commits_gc_old_versions_but_keep_previous(spark, tmp_path):
     # current + one prior (an in-flight reader that resolved pre-flip can
     # still finish); everything older is gone
     assert vdirs == ["_v000003", "_v000004"]
-
-
-def test_compact_crash_midway_preserves_table_then_recovers(
-    spark, tmp_path, monkeypatch
-):
-    path = str(tmp_path / "c")
-    src = spark.range(2000).withColumn("x", F.col("id") % 7)
-    src.repartition(16).write.parquet(path)
-    before = _snapshot(spark, path)
-
-    boom = RuntimeError("kill -9 mid-rewrite")
-
-    def dying_finish(*a, **k):
-        raise boom
-
-    import weightlifting_wod_etl_spark.operators.versioned as versioned_mod
-
-    monkeypatch.setattr(versioned_mod, "finish_commit", dying_finish)
-    with pytest.raises(RuntimeError):
-        compact_parquet(spark, path, target_file_bytes=10**12)
-    assert _snapshot(spark, path) == before  # crash lost nothing
-    monkeypatch.undo()
-
-    b, a = compact_parquet(spark, path, target_file_bytes=10**12)
-    assert b == 16 and a == 1
-    assert _snapshot(spark, path) == before
-
-
-def test_kv_upsert_crash_midway_preserves_table_then_recovers(
-    spark, tmp_path, monkeypatch
-):
-    import weightlifting_wod_etl_spark.operators.versioned as versioned_mod
-
-    path = str(tmp_path / "kv")
-    v1 = spark.createDataFrame(
-        [("a", 1, "old"), ("b", 1, "keep")], ["k", "version", "payload"]
-    )
-    kv_upsert_parquet(v1, path, key_cols=["k"], order_cols=["version"])
-    before = _snapshot(spark, path)
-
-    def dying_finish(*a, **k):
-        raise RuntimeError("kill -9 mid-upsert")
-
-    monkeypatch.setattr(versioned_mod, "finish_commit", dying_finish)
-    v2 = spark.createDataFrame([("a", 2, "new")], ["k", "version", "payload"])
-    with pytest.raises(RuntimeError):
-        kv_upsert_parquet(v2, path, key_cols=["k"], order_cols=["version"])
-    assert _snapshot(spark, path) == before
-    monkeypatch.undo()
-
-    kv_upsert_parquet(v2, path, key_cols=["k"], order_cols=["version"])
-    rows = {r.k: r.payload for r in read_table(spark, path).collect()}
-    assert rows == {"a": "new", "b": "keep"}
 
 
 def test_kv_upsert_empty_increment_is_noop(spark, tmp_path):
@@ -319,46 +236,6 @@ def test_table_history_lists_retained_snapshots(spark, tmp_path):
     assert [e["version"] for e in h] == [2, 3]  # v1 GC'd
     assert [e["is_current"] for e in h] == [False, True]
     assert h[1]["n_files"] == 3 and h[1]["bytes"] > 0
-
-
-def test_partitioned_upsert_crash_midway_is_atomic(spark, tmp_path, monkeypatch):
-    """VERDICT r8 #2: the partitioned kv_upsert branch used in-place
-    dynamic partition overwrite — a crash mid-write left a half-replaced
-    partition. Routed through the commit protocol, a crash leaves exactly
-    the old table, and the lock is released so the retry succeeds."""
-    schema = "date string, session string, version int, payload string"
-    path = str(tmp_path / "kvp")
-    v1 = spark.createDataFrame(
-        [("2021-01-03", "am", 1, "a"), ("2021-01-04", "am", 1, "b")], schema
-    )
-    kv_upsert_parquet(
-        v1, path, key_cols=["date", "session"], order_cols=["version"],
-        partition_by=["date"],
-    )
-    before = _snapshot(spark, path)
-
-    def dying_carry(*a, **k):
-        raise RuntimeError("kill -9 mid-partitioned-upsert")
-
-    import weightlifting_wod_etl_spark.operators.versioned as versioned_mod
-
-    monkeypatch.setattr(versioned_mod, "carry_missing_partitions", dying_carry)
-    v2 = spark.createDataFrame([("2021-01-04", "am", 2, "NEW")], schema)
-    with pytest.raises(RuntimeError):
-        kv_upsert_parquet(
-            v2, path, key_cols=["date", "session"], order_cols=["version"],
-            partition_by=["date"],
-        )
-    assert _snapshot(spark, path) == before  # old version fully live
-    monkeypatch.undo()
-
-    # lock was released by abort_commit → retry commits, both partitions ok
-    kv_upsert_parquet(
-        v2, path, key_cols=["date", "session"], order_cols=["version"],
-        partition_by=["date"],
-    )
-    got = {str(r.date): r.payload for r in read_table(spark, path).collect()}
-    assert got == {"2021-01-03": "a", "2021-01-04": "NEW"}
 
 
 def test_partitioned_upsert_carries_untouched_partitions_by_link(spark, tmp_path):
@@ -745,23 +622,6 @@ def test_begin_commit_base_moved_during_acquire_never_deletes_live_version(
     assert v == 2
 
 
-def test_kv_upsert_retry_after_failed_first_write_not_wedged(spark, tmp_path):
-    """Review r10: a failed first write leaves a bare makedirs'd dir; the
-    retry used to read it as an existing table and wedge on 'Unable to
-    infer schema' — in both the partitioned and plain branches."""
-    for part in (["p"], None):
-        path = str(tmp_path / f"wedge_{bool(part)}")
-        os.makedirs(path)
-        os.makedirs(os.path.join(path, "_v000001"))  # orphan staging
-        df = spark.createDataFrame(
-            [(1, 0, 1, 10)], "k long, p long, ver long, v long"
-        )
-        kv_upsert_parquet(
-            df, path, key_cols=["k", "p"], order_cols=["ver"], partition_by=part
-        )
-        assert read_table(spark, path).count() == 1
-
-
 def test_migration_commit_gcs_root_success_marker_and_stale_index(
     spark, tmp_path
 ):
@@ -769,9 +629,6 @@ def test_migration_commit_gcs_root_success_marker_and_stale_index(
     (underscore entries were filtered one condition earlier), so a
     migrated plain table leaked its pre-versioning _SUCCESS marker and
     root _stats_index.parquet forever."""
-    import os
-
-    from weightlifting_wod_etl_spark.operators.compact import compact_parquet
     from weightlifting_wod_etl_spark.operators.skipping import save_stats_index
 
     path = str(tmp_path / "mig")

@@ -119,58 +119,6 @@ def test_zorder_layout_is_deterministic(spark, tmp_path):
     assert len(s1) == 16 and s1 == s2
 
 
-def test_zorder_recluster_crash_leaves_old_or_new(spark, tmp_path, monkeypatch):
-    """VERDICT r9 #3: zorder_write used to overwrite its target in place —
-    a crash mid-clustering of a LIVE table left a partial layout. Through
-    the versioned protocol a crash before the flip must leave the OLD
-    layout fully readable, and the retry must commit the new one."""
-    import pytest
-
-    from weightlifting_wod_etl_spark.io import read_pruned
-
-    path = str(tmp_path / "live")
-    src = load_table(spark, SF_SMOKE, "lineitem").select(
-        (F.col("l_orderkey") % 256).cast("long").alias("a"),
-        (F.col("l_partkey") % 256).cast("long").alias("b"),
-    )
-    zorder_write(src, path, ["a", "b"], bits=8, num_files=4)
-    before = sorted(map(tuple, read_table(spark, path).collect()))
-
-    # re-cluster the live table, crashing inside the staging write
-    relayout = read_table(spark, path)
-    boom = RuntimeError("simulated mid-cluster crash")
-
-    def exploding_save(*a, **k):
-        raise boom
-
-    from weightlifting_wod_etl_spark.operators import skipping as skipping_mod
-
-    monkeypatch.setattr(skipping_mod, "refresh_stats_index", exploding_save)
-    with pytest.raises(RuntimeError, match="mid-cluster"):
-        zorder_write(relayout, path, ["a", "b"], bits=8, num_files=8)
-    monkeypatch.undo()
-
-    # old layout intact — and its index still matches (read_pruned sound)
-    assert sorted(map(tuple, read_table(spark, path).collect())) == before
-    assert read_pruned(spark, path, "a", 0, 63).filter(
-        (F.col("a") >= 0) & (F.col("a") <= 63)
-    ).count() == read_table(spark, path).filter(
-        (F.col("a") >= 0) & (F.col("a") <= 63)
-    ).count()
-
-    # retry succeeds: new 8-file layout, fresh index visible to read_pruned
-    relayout = read_table(spark, path)
-    zorder_write(relayout, path, ["a", "b"], bits=8, num_files=8)
-    assert sorted(map(tuple, read_table(spark, path).collect())) == before
-    files = glob.glob(os.path.join(resolve(path), "part-*.parquet"))
-    assert len(files) == 8
-
-    from weightlifting_wod_etl_spark.operators.skipping import load_stats_index
-
-    idx = load_stats_index(resolve(path))
-    assert idx is not None and {e["file"] for e in idx} == set(files)
-
-
 def test_zorder_recluster_detects_concurrent_commit(spark, tmp_path):
     """Review r11: zorder_write was the only versioned committer without
     the resolve->begin_commit staleness guard — re-clustering a live

@@ -26,19 +26,22 @@ DEFAULT_RENAME = {
     "E.": "segment_e",
 }
 EXPECTED_FIELDS = ["warm_up", "segment_a", "segment_b", "segment_c", "segment_d", "segment_e"]
+DROP_COLS = ("s", "r")  # raw single-letter keys, dropped after the rename (§2.3-5)
+DATE_COL = "date"
+SESSION_COL = "session"
 REST_DAY = "Rest Day"
 
 
 @functools.cache
-def _canonical_date(date_col: str) -> Column:
-    """``yyyy-MM-dd`` string of the named date column; built once per
-    process per column name (the expression does not depend on the data)."""
+def _canonical_date() -> Column:
+    """``yyyy-MM-dd`` string of the date column; built once per process
+    (the expression does not depend on the data)."""
     # the reference parses with dateutil (transforms.py:323) — accept
     # the common non-ISO shapes it handles, not just ISO. try_to_*
     # never throws (ANSI-safe); a shape outside the list degrades to
     # NULL -> '' (the reference would instead raise per-record, which
     # a distributed job can't do row-by-row)
-    c = F.col(date_col).cast("string")
+    c = F.col(DATE_COL).cast("string")
     parsed = F.coalesce(
         *[
             F.try_to_timestamp(c, F.lit(fmt))
@@ -59,16 +62,8 @@ def _canonical_date(date_col: str) -> Column:
     return F.date_format(parsed, "yyyy-MM-dd")
 
 
-def clean_records(
-    df: DataFrame,
-    rename_map: dict[str, str] | None = None,
-    drop_cols: tuple[str, ...] = ("s", "r"),
-    expected_fields: list[str] | None = None,
-    date_col: str = "date",
-    session_col: str = "session",
-) -> DataFrame:
+def clean_records(df: DataFrame, rename_map: dict[str, str] | None = None) -> DataFrame:
     rename_map = DEFAULT_RENAME if rename_map is None else rename_map
-    expected_fields = EXPECTED_FIELDS if expected_fields is None else expected_fields
 
     applicable = {k: v for k, v in rename_map.items() if k in df.columns}
     clash = [v for k, v in applicable.items() if v in df.columns and v != k]
@@ -81,13 +76,12 @@ def clean_records(
             "input alongside their raw keys — drop or rename one first"
         )
     out = df.withColumnsRenamed(applicable)
-    # drop AFTER rename — only raw single-letter keys are dropped (§2.3-5)
-    out = out.drop(*[c for c in drop_cols if c in out.columns])
-    if date_col in out.columns:
-        out = out.withColumn(date_col, _canonical_date(date_col))
-    if session_col in out.columns:
-        out = out.withColumn(session_col, F.coalesce(F.col(session_col), F.lit(REST_DAY)))
-    for field in expected_fields:
+    out = out.drop(*[c for c in DROP_COLS if c in out.columns])
+    if DATE_COL in out.columns:
+        out = out.withColumn(DATE_COL, _canonical_date())
+    if SESSION_COL in out.columns:
+        out = out.withColumn(SESSION_COL, F.coalesce(F.col(SESSION_COL), F.lit(REST_DAY)))
+    for field in EXPECTED_FIELDS:
         if field not in out.columns:
             out = out.withColumn(field, F.lit(""))
     str_cols = [c for c, t in out.dtypes if t == "string"]

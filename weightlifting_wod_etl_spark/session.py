@@ -18,6 +18,25 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# Runtime-settable confs that fix query semantics: get_spark builds them
+# in, tune_for_session applies them to a session it did not build.
+RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # reference semantics are lenient: no-match regex extract casts to
+    # NULL, invalid make_date → NULL (transforms.py:104-110 try/except)
+    "spark.sql.ansi.enabled": "false",
+    # duplicate map keys keep the LAST value instead of killing the job
+    # (r17, probed): the default EXCEPTION policy makes ONE colliding key
+    # in 100 TB abort the pipeline, and last-wins is what the reference's
+    # dict-literal merge does (transforms.py:258 {"date": ..., **session})
+    # AND what DuckDB's map_concat does — three semantics aligned
+    "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+    # let Python DataSources (wod_posts) receive pushFilters calls
+    "spark.sql.python.filterPushdown.enabled": "true",
+}
+
 
 def get_spark(
     app_name: str = "weightlifting-wod-etl-spark",
@@ -27,43 +46,28 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession configured for this engine."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        # reference semantics are lenient: no-match regex extract casts to
-        # NULL, invalid make_date → NULL (transforms.py:104-110 try/except)
-        .config("spark.sql.ansi.enabled", "false")
-        # duplicate map keys keep the LAST value instead of killing the
-        # job (r17, probed): the default EXCEPTION policy makes ONE
-        # colliding key in 100 TB abort the pipeline, and last-wins is
-        # what the reference's dict-literal merge does
-        # (transforms.py:258 {"date": ..., **session}) AND what
-        # DuckDB's map_concat does — three semantics aligned
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        .config("spark.sql.adaptive.enabled", "true")
+        .config(
+            "spark.sql.shuffle.partitions",
+            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+        )
+        .config(map=RUNTIME_CONF)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # let Python DataSources (wod_posts) receive pushFilters calls
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Static conf, must be set before the first SQL context: the
         # whole-stage-codegen class cache defaults to 100 entries. A session
         # running many distinct queries (the 70-query bench) evicts and
         # recompiles hot stages on every re-run — measured 3-6× inflation on
         # queries benched late in the session, vanishing in a fresh process.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config(map=extra_conf or {})
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
 
 
 def tune_for_session(spark: SparkSession) -> SparkSession:
@@ -72,17 +76,7 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     The verification driver hands us its own SparkSession; runtime-settable
     confs are applied here so query semantics (timezone!) stay deterministic.
     """
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.ansi.enabled", "false"),
-        # last-wins duplicate map keys (reference {**a, **b} semantics;
-        # EXCEPTION would kill the job on one colliding key at scale)
-        ("spark.sql.mapKeyDedupPolicy", "LAST_WIN"),
-        # runtime-settable: external sessions get source pushdown too
-        ("spark.sql.python.filterPushdown.enabled", "true"),
-    ):
+    for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
