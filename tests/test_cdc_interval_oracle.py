@@ -1,10 +1,22 @@
-"""Rerun and plan pins for the CDC-apply and interval-join queries
-(queries/cdc_interval.py). Their oracle parity is checked with every
-other query in test_oracle_parity."""
+"""Parity, rerun and plan pins for the CDC-apply and interval-join
+queries (queries/cdc_interval.py)."""
 
 from __future__ import annotations
 
-from weightlifting_wod_etl_spark.queries.cdc_interval import q_cdc_apply, q_interval_join
+from tests.parity import assert_frames_match
+from weightlifting_wod_etl_spark.queries.cdc_interval import (
+    ORACLE_CDC_APPLY,
+    ORACLE_INTERVAL_JOIN,
+    q_cdc_apply,
+    q_interval_join,
+)
+
+
+def test_cdc_apply_matches_oracle(spark, duck, sf_dir):
+    got = q_cdc_apply(spark, sf_dir).toPandas()
+    want = duck.execute(ORACLE_CDC_APPLY).df()
+    assert len(got) > 0
+    assert_frames_match(got, want, "q_cdc_apply")
 
 
 def test_cdc_apply_is_rerun_deterministic(spark, sf_dir):
@@ -16,6 +28,13 @@ def test_cdc_apply_is_rerun_deterministic(spark, sf_dir):
     a = canonicalize(q_cdc_apply(spark, sf_dir).toPandas())
     b = canonicalize(q_cdc_apply(spark, sf_dir).toPandas())
     assert a and a == b
+
+
+def test_interval_join_matches_oracle(spark, duck, sf_dir):
+    got = q_interval_join(spark, sf_dir).toPandas()
+    want = duck.execute(ORACLE_INTERVAL_JOIN).df()
+    assert len(got) > 0
+    assert_frames_match(got, want, "q_interval_join")
 
 
 def test_interval_join_plan_has_no_cartesian(spark, sf_dir):
